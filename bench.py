@@ -199,14 +199,14 @@ def _knn_ivf_pq_production(spark, sf_dir):
 
 def _knn_ivf_pq_indexed_production(spark, sf_dir):
     """The persisted COMPRESSED-index chain at production depth: the
-    SAME build_and_probe_ivf_pq chain as the registered query (shared
-    helper, no drift), probed at nprobe=4/16 + shortlist=32 — the
-    partition-pruned byte-sized serving read."""
-    from osarchiver_spark.queries.similarity import build_and_probe_ivf_pq
+    SAME ann_chain as the registered query (no drift), probed at
+    nprobe=4/16 + shortlist=32 — the partition-pruned byte-sized
+    serving read."""
+    from osarchiver_spark.queries.similarity import ann_chain, pq_codec
 
     _, queries = _ann_queries(spark, sf_dir)
-    return build_and_probe_ivf_pq(
-        spark, sf_dir, queries, nprobe=4, shortlist=32, dir_prefix="ivfpq_bench_"
+    return ann_chain(
+        spark, sf_dir, queries, pq_codec(32), nprobe=4, dir_prefix="ivfpq_bench_"
     )
 
 
@@ -240,39 +240,38 @@ def _dedup_embedding_incremental_production(spark, sf_dir):
 
 def _knn_ivf_indexed_production(spark, sf_dir):
     """The persisted-index chain at production probe depth: the SAME
-    build_and_probe_ivf chain as the registered query (shared helper,
-    so the benched path cannot drift), probed at nprobe=4/16
-    (partition-pruned read) instead of full-recall oracle depth."""
-    from osarchiver_spark.queries.similarity import build_and_probe_ivf
+    ann_chain as the registered query (so the benched path cannot
+    drift), probed at nprobe=4/16 (partition-pruned read) instead of
+    full-recall oracle depth."""
+    from osarchiver_spark.queries.similarity import IVF_CODEC, ann_chain
 
     _, queries = _ann_queries(spark, sf_dir)
-    return build_and_probe_ivf(
-        spark, sf_dir, queries, nprobe=4, dir_prefix="ivf_bench_"
-    )
+    return ann_chain(spark, sf_dir, queries, IVF_CODEC, nprobe=4, dir_prefix="ivf_bench_")
 
 
 def _knn_ivf_pq_reindexed_production(spark, sf_dir):
     """The PQ retrain/migration chain at production depth: the SAME
-    build_and_migrate_ivf_pq chain as the registered query, probing
-    the migrated code store at nprobe=4/16 + shortlist=32."""
-    from osarchiver_spark.queries.similarity import build_and_migrate_ivf_pq
+    ann_chain migrate shape as the registered query, probing the
+    migrated code store at nprobe=4/16 + shortlist=32."""
+    from osarchiver_spark.queries.similarity import ann_chain, pq_codec
 
     _, queries = _ann_queries(spark, sf_dir)
-    return build_and_migrate_ivf_pq(
-        spark, sf_dir, queries, nprobe=4, shortlist=32,
-        dir_prefix="ivfpq_reidx_bench_",
+    return ann_chain(
+        spark, sf_dir, queries, pq_codec(32), nprobe=4,
+        dir_prefix="ivfpq_reidx_bench_", migrate=True,
     )
 
 
 def _knn_ivf_reindexed_production(spark, sf_dir):
     """The retrain/migration chain at production probe depth: the SAME
-    build_and_migrate_ivf chain as the registered query (shared
-    helper, no drift), probing the MIGRATED store at nprobe=4/16."""
-    from osarchiver_spark.queries.similarity import build_and_migrate_ivf
+    ann_chain migrate shape as the registered query, probing the
+    MIGRATED store at nprobe=4/16."""
+    from osarchiver_spark.queries.similarity import IVF_CODEC, ann_chain
 
     _, queries = _ann_queries(spark, sf_dir)
-    return build_and_migrate_ivf(
-        spark, sf_dir, queries, nprobe=4, dir_prefix="ivf_reidx_bench_"
+    return ann_chain(
+        spark, sf_dir, queries, IVF_CODEC, nprobe=4,
+        dir_prefix="ivf_reidx_bench_", migrate=True,
     )
 
 

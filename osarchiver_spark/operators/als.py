@@ -156,6 +156,8 @@ def _solve_rank(ratings, factors, solve_key, join_key, rank, lam, quant, key_typ
     import pandas as pd
     from pyspark.sql import types as T
 
+    from osarchiver_spark.operators.blas import vec_matrix
+
     j = ratings.join(factors, join_key).select(solve_key, "f", "r")
     schema = T.StructType(
         [
@@ -165,7 +167,7 @@ def _solve_rank(ratings, factors, solve_key, join_key, rank, lam, quant, key_typ
     )
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        Fm = np.stack([np.asarray(x, dtype="float64") for x in pdf["f"].to_numpy()])
+        Fm = vec_matrix(pdf["f"])
         r = pdf["r"].to_numpy(dtype="float64")
         A = Fm.T @ Fm + lam * np.eye(rank)
         w = np.round(np.linalg.solve(A, Fm.T @ r), quant)

@@ -89,12 +89,21 @@ class Archiver:
             if self.max_parallel_tables > 1 and len(gen) > 1:
                 from concurrent.futures import ThreadPoolExecutor
 
+                from pyspark import inheritable_thread_target
+
+                # one wrap per table: each thread gets its own copy of
+                # the caller's local properties (job group included)
                 with ThreadPoolExecutor(max_workers=self.max_parallel_tables) as ex:
-                    results.extend(
-                        ex.map(
-                            lambda t: self._run_table(t, dataframes[t.name], cutoff), gen
+                    futures = [
+                        ex.submit(
+                            inheritable_thread_target(dataframes[t.name].sparkSession)(
+                                self._run_table
+                            ),
+                            t, dataframes[t.name], cutoff,
                         )
-                    )
+                        for t in gen
+                    ]
+                    results.extend(f.result() for f in futures)
             else:
                 for tspec in gen:
                     results.append(self._run_table(tspec, dataframes[tspec.name], cutoff))

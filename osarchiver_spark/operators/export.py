@@ -563,11 +563,15 @@ def export_vector_store_indexed(
         # BEGIN/DONE brackets both, repair semantics unchanged)
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
         with ThreadPoolExecutor(max_workers=1) as pool:
             f_idx = pool.submit(
-                lambda i=i: batch_index.write.mode(
-                    "overwrite" if i == 0 else "append"
-                ).partitionBy("cid").parquet(index_dir)
+                inheritable_thread_target(spark)(
+                    lambda i=i: batch_index.write.mode(
+                        "overwrite" if i == 0 else "append"
+                    ).partitionBy("cid").parquet(index_dir)
+                )
             )
             survivors = batch.join(losers, "vec_id", "left_anti")
             # the DEDUP index always stores full vectors (the probe

@@ -2,8 +2,9 @@
 
 The IVF family keeps its model FROZEN between retrains
 (operators/ivf.py), so an operator needs a cheap, measurable answer
-to "when do I retrain?". The sf10 drift rehearsal
-(tools/rehearse_sf10_reindex.py, BENCH_SF10_REINDEX.json) measured
+to "when do I retrain?". The sf10 drift rehearsal (record in
+BENCH_SF10_REINDEX.json, SCALE.md round 10; the retrain path is
+queries/similarity.py::ann_chain's migrate shape) measured
 the two signals that actually move under distribution drift — cell
 occupancy skew (1.57 → 3.75 under a frozen model at 3 drifted
 drops) and probe read amplification (per-query read fraction

@@ -35,10 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osarchiver_spark.functions.vectors import as_double
-
-
-def _vec_matrix(series: pd.Series) -> np.ndarray:
-    return np.stack([np.asarray(v, dtype="float64") for v in series.to_numpy()])
+from osarchiver_spark.operators.blas import vec_matrix
 
 
 def _assign_pandas(base: DataFrame, centroids: list[list[float]]) -> DataFrame:
@@ -52,7 +49,7 @@ def _assign_pandas(base: DataFrame, centroids: list[list[float]]) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = _vec_matrix(pdf["v"])
+            V = vec_matrix(pdf["v"])
             # argmin of |v-c|^2 == argmin of -2 v.C^T + |c|^2
             d = -2.0 * (V @ C.T) + c_sq
             pdf = pdf.copy()
@@ -104,7 +101,7 @@ def kmeans_fit(
                 for pdf in batches:
                     if len(pdf) == 0:
                         continue
-                    V = _vec_matrix(pdf["v"])
+                    V = vec_matrix(pdf["v"])
                     cid = (-2.0 * (V @ C.T) + c_sq).argmin(axis=1)
                     np.add.at(sums, cid, V)
                     counts += np.bincount(cid, minlength=k)
@@ -158,7 +155,7 @@ def _probe_pandas(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            Q = _vec_matrix(pdf["qv"])
+            Q = vec_matrix(pdf["qv"])
             d = -2.0 * (Q @ C.T) + c_sq
             near = np.argsort(d, axis=1, kind="stable")[:, :n_take]  # ties to lowest cid
             yield pd.DataFrame(

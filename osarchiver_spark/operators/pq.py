@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osarchiver_spark.functions.vectors import as_double
+from osarchiver_spark.operators.blas import vec_matrix
 from osarchiver_spark.operators.ivf import (
     INDEXED_PROBE_MAX_QUERIES as _IVF_DEFAULT_MAX_QUERIES,
 )
@@ -116,7 +117,7 @@ def pq_joint_fit(
                 for pdf in batches:
                     if len(pdf) == 0:
                         continue
-                    V = np.stack([np.asarray(v, dtype="float64") for v in pdf["v"].to_numpy()])
+                    V = vec_matrix(pdf["v"])
                     if C is not None:
                         cid = (-2.0 * (V @ C.T) + c_sq).argmin(axis=1)
                         np.add.at(c_sum, cid, V)
@@ -216,7 +217,7 @@ def _encode_pandas(base: DataFrame, books: list[list[list[float]]]) -> DataFrame
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.stack([np.asarray(v, dtype="float64") for v in pdf["v"].to_numpy()])
+            V = vec_matrix(pdf["v"])
             cols = []
             for j, (C, csq) in enumerate(zip(B, b_sq)):
                 Vj = V[:, j * sub : (j + 1) * sub]
@@ -262,7 +263,7 @@ def _probe_coarse(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            Q = np.stack([np.asarray(v, dtype="float64") for v in pdf["qv"].to_numpy()])
+            Q = vec_matrix(pdf["qv"])
             d = -2.0 * (Q @ C.T) + c_sq
             near = np.argsort(d, axis=1, kind="stable")[:, :n_take]
             yield pd.DataFrame(
@@ -309,7 +310,7 @@ def _adc_shortlist(
                     "adc": pd.Series([], dtype="float64"),
                 }
             )
-        Q = np.stack([np.asarray(v, dtype="float64") for v in left["qv"].to_numpy()])
+        Q = vec_matrix(left["qv"])
         codes_mat = np.stack(
             [np.asarray(c, dtype="int64") for c in right["code"].to_numpy()]
         )  # n_cand × m

@@ -47,6 +47,7 @@ from osarchiver_spark.functions.precision import money_sum
 from pyspark.sql import types as T
 
 from osarchiver_spark.functions.vectors import as_double
+from osarchiver_spark.operators.blas import vec_matrix
 from osarchiver_spark.operators.ivf import _assign_pandas, kmeans_fit
 
 
@@ -261,7 +262,7 @@ def semantic_cluster_profile(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.stack([np.asarray(v, dtype="float64") for v in pdf["v"].to_numpy()])
+            V = vec_matrix(pdf["v"])
             # d2 = |v|^2 - 2 v.c + |c|^2 — the same expression the SQL
             # oracle evaluates, so rounding lands on the same grid
             d = -2.0 * (V @ C.T) + c_sq

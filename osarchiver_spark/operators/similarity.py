@@ -50,7 +50,7 @@ def brute_force_topk(
     import numpy as np
     import pandas as pd
 
-    from osarchiver_spark.operators.blas import cosine_pair_schema
+    from osarchiver_spark.operators.blas import cosine_pair_schema, vec_matrix
 
     q_rows = (
         queries.select(
@@ -78,7 +78,7 @@ def brute_force_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.stack([np.asarray(v, dtype="float64") for v in pdf["cv"].to_numpy()])
+            V = vec_matrix(pdf["cv"])
             vn = np.sqrt((V * V).sum(axis=1))
             vn = np.where(vn > 0, vn, np.inf)
             S = np.round((Q @ V.T) / np.outer(qn, vn), 6)  # n_q × n_batch

@@ -20,6 +20,7 @@ from osarchiver_spark.operators.dedup import (
     simhash_candidates,
     simhash_multiprobe_pairs,
 )
+from osarchiver_spark.queries.scratch import reap_at_exit, scratch_dir
 from osarchiver_spark.sources.parquet import load_table
 
 NUM_HASHES = 12
@@ -94,25 +95,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REAPED_INDEX_DIRS: set[str] = set()
-
-
-def _reap_index_dir_at_exit(idx_dir: str) -> None:
-    """Per-application index dirs would otherwise accumulate in /tmp
-    forever (each Spark app gets a fresh applicationId — the component
-    that makes concurrent runs collision-free also defeats the old
-    stable-path reuse). Register a process-exit rmtree once per dir:
-    within the app's lifetime repeated calls still reuse ONE
-    directory, and the host is clean after the process ends."""
-    if idx_dir in _REAPED_INDEX_DIRS:
-        return
-    import atexit
-    import shutil
-
-    _REAPED_INDEX_DIRS.add(idx_dir)
-    atexit.register(shutil.rmtree, idx_dir, ignore_errors=True)
-
-
 def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The indexed variant of dedup_incremental: the corpus's band
     index is BUILT ONCE, persisted band_key-sorted, and the new batch
@@ -122,10 +104,9 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     write to a temp dir, read back, probe. Same semantics — and the
     same oracle — as dedup_incremental: at 100 TB this replaces the
     per-batch corpus re-sketch with an indexed lookup."""
-    import hashlib
-    import os
-    import tempfile
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     from osarchiver_spark.operators.dedup import (
         minhash_lsh_incremental_indexed,
@@ -136,22 +117,8 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 10 == 3)
     corpus = docs.filter(F.col("doc_id") % 10 != 3)
-    # stable per-(fixture, SparkSession) path + overwrite: repeated
-    # adjudication runs in one session reuse ONE directory instead of
-    # leaking a fresh mkdtemp each call, while the applicationId
-    # component makes the path private to this Spark app — two
-    # concurrent runs over the same fixture (e.g. a same-fixture A/B
-    # control) can no longer overwrite a directory the other's
-    # returned DataFrame still reads, and on multi-user hosts the
-    # name can't collide with another user's dir (r06 ADVICE item 1)
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "lsh_index_{}_{}".format(
-            hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-            spark.sparkContext.applicationId,
-        ),
-    )
-    _reap_index_dir_at_exit(idx_dir)
+    # per-(fixture, Spark app) path + overwrite (r06 ADVICE item 1)
+    idx_dir = scratch_dir(spark, sf_dir, "lsh_index_")
 
     # the index build (corpus side) and the probe-side prep (new-batch
     # shingle/sketch/band + key collect) share no inputs, so they run
@@ -164,10 +131,13 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_idx = pool.submit(
-            lambda: built.write.mode("overwrite").parquet(idx_dir)
+            inheritable_thread_target(spark)(
+                lambda: built.write.mode("overwrite").parquet(idx_dir)
+            )
         )
         f_prep = pool.submit(
-            prep_new_bands, new, "doc_id", "text", 3, NUM_HASHES, BANDS
+            inheritable_thread_target(spark)(prep_new_bands),
+            new, "doc_id", "text", 3, NUM_HASHES, BANDS,
         )
         f_idx.result()
         prepped = f_prep.result()
@@ -287,10 +257,6 @@ IVF_NEARDUP_CLUSTERS = 8
 
 
 def q_dedup_ivf_neardup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
     from osarchiver_spark.operators.ivf import (
         ivf_index,
         ivf_neardup_probe,
@@ -301,14 +267,7 @@ def q_dedup_ivf_neardup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id") < IVF_NEARDUP_VEC_CAP
     )
     cents = kmeans_fit(emb, "vec_id", "embedding", k=IVF_NEARDUP_CLUSTERS)
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "ivf_neardup_{}_{}".format(
-            hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-            spark.sparkContext.applicationId,
-        ),
-    )
-    _reap_index_dir_at_exit(idx_dir)
+    idx_dir = scratch_dir(spark, sf_dir, "ivf_neardup_")
     ivf_index(emb, "vec_id", "embedding", cents).write.mode(
         "overwrite"
     ).partitionBy("cid").parquet(idx_dir)
@@ -339,10 +298,6 @@ def q_streaming_vector_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     batch one-shot build BY the capstone identity; multi-batch
     arrival (maxFilesPerTrigger) and epoch-replay idempotence are
     pinned in tests/test_streaming_vector_store.py."""
-    import hashlib
-    import os
-    import tempfile
-
     from osarchiver_spark.operators.ivf import kmeans_fit
     from osarchiver_spark.streaming.vector_store import (
         run_streaming_vector_maintenance,
@@ -361,17 +316,10 @@ def q_streaming_vector_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     # loop (r10 ADVICE item 4)
     global _SVM_INVOCATIONS
     _SVM_INVOCATIONS += 1
-    suffix = "{}_{}_{}".format(
-        hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-        spark.sparkContext.applicationId,
-        _SVM_INVOCATIONS,
-    )
-    index_dir = os.path.join(tempfile.gettempdir(), f"svm_idx_{suffix}")
-    store_dir = os.path.join(tempfile.gettempdir(), f"svm_store_{suffix}")
-    _reap_index_dir_at_exit(index_dir)
-    _reap_index_dir_at_exit(store_dir)
-    _reap_index_dir_at_exit(store_dir + "__epochs")
-    _reap_index_dir_at_exit(store_dir + "__checkpoint")
+    index_dir = scratch_dir(spark, sf_dir, "svm_idx_", f"_{_SVM_INVOCATIONS}")
+    store_dir = scratch_dir(spark, sf_dir, "svm_store_", f"_{_SVM_INVOCATIONS}")
+    reap_at_exit(store_dir + "__epochs")
+    reap_at_exit(store_dir + "__checkpoint")
     return run_streaming_vector_maintenance(
         spark, sf_dir, index_dir, store_dir, cents,
         threshold=EMBED_THRESHOLD, nprobe=SEMDEDUP_K,
@@ -402,29 +350,18 @@ def q_streaming_text_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph by the band-bucket symmetry identity — multi-batch arrival,
     epoch replay, and crash repair are pinned in
     tests/test_streaming_text_store.py + tests/test_crash_recovery.py."""
-    import hashlib
-    import os
-    import tempfile
-
     from osarchiver_spark.streaming.text_store import (
         run_streaming_text_maintenance,
     )
 
     global _STM_INVOCATIONS
     _STM_INVOCATIONS += 1
-    suffix = "{}_{}_{}".format(
-        hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-        spark.sparkContext.applicationId,
-        _STM_INVOCATIONS,
-    )
     dirs = {
-        kind: os.path.join(tempfile.gettempdir(), f"stm_{kind}_{suffix}")
+        kind: scratch_dir(spark, sf_dir, f"stm_{kind}_", f"_{_STM_INVOCATIONS}")
         for kind in ("idx", "corpus", "pairs")
     }
-    for d in dirs.values():
-        _reap_index_dir_at_exit(d)
-    _reap_index_dir_at_exit(dirs["pairs"] + "__epochs")
-    _reap_index_dir_at_exit(dirs["pairs"] + "__checkpoint")
+    reap_at_exit(dirs["pairs"] + "__epochs")
+    reap_at_exit(dirs["pairs"] + "__checkpoint")
     return run_streaming_text_maintenance(
         spark, sf_dir, dirs["idx"], dirs["corpus"], dirs["pairs"],
         threshold=MINHASH_THRESHOLD, hash_fn="md5",
@@ -446,10 +383,6 @@ def q_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbers a production maintenance_decision() would act on —
     thresholds documented in operators/health.py, wired into the
     streaming maintenance loop via maintenance_policy."""
-    import hashlib
-    import os
-    import tempfile
-
     from osarchiver_spark.operators.health import index_health
     from osarchiver_spark.operators.ivf import ivf_index, kmeans_fit
 
@@ -458,14 +391,7 @@ def q_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, "vec_id", "embedding",
         k=SEMDEDUP_K, iters=SEMDEDUP_ITERS, quantize=SEMDEDUP_QUANT,
     )
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "ih_store_{}_{}".format(
-            hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-            spark.sparkContext.applicationId,
-        ),
-    )
-    _reap_index_dir_at_exit(idx_dir)
+    idx_dir = scratch_dir(spark, sf_dir, "ih_store_")
     ivf_index(emb, "vec_id", "embedding", cents).write.mode(
         "overwrite"
     ).partitionBy("cid").parquet(idx_dir)

@@ -11,11 +11,40 @@ tests/test_similarity.py and tests/test_ivf.py.
 
 from __future__ import annotations
 
+import os
+import shutil
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
+from typing import Any
+from urllib.parse import urlparse
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osarchiver_spark.functions.vectors import as_double, norm
+from osarchiver_spark.operators.ivf import (
+    INDEXED_PROBE_MAX_QUERIES,
+    IVF_STORE_SCHEMA,
+    guard_batch,
+    ivf_index,
+    ivf_reindex,
+    ivf_topk_indexed,
+    kmeans_fit,
+    prep_indexed_probe,
+)
+from osarchiver_spark.operators.pq import (
+    PQ_STORE_SCHEMA,
+    _unit_expr,
+    ivf_pq_index,
+    ivf_pq_reindex,
+    ivf_pq_topk_indexed,
+    pq_joint_fit,
+    prep_pq_indexed_probe,
+)
 from osarchiver_spark.operators.similarity import brute_force_topk, lsh_topk
+from osarchiver_spark.queries.scratch import reap_at_exit, scratch_dir
 from osarchiver_spark.sources.parquet import load_table
 
 QUERY_MOD = 100  # vec_id % 100 == 0 → small deterministic query set
@@ -42,16 +71,6 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_ivf.py.
 LSH_ORACLE_PROBE_HAMMING = 5
 IVF_ORACLE_NPROBE = 16  # == n_clusters: probe everything => exact
-
-# Explicit read-back schemas for the persisted index stores (r11
-# optimization round): schema inference on read-back cost a
-# driver-side footer job per chain, and the partition-column type
-# inference forced a cast — the store layouts are fixed by
-# ivf_index/ivf_pq_index, so the reads declare them (cid arrives int
-# directly; guide §6 "verify pruning/pushdown", inference adds
-# nothing but latency here).
-from osarchiver_spark.operators.ivf import IVF_STORE_SCHEMA  # noqa: E402
-from osarchiver_spark.operators.pq import PQ_STORE_SCHEMA  # noqa: E402
 
 
 def q_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,114 +119,198 @@ def _staged_store_build(standing_index: DataFrame, drop_index: DataFrame, idx_di
     chain's bit-exact parity run.
 
     Implementation is local-fs (os.replace): the chain stores always
-    live under the local temp dir. On HDFS/object stores the same
+    live under the local temp dir, and any other URI scheme is
+    rejected before the first write. On HDFS/object stores the same
     publish is a FileSystem.rename / manifest swap — the discipline,
     not the syscall, is what transfers."""
-    import os
-    import shutil
-    from concurrent.futures import ThreadPoolExecutor
-
-    from osarchiver_spark.queries.dedup import _reap_index_dir_at_exit
-
+    parsed = urlparse(idx_dir)
+    if parsed.scheme not in ("", "file"):
+        raise ValueError(
+            f"staged store publish moves files with os.replace and needs a "
+            f"local path, got {idx_dir!r}"
+        )
+    local_idx = parsed.path if parsed.scheme else idx_dir
     stage_dir = idx_dir.rstrip("/") + "__stage"
+    local_stage = local_idx.rstrip("/") + "__stage"
     # a crash between the staged write and the publish below must not
     # leak the staging root past process exit
-    _reap_index_dir_at_exit(stage_dir)
+    reap_at_exit(local_stage)
     with ThreadPoolExecutor(max_workers=1) as pool:
         f_drop = pool.submit(
-            lambda: drop_index.write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(stage_dir)
+            inheritable_thread_target(drop_index.sparkSession)(
+                lambda: drop_index.write.mode("overwrite")
+                .partitionBy("cid")
+                .parquet(stage_dir)
+            )
         )
         standing_index.write.mode("overwrite").partitionBy("cid").parquet(idx_dir)
         f_drop.result()
-    for entry in os.listdir(stage_dir):
+    for entry in os.listdir(local_stage):
         if not entry.startswith("cid="):
             continue  # root _SUCCESS/marker files stay behind
-        src = os.path.join(stage_dir, entry)
-        dst = os.path.join(idx_dir, entry)
+        src = os.path.join(local_stage, entry)
+        dst = os.path.join(local_idx, entry)
         os.makedirs(dst, exist_ok=True)
         for fname in os.listdir(src):
             os.replace(os.path.join(src, fname), os.path.join(dst, fname))
-    shutil.rmtree(stage_dir, ignore_errors=True)
+    shutil.rmtree(local_stage, ignore_errors=True)
 
 
-def build_and_probe_ivf(
+@dataclass(frozen=True)
+class IndexCodec:
+    """What one persisted-index kind supplies to :func:`ann_chain`.
+    A model is whatever ``fit`` returns; the chain only hands it back.
+
+    - ``fit(emb, k)``: train a k-cell model on an embeddings frame;
+    - ``index(rows, model)``: the store rows for an embeddings frame;
+    - ``reindex(store, emb, model)``: a store migrated to a new model;
+    - ``prep(queries, model, nprobe)``: the query-side probe half;
+    - ``probe(store, queries, emb, model, nprobe, batch_rows, prepped)``:
+      top-``TOP_K`` over the read-back store."""
+
+    op_name: str  # the probe's batch-contract label
+    # the store layout, declared on read-back: inference would cost a
+    # driver-side footer job per chain and a cast of the cid type
+    store_schema: str
+    fit: Callable[..., Any]
+    index: Callable[..., DataFrame]
+    reindex: Callable[..., DataFrame]
+    prep: Callable[..., tuple[DataFrame, list[int]]]
+    probe: Callable[..., DataFrame]
+
+
+#: Plain IVF: the store holds full vectors (neighbor_id, v, cid).
+IVF_CODEC = IndexCodec(
+    op_name="ivf_topk_indexed",
+    store_schema=IVF_STORE_SCHEMA,
+    fit=lambda emb, k: kmeans_fit(emb, "vec_id", "embedding", k=k),
+    index=lambda rows, cents: ivf_index(rows, "vec_id", "embedding", cents),
+    reindex=lambda store, emb, cents: ivf_reindex(store, cents),
+    prep=lambda q, cents, nprobe: prep_indexed_probe(q, "vec_id", "embedding", cents, nprobe),
+    probe=lambda store, q, emb, cents, nprobe, batch_rows, prepped: ivf_topk_indexed(
+        store, q, "vec_id", "embedding", cents, k=TOP_K, nprobe=nprobe,
+        batch_rows=batch_rows, prepped=prepped,
+    ),
+)
+
+
+def pq_codec(shortlist: int) -> IndexCodec:
+    """IVF-PQ: the store holds PQ codes (neighbor_id, code, cid) — the
+    FAISS IVFPQ on-disk shape a 100 TB embedding corpus serves from
+    (~16 ints vs 64 doubles per vector). The model is (coarse
+    centroids, m=16 × 16-code books), fit by one fused Lloyd's loop
+    over unit vectors; the probe is partition-pruned ADC over codes,
+    then an exact re-rank of the ``shortlist`` best ids per query
+    against the source table's full vectors."""
+
+    def fit(emb, k):
+        unit = emb.select(F.col("vec_id"), _unit_expr("embedding").alias("_uv"))
+        return pq_joint_fit(unit, "vec_id", "_uv", n_clusters=k, m=16, codes=16)
+
+    return IndexCodec(
+        op_name="ivf_pq_topk_indexed",
+        store_schema=PQ_STORE_SCHEMA,
+        fit=fit,
+        index=lambda rows, model: ivf_pq_index(rows, "vec_id", "embedding", *model),
+        reindex=lambda store, emb, model: ivf_pq_reindex(
+            store, emb, "vec_id", "embedding", *model
+        ),
+        prep=lambda q, model, nprobe: prep_pq_indexed_probe(
+            q, "vec_id", "embedding", model[0], nprobe
+        ),
+        probe=lambda store, q, emb, model, nprobe, batch_rows, prepped: ivf_pq_topk_indexed(
+            store, q, emb, "vec_id", "embedding", *model, k=TOP_K, nprobe=nprobe,
+            shortlist=shortlist, batch_rows=batch_rows, prepped=prepped,
+        ),
+    )
+
+
+def ann_chain(
     spark: SparkSession,
     sf_dir: str,
     queries: DataFrame,
+    codec: IndexCodec,
     nprobe: int,
     dir_prefix: str,
-    n_clusters: int = 16,
+    migrate: bool = False,
 ) -> DataFrame:
-    """Shared build+probe chain for the persisted IVF index (used by
-    both the registered ``knn_ivf_indexed`` query and bench.py's
-    production-depth override, so the benched path cannot drift from
-    the adjudicated one): train centroids on the full corpus, build
-    the cid-partitioned inverted file from the standing 90%, APPEND
-    the 10% drop's assignments under FROZEN centroids (FAISS
-    ``IndexIVF.add`` semantics), read the index back, probe at
-    ``nprobe``. The probe's batch-contract count (a one-job scan of
-    the query side) is independent of the fit, so it runs as a
-    concurrent driver-thread job and is handed to the probe as
-    ``batch_rows`` (guide §2.6; the guard math is unchanged)."""
-    import hashlib
-    import os
-    import tempfile
-    from concurrent.futures import ThreadPoolExecutor
+    """The persisted-index ANN chain, shared by the registered
+    ``knn_ivf{,_pq}_{indexed,reindexed}`` queries and bench.py's
+    production-depth overrides so the benched path cannot drift from
+    the adjudicated one. Two shapes:
 
-    from osarchiver_spark.operators.ivf import (
-        INDEXED_PROBE_MAX_QUERIES,
-        guard_batch,
-        ivf_index,
-        ivf_topk_indexed,
-        kmeans_fit,
-        prep_indexed_probe,
-    )
-    from osarchiver_spark.queries.dedup import _reap_index_dir_at_exit
+    - build (``migrate=False``): fit a k=16 model on the full corpus,
+      write the standing 90% as a cid-partitioned store and APPEND the
+      10% drop under the FROZEN model (FAISS ``IndexIVF.add``
+      semantics) via the staged publish, then probe at ``nprobe``.
+    - migrate (``migrate=True``): build the store under a
+      deliberately-different OLD model (k=8, fit on half the corpus),
+      retrain on the full corpus (k=16) and ``reindex`` the old store
+      into a NEW directory — the FAISS retrain discipline (a new
+      ``train()`` invalidates assignments; re-``add`` everything) —
+      then probe the migrated store.
 
+    Mutually independent legs run as concurrent driver-thread jobs
+    (guide §2.6: actions are only sequential because the driver calls
+    them sequentially): the probe's batch-contract count beside the
+    fit(s), the migrate shape's old leg beside the new fit, and the
+    query-side probe prep beside the store write. The batch guard runs
+    before the prep, so an oversized batch fails before its
+    queries × nprobe frame is materialized. Side threads inherit the
+    caller's job group, so every job is attributed to the query and
+    ``cancelJobGroup`` reaches all of them. Each leg's own job chain,
+    and therefore its math, is the sequential one."""
     emb = load_table(spark, sf_dir, "embeddings")
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_n = pool.submit(
-            lambda: queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count()
-        )
-        centroids = kmeans_fit(emb, "vec_id", "embedding", k=n_clusters)
-        batch_rows = f_n.result()
-    # enforce the batch contract BEFORE the probe frame is prepped in
-    # a side thread: an oversized batch must fail fast, not after its
-    # queries×nprobe frame was materialized into executor storage
-    guard_batch(queries, INDEXED_PROBE_MAX_QUERIES, "ivf_topk_indexed", batch_rows)
-
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "{}{}_{}".format(
-            dir_prefix,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-            spark.sparkContext.applicationId,
-        ),
-    )
-    _reap_index_dir_at_exit(idx_dir)
     standing = emb.filter(F.col("vec_id") % 10 != 3)
     drop = emb.filter(F.col("vec_id") % 10 == 3)
-    # the query-side probe (model + queries only) shares no inputs
-    # with the store writes — run it as a concurrent driver-thread
-    # job that back-fills the writes' task tails (guide §2.6); the
-    # standing write and the drop's staged write overlap too
+    count_batch = inheritable_thread_target(spark)(
+        lambda: queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count()
+    )
+
+    def build_store(model, store_dir: str) -> None:
+        _staged_store_build(codec.index(standing, model), codec.index(drop, model), store_dir)
+
+    if migrate:
+        old_dir = scratch_dir(spark, sf_dir, dir_prefix, "_old")
+        store_dir = scratch_dir(spark, sf_dir, dir_prefix, "_new")
+
+        def old_leg() -> None:
+            build_store(codec.fit(emb.filter(F.col("vec_id") % 2 == 0), 8), old_dir)
+
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            f_old = pool.submit(inheritable_thread_target(spark)(old_leg))
+            f_new = pool.submit(inheritable_thread_target(spark)(codec.fit), emb, 16)
+            f_n = pool.submit(count_batch)
+            f_old.result()
+            model = f_new.result()
+            batch_rows = f_n.result()
+        old_store = spark.read.schema(codec.store_schema).parquet(old_dir)
+    else:
+        store_dir = scratch_dir(spark, sf_dir, dir_prefix)
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            f_n = pool.submit(count_batch)
+            model = codec.fit(emb, 16)
+            batch_rows = f_n.result()
+    guard_batch(queries, INDEXED_PROBE_MAX_QUERIES, codec.op_name, batch_rows)
+
     with ThreadPoolExecutor(max_workers=1) as pool:
         f_probe = pool.submit(
-            prep_indexed_probe, queries, "vec_id", "embedding", centroids, nprobe
+            inheritable_thread_target(spark)(codec.prep), queries, model, nprobe
         )
-        _staged_store_build(
-            ivf_index(standing, "vec_id", "embedding", centroids),
-            ivf_index(drop, "vec_id", "embedding", centroids),
-            idx_dir,
-        )
+        if migrate:
+            codec.reindex(old_store, emb, model).write.mode("overwrite").partitionBy(
+                "cid"
+            ).parquet(store_dir)
+        else:
+            build_store(model, store_dir)
         prepped = f_probe.result()
-    index = spark.read.schema(IVF_STORE_SCHEMA).parquet(idx_dir)
-    return ivf_topk_indexed(
-        index, queries, "vec_id", "embedding", centroids, k=TOP_K, nprobe=nprobe,
-        batch_rows=batch_rows, prepped=prepped,
-    )
+    store = spark.read.schema(codec.store_schema).parquet(store_dir)
+    return codec.probe(store, queries, emb, model, nprobe, batch_rows, prepped)
+
+
+def _oracle_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    return emb.filter(F.col("vec_id") % QUERY_MOD == 0)
 
 
 def q_knn_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -224,10 +327,9 @@ def q_knn_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle; production nprobe recall is pinned in tests/test_ivf.py.
     The two-batch append is part of the REGISTERED query on purpose:
     the oracle match certifies that append == one-shot build."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-    return build_and_probe_ivf(
-        spark, sf_dir, queries, nprobe=IVF_ORACLE_NPROBE, dir_prefix="ivf_index_"
+    return ann_chain(
+        spark, sf_dir, _oracle_queries(spark, sf_dir), IVF_CODEC,
+        nprobe=IVF_ORACLE_NPROBE, dir_prefix="ivf_index_",
     )
 
 
@@ -260,93 +362,6 @@ def q_knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def build_and_probe_ivf_pq(
-    spark: SparkSession,
-    sf_dir: str,
-    queries: DataFrame,
-    nprobe: int,
-    shortlist: int,
-    dir_prefix: str,
-    n_clusters: int = 16,
-    m: int = 16,
-    codes: int = 16,
-) -> DataFrame:
-    """Shared build+probe chain for the PERSISTED IVF-PQ index (used
-    by both the registered ``knn_ivf_pq_indexed`` query and bench.py's
-    production-depth override): train coarse quantizer + codebooks
-    once (one fused Lloyd's loop), write the standing corpus's PQ
-    CODES cid-partitioned, APPEND the drop's codes under FROZEN
-    models (FAISS ``IndexIVFPQ.add`` semantics), read the code index
-    back, probe = partition-pruned ADC over codes + exact re-rank of
-    the shortlist only against the source table's full vectors — the
-    FAISS IVFPQ on-disk shape, the configuration a 100 TB embedding
-    corpus serves from (codes are ~16 ints vs 64 doubles per vector;
-    the probe reads nprobe/n_clusters of THAT). The probe's
-    batch-contract count runs concurrently with the fit (guide §2.6)
-    and is handed to the probe as ``batch_rows``."""
-    import hashlib
-    import os
-    import tempfile
-    from concurrent.futures import ThreadPoolExecutor
-
-    from osarchiver_spark.operators.ivf import INDEXED_PROBE_MAX_QUERIES
-    from osarchiver_spark.operators.pq import (
-        _unit_expr,
-        ivf_pq_index,
-        ivf_pq_topk_indexed,
-        pq_joint_fit,
-    )
-    from osarchiver_spark.queries.dedup import _reap_index_dir_at_exit
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    emb_n = emb.select(F.col("vec_id"), _unit_expr("embedding").alias("_uv"))
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_n = pool.submit(
-            lambda: queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count()
-        )
-        coarse, books = pq_joint_fit(
-            emb_n, "vec_id", "_uv", n_clusters=n_clusters, m=m, codes=codes
-        )
-        batch_rows = f_n.result()
-    # fail oversized batches BEFORE the probe frame is prepped in a
-    # side thread (the guard exists to precede that materialization)
-    from osarchiver_spark.operators.ivf import guard_batch
-
-    guard_batch(queries, INDEXED_PROBE_MAX_QUERIES, "ivf_pq_topk_indexed", batch_rows)
-
-    idx_dir = os.path.join(
-        tempfile.gettempdir(),
-        "{}{}_{}".format(
-            dir_prefix,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-            spark.sparkContext.applicationId,
-        ),
-    )
-    _reap_index_dir_at_exit(idx_dir)
-    standing = emb.filter(F.col("vec_id") % 10 != 3)
-    drop = emb.filter(F.col("vec_id") % 10 == 3)
-    # probe leg (model + queries only) concurrent with the code-store
-    # writes (guide §2.6); standing + staged drop writes overlap too
-    from osarchiver_spark.operators.pq import prep_pq_indexed_probe
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_probe = pool.submit(
-            prep_pq_indexed_probe, queries, "vec_id", "embedding", coarse, nprobe
-        )
-        _staged_store_build(
-            ivf_pq_index(standing, "vec_id", "embedding", coarse, books),
-            ivf_pq_index(drop, "vec_id", "embedding", coarse, books),
-            idx_dir,
-        )
-        prepped = f_probe.result()
-    index = spark.read.schema(PQ_STORE_SCHEMA).parquet(idx_dir)
-    return ivf_pq_topk_indexed(
-        index, queries, emb, "vec_id", "embedding", coarse, books,
-        k=TOP_K, nprobe=nprobe, shortlist=shortlist, batch_rows=batch_rows,
-        prepped=prepped,
-    )
-
-
 def q_knn_ivf_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted COMPRESSED-index serving chain adjudicated
     end-to-end: PQ codes (not vectors) written cid-partitioned,
@@ -356,116 +371,16 @@ def q_knn_ivf_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle; the lossy stages' machinery still runs and must be
     exact for the hash to match). Production pruning depth
     (nprobe=4, shortlist=32) is recall-tested in tests/test_pq.py
-    and benched via the same build_and_probe_ivf_pq chain."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-    return build_and_probe_ivf_pq(
-        spark,
-        sf_dir,
-        queries,
-        nprobe=IVF_ORACLE_NPROBE,
-        shortlist=PQ_ORACLE_SHORTLIST,
-        dir_prefix="ivfpq_index_",
-    )
-
-
-def build_and_migrate_ivf(
-    spark: SparkSession,
-    sf_dir: str,
-    queries: DataFrame,
-    nprobe: int,
-    dir_prefix: str,
-) -> DataFrame:
-    """Shared retrain/migration chain (used by both the registered
-    ``knn_ivf_reindexed`` query and bench.py's production-depth
-    override, so the benched path cannot drift): build the persisted
-    store under a deliberately-different OLD model (k=8 centroids fit
-    on half the corpus), append a drop under it (frozen-model
-    maintenance), then retrain on the full corpus (k=16) and
-    ``ivf_reindex`` the standing store into a NEW cid-partitioned
-    layout — the FAISS retrain discipline (a new ``train()``
-    invalidates assignments; re-``add`` everything) — and probe the
-    migrated store at ``nprobe``.
-
-    The OLD-model leg (fit k=8 on half the corpus, build + append the
-    old-layout store) and the NEW-model fit are mutually independent,
-    so they run as concurrent driver-thread jobs (guide §2.6: actions
-    are only sequential because the driver calls them sequentially) —
-    each leg's own job chain, and therefore its math, is untouched."""
-    import hashlib
-    import os
-    import tempfile
-    from concurrent.futures import ThreadPoolExecutor
-
-    from osarchiver_spark.operators.ivf import (
-        INDEXED_PROBE_MAX_QUERIES,
-        ivf_index,
-        ivf_reindex,
-        ivf_topk_indexed,
-        kmeans_fit,
-    )
-    from osarchiver_spark.queries.dedup import _reap_index_dir_at_exit
-
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    suffix = "{}{}_{}".format(
-        dir_prefix,
-        hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-        spark.sparkContext.applicationId,
-    )
-    old_dir = os.path.join(tempfile.gettempdir(), f"{suffix}_old")
-    new_dir = os.path.join(tempfile.gettempdir(), f"{suffix}_new")
-    _reap_index_dir_at_exit(old_dir)
-    _reap_index_dir_at_exit(new_dir)
-
-    standing = emb.filter(F.col("vec_id") % 10 != 3)
-    drop = emb.filter(F.col("vec_id") % 10 == 3)
-
-    def _old_store_leg() -> None:
-        old_model = kmeans_fit(
-            emb.filter(F.col("vec_id") % 2 == 0), "vec_id", "embedding", k=8
-        )
-        _staged_store_build(
-            ivf_index(standing, "vec_id", "embedding", old_model),
-            ivf_index(drop, "vec_id", "embedding", old_model),
-            old_dir,
-        )
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_old = pool.submit(_old_store_leg)
-        f_new = pool.submit(kmeans_fit, emb, "vec_id", "embedding", 16)
-        f_n = pool.submit(
-            lambda: queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count()
-        )
-        f_old.result()
-        new_model = f_new.result()
-        batch_rows = f_n.result()
-
-    from osarchiver_spark.operators.ivf import guard_batch, prep_indexed_probe
-
-    guard_batch(queries, INDEXED_PROBE_MAX_QUERIES, "ivf_topk_indexed", batch_rows)
-
-    old_store = spark.read.schema(IVF_STORE_SCHEMA).parquet(old_dir)
-    # probe leg needs only the NEW model + queries: concurrent with
-    # the reindex write (guide §2.6)
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_probe = pool.submit(
-            prep_indexed_probe, queries, "vec_id", "embedding", new_model, nprobe
-        )
-        ivf_reindex(old_store, new_model).write.mode("overwrite").partitionBy(
-            "cid"
-        ).parquet(new_dir)
-        prepped = f_probe.result()
-    migrated = spark.read.schema(IVF_STORE_SCHEMA).parquet(new_dir)
-    return ivf_topk_indexed(
-        migrated, queries, "vec_id", "embedding", new_model,
-        k=TOP_K, nprobe=nprobe, batch_rows=batch_rows, prepped=prepped,
+    and benched via the same chain."""
+    return ann_chain(
+        spark, sf_dir, _oracle_queries(spark, sf_dir), pq_codec(PQ_ORACLE_SHORTLIST),
+        nprobe=IVF_ORACLE_NPROBE, dir_prefix="ivfpq_index_",
     )
 
 
 def q_knn_ivf_reindexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RETRAIN/MIGRATION chain adjudicated end-to-end (r09 verdict
-    item 1) — see :func:`build_and_migrate_ivf`. The migrated store is
+    item 1) — :func:`ann_chain`'s migrate shape. The migrated store is
     probed at full-recall depth (nprobe == n_clusters), so the exact
     brute-force ranking is the oracle: a hash match certifies that
     migration preserved membership and vectors exactly AND that the
@@ -473,128 +388,25 @@ def q_knn_ivf_reindexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (recall/cell balance/read amplification before vs after retrain)
     is pinned in tests/test_ivf.py and measured at sf10 in SCALE.md
     (BENCH_SF10_REINDEX.json)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-    return build_and_migrate_ivf(
-        spark, sf_dir, queries, nprobe=IVF_ORACLE_NPROBE, dir_prefix="ivf_reidx_"
-    )
-
-
-def build_and_migrate_ivf_pq(
-    spark: SparkSession,
-    sf_dir: str,
-    queries: DataFrame,
-    nprobe: int,
-    shortlist: int,
-    dir_prefix: str,
-) -> DataFrame:
-    """Shared PQ retrain/migration chain (registered query + bench
-    override, no drift): build the COMPRESSED store under a
-    deliberately-different OLD model (coarse k=8 + codebooks fit on
-    half the corpus), append a drop under it, retrain on the full
-    corpus (k=16), ``ivf_pq_reindex`` the standing code store into a
-    NEW layout (id semi-join re-fetch + re-encode — the code index
-    holds no vectors), and probe the migrated store at ``nprobe`` /
-    ``shortlist``.
-
-    The OLD-model leg (fit + build + append the old-layout code
-    store) and the NEW-model fit are independent, so they run as
-    concurrent driver-thread jobs (guide §2.6) — each leg's own job
-    chain, and therefore its math, is untouched."""
-    import hashlib
-    import os
-    import tempfile
-    from concurrent.futures import ThreadPoolExecutor
-
-    from osarchiver_spark.operators.pq import (
-        _unit_expr,
-        ivf_pq_index,
-        ivf_pq_reindex,
-        ivf_pq_topk_indexed,
-        pq_joint_fit,
-    )
-    from osarchiver_spark.operators.ivf import INDEXED_PROBE_MAX_QUERIES
-    from osarchiver_spark.queries.dedup import _reap_index_dir_at_exit
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    emb_n = emb.select(F.col("vec_id"), _unit_expr("embedding").alias("_uv"))
-
-    suffix = "{}{}_{}".format(
-        dir_prefix,
-        hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-        spark.sparkContext.applicationId,
-    )
-    old_dir = os.path.join(tempfile.gettempdir(), f"{suffix}_old")
-    new_dir = os.path.join(tempfile.gettempdir(), f"{suffix}_new")
-    _reap_index_dir_at_exit(old_dir)
-    _reap_index_dir_at_exit(new_dir)
-
-    standing = emb.filter(F.col("vec_id") % 10 != 3)
-    drop = emb.filter(F.col("vec_id") % 10 == 3)
-
-    def _old_store_leg() -> None:
-        coarse_a, books_a = pq_joint_fit(
-            emb_n.filter(F.col("vec_id") % 2 == 0), "vec_id", "_uv",
-            n_clusters=8, m=16, codes=16,
-        )
-        _staged_store_build(
-            ivf_pq_index(standing, "vec_id", "embedding", coarse_a, books_a),
-            ivf_pq_index(drop, "vec_id", "embedding", coarse_a, books_a),
-            old_dir,
-        )
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_old = pool.submit(_old_store_leg)
-        f_new = pool.submit(
-            pq_joint_fit, emb_n, "vec_id", "_uv", 16, 3, 16, 16
-        )
-        f_n = pool.submit(
-            lambda: queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count()
-        )
-        f_old.result()
-        coarse_b, books_b = f_new.result()
-        batch_rows = f_n.result()
-
-    from osarchiver_spark.operators.ivf import guard_batch
-    from osarchiver_spark.operators.pq import prep_pq_indexed_probe
-
-    guard_batch(queries, INDEXED_PROBE_MAX_QUERIES, "ivf_pq_topk_indexed", batch_rows)
-
-    old_store = spark.read.schema(PQ_STORE_SCHEMA).parquet(old_dir)
-    # probe leg needs only the NEW model + queries: concurrent with
-    # the re-encode/migrate write (guide §2.6)
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_probe = pool.submit(
-            prep_pq_indexed_probe, queries, "vec_id", "embedding", coarse_b, nprobe
-        )
-        ivf_pq_reindex(
-            old_store, emb, "vec_id", "embedding", coarse_b, books_b
-        ).write.mode("overwrite").partitionBy("cid").parquet(new_dir)
-        prepped = f_probe.result()
-    migrated = spark.read.schema(PQ_STORE_SCHEMA).parquet(new_dir)
-    return ivf_pq_topk_indexed(
-        migrated, queries, emb, "vec_id", "embedding", coarse_b, books_b,
-        k=TOP_K, nprobe=nprobe, shortlist=shortlist, batch_rows=batch_rows,
-        prepped=prepped,
+    return ann_chain(
+        spark, sf_dir, _oracle_queries(spark, sf_dir), IVF_CODEC,
+        nprobe=IVF_ORACLE_NPROBE, dir_prefix="ivf_reidx_", migrate=True,
     )
 
 
 def q_knn_ivf_pq_reindexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPRESSED-store retrain/migration chain adjudicated
-    end-to-end — the PQ twin of knn_ivf_reindexed (see
-    :func:`build_and_migrate_ivf_pq`). Probed at the established
-    full-recall oracle split (every cell + shortlist everything), so
-    the exact brute-force ranking is the oracle: a hash match
-    certifies the id semi-join re-fetch preserved membership exactly
-    AND the re-encoded codes serve correctly. Fingerprint identity
-    with a fresh build is pinned in tests/test_pq.py; sf10 walls in
-    BENCH_SF10_PQ_REINDEX.json."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-    return build_and_migrate_ivf_pq(
-        spark, sf_dir, queries,
-        nprobe=IVF_ORACLE_NPROBE, shortlist=PQ_ORACLE_SHORTLIST,
-        dir_prefix="ivfpq_reidx_",
+    end-to-end — the PQ twin of knn_ivf_reindexed. Migration re-fetches
+    vectors by an id semi-join (the code store holds none) and
+    re-encodes. Probed at the established full-recall oracle split
+    (every cell + shortlist everything), so the exact brute-force
+    ranking is the oracle: a hash match certifies the re-fetch
+    preserved membership exactly AND the re-encoded codes serve
+    correctly. Fingerprint identity with a fresh build is pinned in
+    tests/test_pq.py; sf10 walls in BENCH_SF10_PQ_REINDEX.json."""
+    return ann_chain(
+        spark, sf_dir, _oracle_queries(spark, sf_dir), pq_codec(PQ_ORACLE_SHORTLIST),
+        nprobe=IVF_ORACLE_NPROBE, dir_prefix="ivfpq_reidx_", migrate=True,
     )
 
 

@@ -298,11 +298,15 @@ def make_maintenance_batch_fn(
         # torn-epoch repair semantics are unchanged
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
         with ThreadPoolExecutor(max_workers=1) as pool:
             f_idx = pool.submit(
-                lambda: batch_index.write.mode(
-                    "overwrite" if first else "append"
-                ).partitionBy("cid").parquet(index_dir)
+                inheritable_thread_target(spark)(
+                    lambda: batch_index.write.mode(
+                        "overwrite" if first else "append"
+                    ).partitionBy("cid").parquet(index_dir)
+                )
             )
             survivors = batch.join(losers, "vec_id", "left_anti")
             _write_store(survivors, centroids, pq_models, store_dir, store_mode)

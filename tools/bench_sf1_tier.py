@@ -46,8 +46,11 @@ def main() -> None:
     from osarchiver_spark.queries import all_queries
     from osarchiver_spark.session import get_spark
 
-    spark = get_spark("osarchiver_sf1_tier")
     registry = all_queries()
+    unknown = [n for n in HEAVY if n not in registry]
+    if unknown:
+        raise SystemExit(f"unknown query names in HEAVY: {unknown}")
+    spark = get_spark("osarchiver_sf1_tier")
     spark.range(1_000).selectExpr("sum(id) s").write.format("noop").mode(
         "overwrite"
     ).save()
