@@ -5,14 +5,18 @@ Spark re-expression of the reference run loop (osarchiver/archiver.py:
 retention predicate selects archivable rows, every destination writes
 them, and ONLY if all destinations succeeded is the "delete"
 performed — here a source rewrite keeping the anti-join complement.
-Any sink failure raises and the source stays untouched for that table
-(the no-data-loss invariant, archiver.py:96-103 / errors.py:24-29).
+Every sink is attempted; any failure leaves that table's source and
+watermark untouched (the no-data-loss invariant, archiver.py:96-103 /
+errors.py:24-29).
 
 Dry-run (reference X1, common/db.py:287-303: execute+rollback) is
 plan-only: count what would be archived, write nothing.
 
 Scale design notes:
-- one cached scan feeds all sinks (fan-out without re-scan);
+- one cached set, consumed concurrently: the archived count, every
+  sink write and the remaining-count run at once on driver threads
+  (a not-yet-built cached block is computed once, shared through the
+  block manager's per-block locks); the delete waits on every sink;
 - the source rewrite uses the *negated predicate*, not an anti-join,
   when the archived set came from this run's own filter — a pure
   second pushdown scan, no shuffle at all; the anti-join path exists
@@ -23,9 +27,11 @@ Scale design notes:
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from osarchiver_spark.operators.retention import (
@@ -87,10 +93,6 @@ class Archiver:
         results: list[TableRunResult] = []
         for gen in table_generations(self.spec.eligible_tables()):
             if self.max_parallel_tables > 1 and len(gen) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                from pyspark import inheritable_thread_target
-
                 # one wrap per table: each thread gets its own copy of
                 # the caller's local properties (job group included)
                 with ThreadPoolExecutor(max_workers=self.max_parallel_tables) as ex:
@@ -122,47 +124,41 @@ class Archiver:
         if self.spec.dry_run:
             # Plan-only: report would-be effects, touch nothing.
             return TableRunResult(tspec.name, archived.count(), None, dry_run=True)
-        if self.spec.archive_data and self.sinks:
+        sinks = self.sinks if self.spec.archive_data else []
+        if sinks:
             archived = archived.cache()  # one scan feeds N sinks
-            try:
-                n_archived = archived.count()
-                for sink in self.sinks:
-                    try:
-                        sink.write(tspec.name, archived)
-                    except Exception as exc:  # noqa: BLE001
-                        # Suppress this table's delete, keep the run
-                        # going: other tables' completed work stands
-                        # (reference archiver.py:97-103).
-                        return TableRunResult(
-                            tspec.name,
-                            n_archived,
-                            None,
-                            dry_run=False,
-                            error=f"sink {type(sink).__name__} failed for {tspec.name}: {exc}",
-                        )
-                remaining_n = None
-                if self.spec.delete_data:
-                    # Negated-predicate rewrite: a second pushdown scan,
-                    # no join/shuffle (see module docstring). Counts are
-                    # materialized BEFORE the rewriter touches the
-                    # source path — both scans are lazy over it.
-                    remaining = df.filter(~pred | df[tspec.deleted_column].isNull())
-                    remaining_n = remaining.count()
-                    if self.source_rewriter is not None:
-                        self.source_rewriter(tspec.name, remaining)  # type: ignore[operator]
-                self._advance_watermark(tspec.name, cutoff)
-                return TableRunResult(tspec.name, n_archived, remaining_n, dry_run=False)
-            finally:
-                archived.unpersist()
-        # delete-only mode: evaluate both counts before any rewrite of
-        # the source path (they are lazy scans of the original source)
+        # negated-predicate complement: no join/shuffle (module docstring)
         remaining = df.filter(~pred | df[tspec.deleted_column].isNull())
-        archived_n = archived.count()
-        remaining_n = remaining.count()
-        if self.source_rewriter is not None:
-            self.source_rewriter(tspec.name, remaining)  # type: ignore[operator]
+        ex = ThreadPoolExecutor(max_workers=len(sinks) + 2)
+
+        def submit(fn, *args):
+            # one wrap per task: each thread gets its own copy of the
+            # caller's local properties (job group included)
+            return ex.submit(inheritable_thread_target(df.sparkSession)(fn), *args)
+
+        try:  # both counts land BEFORE the rewriter touches the source
+            with ex:
+                archived_count = submit(archived.count)
+                writes = [submit(sink.write, tspec.name, archived) for sink in sinks]
+                remaining_count = submit(remaining.count) if self.spec.delete_data else None
+        finally:
+            if sinks:
+                archived.unpersist()  # the pool has drained
+        n_archived = archived_count.result()  # a failed count raises before any delete
+        failed = [(s, w.exception()) for s, w in zip(sinks, writes) if w.exception() is not None]
+        if failed:
+            # Suppress this table's delete, keep the run going: other
+            # sinks' and tables' completed work stands (archiver.py:97-103).
+            sink, exc = failed[0]
+            error = f"sink {type(sink).__name__} failed for {tspec.name}: {exc}"
+            return TableRunResult(tspec.name, n_archived, None, dry_run=False, error=error)
+        remaining_n = None
+        if remaining_count is not None:
+            remaining_n = remaining_count.result()
+            if self.source_rewriter is not None:
+                self.source_rewriter(tspec.name, remaining)  # type: ignore[operator]
         self._advance_watermark(tspec.name, cutoff)
-        return TableRunResult(tspec.name, archived_n, remaining_n, dry_run=False)
+        return TableRunResult(tspec.name, n_archived, remaining_n, dry_run=False)
 
     def _advance_watermark(self, table: str, cutoff: datetime) -> None:
         if self.watermarks is not None:

@@ -15,8 +15,11 @@ Backends re-expressed Spark-first:
 
 A 100 TB note: every sink takes the *same* cached DataFrame — one
 scan feeds N destinations (reference fan-out, archiver.py:44-64) —
-and writes are partitioned by a date column when available, so the
-archive lays out as date-pruned parquet.
+and the Archiver runs the sink writes concurrently on that one cached
+set, so a sink's ``write`` must be safe to call beside other sinks'.
+The source delete waits until every sink has landed. Writes are
+partitioned by a date column when available, so the archive lays out
+as date-pruned parquet.
 """
 
 from __future__ import annotations
@@ -45,13 +48,30 @@ class Sink(ABC):
         destination/file/base.py:49-50)."""
 
 
-def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe through the Hadoop FileSystem API — works for
-    any scheme (file://, s3a://, ...) without read-and-catch."""
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` through the Hadoop API — works
+    for any scheme (file://, s3a://, ...)."""
     sc = spark.sparkContext
     hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
+
+
+def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence probe without read-and-catch."""
+    fs, hpath = _hadoop_fs(spark, path)
     return bool(fs.exists(hpath))
+
+
+def _holds_data_files(spark: SparkSession, path: str) -> bool:
+    """Any file below ``path`` whose name does not start with ``_``
+    or ``.`` (Spark's marker/checksum convention: ``_SUCCESS``,
+    ``.part-*.crc``)."""
+    fs, hpath = _hadoop_fs(spark, path)
+    files = fs.listFiles(hpath, True)
+    while files.hasNext():
+        if not files.next().getPath().getName().startswith(("_", ".")):
+            return True
+    return False
 
 
 class _DatedFileSink(Sink):
@@ -166,11 +186,19 @@ class ParquetArchiveSink(Sink):
         path = self._path(table)
         spark = df.sparkSession
         pk = self.primary_keys[table]
-        # Explicit existence probe: ONLY a missing archive falls
-        # through to first-write mode. A transient/corrupt read of an
-        # EXISTING archive must raise — silently overwriting would
-        # drop previously archived rows whose source copies are gone.
-        existing = spark.read.parquet(path) if _hadoop_path_exists(spark, path) else None
+        # Explicit existence probe: ONLY a missing archive, or one
+        # holding no data files (an empty first write leaves just
+        # markers, and its schema cannot be inferred), falls through
+        # to first-write mode. A transient/corrupt read of an archive
+        # WITH data must raise — silently overwriting would drop
+        # previously archived rows whose source copies are gone.
+        existing = None
+        if _hadoop_path_exists(spark, path):
+            try:
+                existing = spark.read.parquet(path)
+            except Exception:  # noqa: BLE001
+                if _holds_data_files(spark, path):
+                    raise
         mode = "overwrite"
         if existing is not None:
             incoming = existing.drop("_archive_dt") if "_archive_dt" in existing.columns else existing
@@ -182,8 +210,10 @@ class ParquetArchiveSink(Sink):
                 check_schema_drift(df.schema, incoming.schema)
             # Idempotent insert-if-absent: drop rows whose pk is
             # already archived (anti-join replaces the reference's
-            # ON DUPLICATE KEY UPDATE no-op upsert).
-            df = df.join(existing.select(*pk), on=pk, how="left_anti")
+            # ON DUPLICATE KEY UPDATE no-op upsert). USING moves the key
+            # columns to the front: restore the source order, or the
+            # next write fails the order-sensitive drift check.
+            df = df.join(existing.select(*pk), on=pk, how="left_anti").select(*df.columns)
             mode = "append"
         if self.partition_column and self.partition_column in df.columns:
             # Month-partitioned archive layout: partition pruning on

@@ -21,6 +21,8 @@ container sees the same structure. Re-running with the same frozen
 from __future__ import annotations
 
 import re
+import threading
+from contextlib import nullcontext
 from datetime import datetime
 from urllib.parse import urlparse
 
@@ -31,6 +33,11 @@ from osarchiver_spark.sinks.base import Sink
 # global s3a keys (NOT already bucket-scoped) that can be rewritten to
 # Hadoop's per-bucket form so they never touch other sinks' buckets
 _S3A_GLOBAL = re.compile(r"^fs\.s3a\.(?!bucket\.)(?P<rest>.+)$")
+
+# held across set -> write -> restore of transient keys: concurrent
+# writes (sink fan-out, max_parallel_tables) would otherwise interleave
+# their set/restore on the shared Hadoop conf and leak or unset values
+_TRANSIENT_CONF_LOCK = threading.Lock()
 
 
 class RemoteStoreSink(Sink):
@@ -44,7 +51,8 @@ class RemoteStoreSink(Sink):
     form (``fs.s3a.bucket.<bucket>.*`` — scoped to this sink's bucket
     by construction), and any remaining scheme-generic keys are set
     for the duration of the write and restored to their prior values
-    afterwards.
+    afterwards, under one process-wide lock so concurrent writes
+    cannot interleave their set/restore.
     """
 
     def __init__(
@@ -106,23 +114,24 @@ class RemoteStoreSink(Sink):
         scoped, transient = self.scoped_store_options()
         for k, v in scoped.items():
             hconf.set(k, v)
-        prior = {k: hconf.get(k) for k in transient}
-        for k, v in transient.items():
-            hconf.set(k, v)
-        try:
-            writer = df.write.mode("overwrite")
-            if self.fmt == "csv":
-                writer = writer.option("header", True)
-                if self.compression:
-                    writer = writer.option("compression", self.compression)
-                writer.csv(self._object_prefix(table))
-            else:
-                if self.compression:
-                    writer = writer.option("compression", self.compression)
-                writer.parquet(self._object_prefix(table))
-        finally:
-            for k, old in prior.items():
-                if old is None:
-                    hconf.unset(k)
+        with _TRANSIENT_CONF_LOCK if transient else nullcontext():
+            prior = {k: hconf.get(k) for k in transient}
+            for k, v in transient.items():
+                hconf.set(k, v)
+            try:
+                writer = df.write.mode("overwrite")
+                if self.fmt == "csv":
+                    writer = writer.option("header", True)
+                    if self.compression:
+                        writer = writer.option("compression", self.compression)
+                    writer.csv(self._object_prefix(table))
                 else:
-                    hconf.set(k, old)
+                    if self.compression:
+                        writer = writer.option("compression", self.compression)
+                    writer.parquet(self._object_prefix(table))
+            finally:
+                for k, old in prior.items():
+                    if old is None:
+                        hconf.unset(k)
+                    else:
+                        hconf.set(k, old)

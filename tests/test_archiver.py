@@ -1,11 +1,12 @@
 """Pipeline-semantics tests mirroring the reference's runtime
 invariants (SURVEY §5.3): retention edge cases, FK toposort,
 anti-join complement, idempotent re-run, drift rejection, dry-run,
-failure-suppresses-delete."""
+failure-suppresses-delete, concurrent sink fan-out."""
 
 from __future__ import annotations
 
 import glob
+import threading
 from datetime import datetime
 
 import pytest
@@ -16,6 +17,7 @@ from osarchiver_spark.operators.retention import retention_cutoff, retention_fil
 from osarchiver_spark.plans.jobspec import ArchiveJobSpec, TableSpec
 from osarchiver_spark.plans.schema_drift import SchemaDriftError, check_schema_drift
 from osarchiver_spark.plans.toposort import sort_tables
+from osarchiver_spark.plans.watermark import WatermarkStore
 from osarchiver_spark.sinks.base import CsvSink, ParquetArchiveSink, Sink
 from osarchiver_spark.sources.parquet import load_table
 
@@ -100,7 +102,16 @@ def _spec(dry_run=False):
     )
 
 
-def test_sink_failure_suppresses_delete_and_run_continues(spark, sf_small):
+class _RecordingSink(Sink):
+    def __init__(self):
+        self.tables = []
+
+    def write(self, table, df):
+        df.count()
+        self.tables.append(table)
+
+
+def test_sink_failure_suppresses_delete_and_run_continues(spark, sf_small, tmp_path):
     orders = load_table(spark, sf_small, "orders")
     customer = load_table(spark, sf_small, "customer").withColumn(
         "c_deleted", F.to_timestamp(F.lit("1999-01-01"))
@@ -120,14 +131,103 @@ def test_sink_failure_suppresses_delete_and_run_continues(spark, sf_small):
             if table == "orders":
                 raise RuntimeError("disk full")
 
-    arch = Archiver(spec, [_FailsForOrders()], source_rewriter=lambda t, df: deleted.append(t))
+    first, last = _RecordingSink(), _RecordingSink()
+    watermarks = WatermarkStore(str(tmp_path / "watermarks.json"))
+    arch = Archiver(
+        spec,
+        [first, _FailsForOrders(), last],
+        source_rewriter=lambda t, df: deleted.append(t),
+        watermarks=watermarks,
+    )
     results = {r.table: r for r in arch.run({"orders": orders, "customer": customer})}
     # failed table: delete suppressed, error recorded, run not aborted
     assert results["orders"].error and results["orders"].remaining_rows is None
+    assert "_FailsForOrders" in results["orders"].error
     assert "orders" not in deleted  # no-data-loss invariant
+    assert watermarks.get("orders") is None
+    # every sink is attempted: the healthy ones still wrote the table
+    assert sorted(first.tables) == sorted(last.tables) == ["customer", "orders"]
     # healthy table completed normally in the same run
     assert results["customer"].error is None
     assert "customer" in deleted
+    assert watermarks.get("customer") == retention_cutoff(NOW, 36)
+
+
+def test_no_delete_without_delete_data(spark, sf_small):
+    orders = load_table(spark, sf_small, "orders")
+    spec = ArchiveJobSpec(
+        tables=[TableSpec("orders", "o_orderkey", "o_orderdate")],
+        retention_months=36,
+        now=NOW,
+        archive_data=True,
+        delete_data=False,
+    )
+    rewritten = []
+    (res,) = Archiver(spec, [], source_rewriter=lambda t, df: rewritten.append(t)).run({"orders": orders})
+    assert rewritten == []
+    assert res.error is None and res.archived_rows > 0 and res.remaining_rows is None
+
+
+class _BarrierSink(Sink):
+    def __init__(self, barrier):
+        self.barrier = barrier
+        self.tables = []
+
+    def write(self, table, df):
+        self.barrier.wait()
+        self.tables.append(table)
+
+
+def test_sinks_write_concurrently(spark, sf_small):
+    """Every sink of a table writes in one concurrent phase: two sinks
+    that wait for each other both get through."""
+    orders = load_table(spark, sf_small, "orders")
+    barrier = threading.Barrier(2, timeout=10)
+    sinks = [_BarrierSink(barrier), _BarrierSink(barrier)]
+    (res,) = Archiver(_spec(), sinks).run({"orders": orders})
+    assert res.error is None
+    assert [s.tables for s in sinks] == [["orders"], ["orders"]]
+
+
+def test_archive_jobs_inherit_callers_job_group(spark, sf_small, tmp_path):
+    """The fan-out (and max_parallel_tables) start jobs on side
+    threads; every one must carry the caller's job group."""
+    tables = {
+        "orders": load_table(spark, sf_small, "orders"),
+        "customer": load_table(spark, sf_small, "customer").withColumn(
+            "c_deleted", F.to_timestamp(F.lit("1999-01-01"))
+        ),
+    }
+    spec = ArchiveJobSpec(
+        tables=[
+            TableSpec("orders", "o_orderkey", "o_orderdate"),
+            TableSpec("customer", "c_custkey", "c_deleted"),
+        ],
+        retention_months=36,
+        now=NOW,
+    )
+    sinks = [
+        CsvSink(str(tmp_path / "csv")),
+        ParquetArchiveSink(str(tmp_path / "arch"), {"orders": "o_orderkey", "customer": "c_custkey"}),
+    ]
+    arch = Archiver(spec, sinks, source_rewriter=lambda t, df: df.count(), max_parallel_tables=2)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    group = "test-archiver-job-group"
+    sc.setJobGroup(group, group, False)
+    try:
+        results = arch.run(tables)
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    assert all(r.error is None for r in results)
+    grouped = set(tracker.getJobIdsForGroup(group))
+    stray = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+    assert grouped
+    assert not stray, f"{len(stray)} of {len(stray) + len(grouped)} jobs escaped the group"
 
 
 def test_dry_run_writes_nothing(spark, sf_small, tmp_path):
@@ -196,3 +296,42 @@ def test_additive_schema_evolution_in_archive(spark, sf_small, tmp_path):
         additive_columns(retyped.schema, orders.schema)
     with pytest.raises(SchemaDriftError):
         sink.write("orders", orders.drop("o_orderstatus"))
+
+
+def test_parquet_archive_keeps_source_column_order_with_composite_key(spark, tmp_path):
+    """The pk-dedup anti-join must not move the key columns to the
+    front, or the third write fails the order-sensitive drift check."""
+    schema = "k long, v string, a long"
+    sink = ParquetArchiveSink(str(tmp_path / "arch"), {"t": ["a", "k"]})
+    for lo in (0, 2, 4):
+        rows = [(i, f"v{i}", i % 2) for i in range(lo, lo + 4)]  # overlaps the previous write
+        sink.write("t", spark.createDataFrame(rows, schema))
+    back = sink.read(spark, "t")
+    assert back.columns == ["k", "v", "a"]
+    assert back.count() == back.select("a", "k").distinct().count() == 8
+
+
+def test_parquet_archive_empty_first_partitioned_write(spark, tmp_path):
+    """An empty first write leaves only marker files; the next write
+    starts the archive instead of failing to infer its schema."""
+    df = spark.createDataFrame(
+        [(i, datetime(1999, 1 + i % 12, 1)) for i in range(10)], "id long, deleted_at timestamp"
+    )
+    sink = ParquetArchiveSink(str(tmp_path / "arch"), {"t": "id"}, partition_column="deleted_at")
+    sink.write("t", df.limit(0))
+    assert glob.glob(str(tmp_path / "arch" / "t" / "*"))  # the directory exists
+    sink.write("t", df)
+    sink.write("t", df)  # re-run: still idempotent
+    assert sink.read(spark, "t").count() == 10
+
+
+def test_parquet_archive_unreadable_archive_with_data_raises(spark, tmp_path):
+    """A read failure on an archive that holds data files must raise,
+    never fall through to overwriting it."""
+    path = tmp_path / "arch" / "t"
+    path.mkdir(parents=True)
+    (path / "part-00000.parquet").write_bytes(b"not a parquet file")
+    sink = ParquetArchiveSink(str(tmp_path / "arch"), {"t": "id"})
+    with pytest.raises(Exception):
+        sink.write("t", spark.createDataFrame([(1,)], "id long"))
+    assert (path / "part-00000.parquet").read_bytes() == b"not a parquet file"

@@ -7,6 +7,7 @@ the same code path through the Hadoop FileSystem API."""
 from __future__ import annotations
 
 import glob
+import threading
 from datetime import datetime
 
 from osarchiver_spark.operators.archive import Archiver
@@ -125,3 +126,53 @@ opt_fs.file.impl.disable.cache=false
     remote = glob.glob(str(tmp_path / "container" / "region-a" / "*" / "orders.parquet"))
     assert len(remote) == 1
     assert spark.read.parquet(remote[0]).count() == results[0].archived_rows
+
+
+def test_concurrent_transient_writes_do_not_leak(spark, sf_small, tmp_path):
+    """Two sinks setting one generic key to different values write at
+    the same time: each write sees only its own value, and the key
+    ends at its prior value."""
+    key = "io.archive.concurrent"
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    hconf.set(key, "prior-value")
+    barrier = threading.Barrier(2, timeout=3)
+    seen = {}
+
+    class _Overlapping(RemoteStoreSink):
+        def _object_prefix(self, table):
+            # inside the transient window: wait for the other write, so
+            # without serialization both windows are open at once
+            try:
+                barrier.wait()
+            except threading.BrokenBarrierError:
+                pass
+            seen[self.base_uri] = hconf.get(key)
+            return super()._object_prefix(table)
+
+    sinks = [
+        _Overlapping(f"file://{tmp_path}/{name}", store_options={f"opt_{key}": name})
+        for name in ("a", "b")
+    ]
+    orders = load_table(spark, sf_small, "orders").limit(5)
+    errors = []
+
+    def write(sink):
+        try:
+            sink.begin_run(NOW)
+            sink.write("orders", orders)
+        except Exception as exc:  # noqa: BLE001
+            errors.append(exc)
+
+    threads = [threading.Thread(target=write, args=(s,)) for s in sinks]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    try:
+        assert errors == []
+        assert seen == {f"file://{tmp_path}/a": "a", f"file://{tmp_path}/b": "b"}
+        assert hconf.get(key) == "prior-value"
+        for name in ("a", "b"):
+            assert glob.glob(str(tmp_path / name / "*" / "orders.parquet" / "part-*"))
+    finally:
+        hconf.unset(key)
