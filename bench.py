@@ -1,17 +1,31 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness and the one query runner: registry queries at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
+    python bench.py                                # the HEADLINE suite
+    python bench.py --heavy                        # the sf1-tier list
+    python bench.py --queries a,b --reps 2 --plans TAG
+
+Prints TWO JSON lines: the full record first
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {...}, "sf": <sf>}
+   "queries": {...}, "sf": <sf>, "cpus": <n>,
+   "layers": {name: [record per rep]}}
+(also written to $SPARK_GRAFT_BENCH_OUT, default BENCH_LOCAL.json),
+then a compact totals line with the five slowest queries.
 
 Each query is forced end-to-end with the noop writer (full plan
 execution, no driver-side collect) — the number measures the engine,
-not result serialization.
+not result serialization. A query's time is its best rep; with the
+default one rep that is its one in-session run. The layer record of
+each rep (jobs, stages, tasks, executor run/CPU time, GC, input,
+shuffle and spill bytes, driver-only time) is read from Spark's status
+store after the timer stops.
 """
 
 from __future__ import annotations
 
+import argparse
+import gc
 import json
 import os
 import re
@@ -146,6 +160,26 @@ HEADLINE = [
     "knn_ivf_pq_indexed",
     # round-11 additions
     "index_health",
+]
+
+# The sf1 evidence tier: the heaviest headline queries, run at 10x the
+# fixture rows (tools/make_scale_fixture.py) and at two core counts so
+# per-query ratios show which queries scale with data.
+HEAVY = [
+    "q1_pricing_summary",
+    "approx_sketches",
+    "sampled_percentiles",
+    "lr_train",
+    "adaboost_train",
+    "bpe_train",
+    "bpe_segment",
+    "dedup_simhash_multiprobe",
+    "dedup_minhash_lsh",
+    "pagerank",
+    "knn_ivf_indexed",
+    "knn_ivf_pq_indexed",
+    "knn_ivf_reindexed",
+    "knn_ivf_pq_reindexed",
 ]
 
 
@@ -331,12 +365,8 @@ BENCH_OVERRIDES = {
 }
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([\d.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-    spark = get_spark("osarchiver_spark_bench")
-    registry = all_queries()
+def warm(spark) -> None:
+    """One-time session warm-up, run before any timed query."""
     # warm the session (JVM codegen, noop datasource registration,
     # Python worker pool) so query timings measure the engine, not
     # first-use setup
@@ -401,44 +431,118 @@ def main() -> None:
     import shutil as _shutil
 
     _shutil.rmtree(_warm_root, ignore_errors=True)
-    timings: dict[str, float] = {}
-    total = 0.0
-    for name in HEADLINE:
-        fn = BENCH_OVERRIDES.get(name) or registry.get(name)
-        if fn is None:
-            continue
-        # time plan construction + execution: streaming queries (and
-        # any operator with eager substeps) do real work inside fn()
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        dt = round(time.perf_counter() - t0, 3)
-        timings[name] = dt
-        total += dt
-        # operator-escaping intermediates are transient (auto-released
-        # localCheckpoint) since round 4 and trainers self-release, so
-        # this is a belt-and-braces guard: any future caller-contract
-        # persist is dropped here so query N's cache residue can't tax
-        # query N+1 (each timing stands alone); the no-accumulation
-        # pin in tests/test_plans.py keeps the registry honest
-        spark.catalog.clearCache()
-        # transient (localCheckpoint) blocks and broadcasts only free
-        # once the PYTHON references are collected (the ContextCleaner
-        # acts on JVM weak refs that py4j keeps alive until then) — an
-        # explicit collect stops query N's executor-storage residue
-        # from aging the session under queries N+1.. (r11 optimization
-        # round: isolated steady-state vs in-suite gap was 1.5-2x)
-        del df
-        import gc
 
-        gc.collect()
+
+def resolve(names: list[str]) -> dict:
+    """name -> the callable the bench times (its production override,
+    else the registry entry). Raises ``ValueError`` naming every
+    unknown name; needs no session, so it fails before any Spark work."""
+    registry = all_queries()
+    unknown = [n for n in names if n not in BENCH_OVERRIDES and n not in registry]
+    if unknown:
+        raise ValueError(f"unknown query names: {unknown}")
+    return {n: BENCH_OVERRIDES.get(n) or registry[n] for n in names}
+
+
+def run(spark, names, sf_dir, reps=1, plans_dir=None) -> dict[str, list[dict]]:
+    """Time each query ``reps`` times; returns ``{name: [record per
+    rep]}``. A record holds ``wall_s`` (plan construction + noop-write
+    execution, exactly the timed region), the Spark layer metrics of
+    the query's job group, ``driver_only_s`` (wall minus the union of
+    its stage spans) and ``record_s`` (the time setting the group and
+    reading the metrics took, all of it outside the timer). With ``plans_dir`` set, rep 0 writes the
+    formatted plan to ``<plans_dir>/<name>.txt``."""
+    fns = resolve(names)
+    from perfbench.probe import SparkObserver, union_length
+
+    observer = SparkObserver(spark)
+    # drain the listener bus so jobs run before this call (the warm-up)
+    # are marked seen and never counted as a query's ungrouped jobs
+    observer.jobs(None)
+    if plans_dir:
+        os.makedirs(plans_dir, exist_ok=True)
+    layers: dict[str, list[dict]] = {}
+    for name, fn in fns.items():
+        layers[name] = []
+        for rep in range(reps):
+            group = f"bench:{name}:{rep}"
+            b0 = time.perf_counter()
+            observer.begin(group)
+            begin_s = time.perf_counter() - b0
+            start = time.time()
+            # time plan construction + execution: streaming queries (and
+            # any operator with eager substeps) do real work inside fn()
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            wall = round(time.perf_counter() - t0, 3)
+            t1 = time.perf_counter()
+            rec = observer.record(group)
+            stages = [(s, e) for _, _, s, e in rec.pop("stage_spans") if e is not None]
+            del rec["job_spans"]
+            rec["driver_only_s"] = wall - union_length(stages, start, start + wall)
+            rec["wall_s"] = wall
+            rec["record_s"] = begin_s + time.perf_counter() - t1
+            layers[name].append(
+                {k: round(v, 3) if k.endswith("_s") else int(v) for k, v in rec.items()}
+            )
+            if plans_dir and rep == 0:
+                with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
+                    f.write(
+                        df._sc._jvm.PythonSQLUtils.explainString(
+                            df._jdf.queryExecution(), "formatted"
+                        )
+                    )
+            # operator-escaping intermediates are transient (auto-released
+            # localCheckpoint) since round 4 and trainers self-release, so
+            # this is a belt-and-braces guard: any future caller-contract
+            # persist is dropped here so query N's cache residue can't tax
+            # query N+1 (each timing stands alone); the no-accumulation
+            # pin in tests/test_plans.py keeps the registry honest
+            spark.catalog.clearCache()
+            # transient (localCheckpoint) blocks and broadcasts only free
+            # once the PYTHON references are collected (the ContextCleaner
+            # acts on JVM weak refs that py4j keeps alive until then) — an
+            # explicit collect stops query N's executor-storage residue
+            # from aging the session under queries N+1.. (r11 optimization
+            # round: isolated steady-state vs in-suite gap was 1.5-2x)
+            del df
+            gc.collect()
+    return layers
+
+
+def main(argv: list[str] | None = None) -> None:
+    parser = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    which = parser.add_mutually_exclusive_group()
+    which.add_argument("--queries", help="comma-separated query names (default: HEADLINE)")
+    which.add_argument("--heavy", action="store_true", help="run the sf1-tier list HEAVY")
+    parser.add_argument("--reps", type=int, default=1, help="timed runs per query (default 1)")
+    parser.add_argument("--plans", metavar="TAG", help="write rep-0 plans to plans/TAG/<name>.txt")
+    args = parser.parse_args(argv)
+    names = HEAVY if args.heavy else args.queries.split(",") if args.queries else HEADLINE
+    try:
+        resolve(names)
+    except ValueError as exc:
+        parser.error(str(exc))
+    here = os.path.dirname(os.path.abspath(__file__))
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([\d.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+    spark = get_spark("osarchiver_spark_bench")
+    warm(spark)
+    plans_dir = os.path.join(here, "plans", args.plans) if args.plans else None
+    layers = run(spark, names, sf_dir, args.reps, plans_dir)
+    timings = {name: min(r["wall_s"] for r in recs) for name, recs in layers.items()}
+    total = round(sum(timings.values()), 3)
     full = json.dumps(
         {
             "metric": "osarchiver_spark headline suite wall time",
-            "value": round(total, 3),
+            "value": total,
             "unit": "sec",
             "queries": timings,
             "sf": sf,
+            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)),
+            "layers": layers,
         }
     )
     # The external driver captures only the stdout TAIL and parses the
@@ -450,7 +554,7 @@ def main() -> None:
     print(full)
     out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     try:
-        with open(os.path.join(os.path.dirname(__file__) or ".", out_path), "w") as f:
+        with open(os.path.join(here, out_path), "w") as f:
             f.write(full + "\n")
     except OSError:
         pass  # read-only checkout: stdout still carries the line
@@ -459,7 +563,7 @@ def main() -> None:
         json.dumps(
             {
                 "metric": "osarchiver_spark headline suite wall time",
-                "value": round(total, 3),
+                "value": total,
                 "unit": "sec",
                 "sf": sf,
                 "n_queries": len(timings),

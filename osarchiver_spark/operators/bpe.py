@@ -270,7 +270,7 @@ def bpe_train(
     n_merges: int = 8,
     lowercase: bool = True,
     with_vocab: bool = True,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame | None]:
     """Learn ``n_merges`` BPE merges. Returns (merges, vocab):
     merges = (step, sym_a, sym_b, n) — the model, n_merges rows;
     vocab  = (token, freq, syms) segmented with ALL learned merges —
@@ -279,18 +279,19 @@ def bpe_train(
     ``with_vocab=True``: vocab is returned persisted+materialized —
     the caller owns the cache entry and must ``unpersist()`` it.
     ``with_vocab=False``: the model is the only deliverable; vocab is
-    returned as an UNCACHED lazy plan (materializing it would replay
-    the fold chain) and nothing is left pinned — callers that only
-    want ``merges`` skip a full vocabulary materialization."""
+    ``None`` on both paths and nothing is left pinned — the collapsed
+    path builds no vocab relation, the distributed loop releases its
+    generations without materializing the last one."""
     spark = docs.sparkSession
     collapsed = _train_collapsed(docs, text_col, n_merges, lowercase)
     if collapsed is not None:
         merges, vocab_rows = collapsed
         merges_df = spark.createDataFrame(merges, MERGE_SCHEMA)
-        vocab_df = spark.createDataFrame(vocab_rows, VOCAB_SCHEMA)
+        if not with_vocab:
+            return merges_df, None
         # a driver-local relation: "materialized" by construction and
-        # unpersist() is a no-op, so both with_vocab contracts hold
-        return merges_df, vocab_df
+        # unpersist() is a no-op
+        return merges_df, spark.createDataFrame(vocab_rows, VOCAB_SCHEMA)
     merges, v, parent, cached = _train_loop(docs, text_col, n_merges, lowercase)
     merges_df = spark.createDataFrame(merges, MERGE_SCHEMA)
     if not with_vocab:
@@ -298,7 +299,7 @@ def bpe_train(
             parent.unpersist()
         if cached:
             v.unpersist()
-        return merges_df, v
+        return merges_df, None
     if not cached:
         v = v.persist()
         v.count()  # materialize the final gen before dropping its parent

@@ -102,8 +102,8 @@ def export_training_set_indexed(
     corpus arrives as ``n_batches`` doc_id-ordered drops; each drop is
     a PROBE of the persisted LSH band index (never a corpus re-sketch)
     followed by an APPEND of the drop's bands — the maintenance loop
-    tools/rehearse_sf10_index_chain.py rehearses, here wired through
-    to the full gate → dedup → split → export chain.
+    whose sf10 run is recorded in BENCH_SF10_INDEX_CHAIN.json, here
+    wired through to the full gate → dedup → split → export chain.
 
     Row-identical to :func:`export_training_set` BY CONSTRUCTION, not
     by luck: with id-ordered batches, {intra-batch pairs} ∪

@@ -96,9 +96,28 @@ def run_streaming_cdc_upsert(
     offsets instead of re-reading every file (re-application would be
     a seq-guarded no-op for state, but a full changelog re-read is
     exactly the cost a restart must not pay). Pinned in
-    tests/test_cdc.py::test_resume_after_kill_processes_only_new_files."""
+    tests/test_cdc.py::test_resume_after_kill_processes_only_new_files.
+
+    Target and checkpoint are ONE unit: delete or rebuild them
+    together. A checkpoint with a committed batch but no target would
+    skip every changelog file it has seen and return a state missing
+    their effects, so that case raises ``ValueError`` before the
+    stream starts. A checkpoint with no commit (a crash inside batch
+    0, which Spark replays) restarts normally."""
+    from osarchiver_spark.sinks.base import _hadoop_path_exists, _holds_data_files
+
     if checkpoint_dir is None:
         checkpoint_dir = f"{target_dir.rstrip('/')}__ckpt"
+    commits = f"{checkpoint_dir.rstrip('/')}/commits"
+    if (
+        _hadoop_path_exists(spark, commits)
+        and _holds_data_files(spark, commits)
+        and not _hadoop_path_exists(spark, target_dir)
+    ):
+        raise ValueError(
+            f"checkpoint {checkpoint_dir} has committed batches but target "
+            f"{target_dir} does not exist; delete both or restore the target"
+        )
     reader = (
         spark.readStream.format("parquet")
         .schema(schema)
@@ -111,8 +130,6 @@ def run_streaming_cdc_upsert(
 
     def apply_batch(batch_df: DataFrame, _epoch_id: int) -> None:
         import shutil
-
-        from osarchiver_spark.sinks.base import _hadoop_path_exists
 
         sp = batch_df.sparkSession
         state = (

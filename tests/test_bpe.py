@@ -100,6 +100,21 @@ def test_trainer_stops_when_fully_merged(spark):
     vocab.unpersist()
 
 
+def test_without_vocab_returns_same_merges_and_no_vocab(spark, sf_small):
+    """sf_small's vocabulary is under BPE_VOCAB_CAP, so this is the
+    collapsed (driver-loop) path: ``with_vocab=False`` returns the same
+    model rows and no vocab relation."""
+    from osarchiver_spark.queries.text import BPE_N_MERGES
+    from osarchiver_spark.sources.parquet import load_table
+
+    docs = load_table(spark, sf_small, "documents")
+    merges_v, vocab = bpe_train(docs, "text", n_merges=BPE_N_MERGES)
+    merges_nv, no_vocab = bpe_train(docs, "text", n_merges=BPE_N_MERGES, with_vocab=False)
+    assert vocab is not None and no_vocab is None
+    assert merges_nv.collect() == merges_v.collect()
+    vocab.unpersist()
+
+
 def test_segment_oracle_carries_forward_when_merges_run_dry(spark):
     """The merges run dry after 2 steps on this corpus, well before
     BPE_N_MERGES: the oracle's empty p{i} must carry v{i-1} forward

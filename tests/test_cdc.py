@@ -97,3 +97,36 @@ def test_resume_after_kill_processes_only_new_files(spark, tmp_path):
     new_batches = batches_final - batches_first
     # exactly ONE new micro-batch: the new file, not a re-read of a+b
     assert len(new_batches) == 1, (batches_first, batches_final)
+
+
+def test_checkpoint_without_target_fails_fast(spark, tmp_path):
+    """Target and checkpoint are one unit: a rerun whose target was
+    deleted while its checkpoint holds committed batches must raise,
+    not return a state missing the already-seen files' effects."""
+    import shutil
+
+    import pytest
+
+    watch = tmp_path / "log"
+    watch.mkdir()
+    log = spark.createDataFrame(ROWS, CHANGELOG_SCHEMA)
+    log.coalesce(1).write.parquet(str(watch / "a.parquet"))
+    state = str(tmp_path / "state")
+    run_streaming_cdc_upsert(spark, str(watch), CHANGELOG_SCHEMA, "k", "seq", state).collect()
+    shutil.rmtree(state)
+    with pytest.raises(ValueError, match="state__ckpt"):
+        run_streaming_cdc_upsert(spark, str(watch), CHANGELOG_SCHEMA, "k", "seq", state)
+
+
+def test_checkpoint_without_commit_restarts(spark, tmp_path):
+    """A checkpoint with no committed batch (a crash inside batch 0)
+    is not the mismatch case: the run replays and completes."""
+    watch = tmp_path / "log"
+    watch.mkdir()
+    spark.createDataFrame(ROWS, CHANGELOG_SCHEMA).coalesce(1).write.parquet(
+        str(watch / "a.parquet")
+    )
+    state = str(tmp_path / "state")
+    (tmp_path / "state__ckpt" / "commits").mkdir(parents=True)
+    final = run_streaming_cdc_upsert(spark, str(watch), CHANGELOG_SCHEMA, "k", "seq", state)
+    assert {(r.k, r.v, r.last_seq) for r in final.collect()} == EXPECT
