@@ -1,5 +1,5 @@
 """Benchmark harness and the one query runner: registry queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 fixture) on
 local[$SPARK_GRAFT_CPUS].
 
     python bench.py                                # the HEADLINE suite
@@ -450,8 +450,9 @@ def run(spark, names, sf_dir, reps=1, plans_dir=None) -> dict[str, list[dict]]:
     execution, exactly the timed region), the Spark layer metrics of
     the query's job group, ``driver_only_s`` (wall minus the union of
     its stage spans) and ``record_s`` (the time setting the group and
-    reading the metrics took, all of it outside the timer). With ``plans_dir`` set, rep 0 writes the
-    formatted plan to ``<plans_dir>/<name>.txt``."""
+    reading the metrics took, all of it outside the timer). With
+    ``plans_dir`` set, rep 0 writes the formatted plan to
+    ``<plans_dir>/<name>.txt``."""
     fns = resolve(names)
     from perfbench.probe import SparkObserver, union_length
 
@@ -520,6 +521,8 @@ def main(argv: list[str] | None = None) -> None:
     parser.add_argument("--plans", metavar="TAG", help="write rep-0 plans to plans/TAG/<name>.txt")
     args = parser.parse_args(argv)
     names = HEAVY if args.heavy else args.queries.split(",") if args.queries else HEADLINE
+    if args.reps < 1:
+        parser.error("--reps must be at least 1")
     try:
         resolve(names)
     except ValueError as exc:

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -104,8 +105,6 @@ def test_checkpoint_without_target_fails_fast(spark, tmp_path):
     deleted while its checkpoint holds committed batches must raise,
     not return a state missing the already-seen files' effects."""
     import shutil
-
-    import pytest
 
     watch = tmp_path / "log"
     watch.mkdir()
