@@ -142,12 +142,7 @@ def run(argv: list[str] | None = None) -> int:
     rc = 0
     for configured in archivers:
         logging.info("running archiver %s (src %s)", configured.name, configured.src_name)
-        archiver = Archiver(
-            configured.spec,
-            configured.sinks,
-            watermarks=configured.watermarks(),
-            max_parallel_tables=configured.parallel_tables,
-        )
+        archiver = Archiver(configured.spec, configured.sinks, watermarks=configured.watermarks())
         results = archiver.run(configured.dataframes(spark))
         for r in results:
             if r.error:

@@ -21,8 +21,12 @@ Scale design notes:
   when the archived set came from this run's own filter — a pure
   second pushdown scan, no shuffle at all; the anti-join path exists
   for externally-supplied archived sets;
-- per-table jobs are independent — on a real cluster they can run
-  as parallel job groups; ordering only constrains FK-related tables.
+- tables are pipelined, deletes are not: table k+1's archive phase
+  runs on one lookahead thread while table k's delete (rewrite, then
+  watermark advance) runs on the caller's thread, one delete at a
+  time in FK order. If a delete raises, the run re-raises once the
+  lookahead has drained: sinks may already hold the next table's rows
+  (they are idempotent), and nothing is deleted.
 """
 
 from __future__ import annotations
@@ -42,7 +46,7 @@ from osarchiver_spark.operators.retention import (
     retention_predicate,
 )
 from osarchiver_spark.plans.jobspec import ArchiveJobSpec, TableSpec
-from osarchiver_spark.plans.toposort import table_generations
+from osarchiver_spark.plans.toposort import sort_tables
 from osarchiver_spark.sinks.base import Sink
 
 
@@ -77,41 +81,43 @@ class Archiver:
     # to the cutoff ONLY after the table's run fully succeeds.
     watermarks: object | None = None
 
-    # run tables of the same FK generation concurrently (Spark's
-    # scheduler interleaves the jobs across executors); FK ordering
-    # is preserved BETWEEN generations.
-    max_parallel_tables: int = 1
-
     def run(self, dataframes: dict[str, DataFrame]) -> list[TableRunResult]:
         if not self.spec.archive_data and not self.spec.delete_data:
             # Reference short-circuit (archiver.py:87-90).
             return []
+        tables = sort_tables(self.spec.eligible_tables())
+        missing = [t.name for t in tables if t.name not in dataframes]
+        if missing:  # before any sink call or Spark job
+            raise ValueError(f"no DataFrame for eligible table(s): {', '.join(missing)}")
         now = self.spec.now or frozen_now()
         cutoff = retention_cutoff(now, self.spec.retention_months)
         for sink in self.sinks:
             sink.begin_run(now)  # dated per-run namespace for file sinks
         results: list[TableRunResult] = []
-        for gen in table_generations(self.spec.eligible_tables()):
-            if self.max_parallel_tables > 1 and len(gen) > 1:
-                # one wrap per table: each thread gets its own copy of
-                # the caller's local properties (job group included)
-                with ThreadPoolExecutor(max_workers=self.max_parallel_tables) as ex:
-                    futures = [
-                        ex.submit(
-                            inheritable_thread_target(dataframes[t.name].sparkSession)(
-                                self._run_table
-                            ),
-                            t, dataframes[t.name], cutoff,
-                        )
-                        for t in gen
-                    ]
-                    results.extend(f.result() for f in futures)
-            else:
-                for tspec in gen:
-                    results.append(self._run_table(tspec, dataframes[tspec.name], cutoff))
+        with ThreadPoolExecutor(max_workers=1) as lookahead:  # drains before a raise leaves run
+
+            def archive(t: TableSpec):  # one wrap per table: its own copy of the job group
+                df = dataframes[t.name]
+                return lookahead.submit(inheritable_thread_target(df.sparkSession)(self._archive), t, df, cutoff)
+
+            pending = archive(tables[0]) if tables else None
+            for k, tspec in enumerate(tables):
+                result, remaining = pending.result()
+                if k + 1 < len(tables):
+                    pending = archive(tables[k + 1])  # overlaps this table's delete
+                if result.error is None and not result.dry_run:
+                    if remaining is not None and self.source_rewriter is not None:
+                        self.source_rewriter(tspec.name, remaining)  # type: ignore[operator]
+                    if self.watermarks is not None:
+                        self.watermarks.advance(tspec.name, cutoff)  # type: ignore[attr-defined]
+                results.append(result)
         return results
 
-    def _run_table(self, tspec: TableSpec, df: DataFrame, cutoff: datetime) -> TableRunResult:
+    def _archive(
+        self, tspec: TableSpec, df: DataFrame, cutoff: datetime
+    ) -> tuple[TableRunResult, DataFrame | None]:
+        """One table's archive phase; returns its result and the
+        complement to rewrite (None when nothing is to be rewritten)."""
         assert tspec.deleted_column is not None
         pred = retention_predicate(tspec.deleted_column, cutoff)
         if self.watermarks is not None:
@@ -123,12 +129,12 @@ class Archiver:
         archived = df.filter(pred)
         if self.spec.dry_run:
             # Plan-only: report would-be effects, touch nothing.
-            return TableRunResult(tspec.name, archived.count(), None, dry_run=True)
+            return TableRunResult(tspec.name, archived.count(), None, dry_run=True), None
         sinks = self.sinks if self.spec.archive_data else []
         if sinks:
             archived = archived.cache()  # one scan feeds N sinks
         # negated-predicate complement: no join/shuffle (module docstring)
-        remaining = df.filter(~pred | df[tspec.deleted_column].isNull())
+        remaining = df.filter(~pred | df[tspec.deleted_column].isNull()) if self.spec.delete_data else None
         ex = ThreadPoolExecutor(max_workers=len(sinks) + 2)
 
         def submit(fn, *args):
@@ -140,7 +146,7 @@ class Archiver:
             with ex:
                 archived_count = submit(archived.count)
                 writes = [submit(sink.write, tspec.name, archived) for sink in sinks]
-                remaining_count = submit(remaining.count) if self.spec.delete_data else None
+                remaining_count = submit(remaining.count) if remaining is not None else None
         finally:
             if sinks:
                 archived.unpersist()  # the pool has drained
@@ -151,18 +157,9 @@ class Archiver:
             # sinks' and tables' completed work stands (archiver.py:97-103).
             sink, exc = failed[0]
             error = f"sink {type(sink).__name__} failed for {tspec.name}: {exc}"
-            return TableRunResult(tspec.name, n_archived, None, dry_run=False, error=error)
-        remaining_n = None
-        if remaining_count is not None:
-            remaining_n = remaining_count.result()
-            if self.source_rewriter is not None:
-                self.source_rewriter(tspec.name, remaining)  # type: ignore[operator]
-        self._advance_watermark(tspec.name, cutoff)
-        return TableRunResult(tspec.name, n_archived, remaining_n, dry_run=False)
-
-    def _advance_watermark(self, table: str, cutoff: datetime) -> None:
-        if self.watermarks is not None:
-            self.watermarks.advance(table, cutoff)  # type: ignore[attr-defined]
+            return TableRunResult(tspec.name, n_archived, None, dry_run=False, error=error), None
+        n_remaining = remaining_count.result() if remaining_count is not None else None
+        return TableRunResult(tspec.name, n_archived, n_remaining, dry_run=False), remaining
 
 
 def archive_and_remaining(

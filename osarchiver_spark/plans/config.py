@@ -100,10 +100,6 @@ class ConfiguredArchiver:
     # optional cross-run incremental state (plans/watermark.py),
     # from ``watermark_file=`` in [src:*]
     watermark_file: str | None = None
-    # run FK-independent tables of one generation concurrently
-    # (``parallel_tables=`` in [archiver:*]; the reference is strictly
-    # sequential, main.py:89-91 — this is the cluster upgrade)
-    parallel_tables: int = 1
 
     def watermarks(self):
         if self.watermark_file is None:
@@ -320,7 +316,6 @@ def load_config(
                     where_sql=where_sql,
                     jdbc=jdbc_cfg,
                     watermark_file=src.get("watermark_file"),
-                    parallel_tables=int(arch.get("parallel_tables", "1")),
                 )
             )
     return archivers

@@ -21,10 +21,7 @@ from osarchiver_spark.plans.jobspec import TableSpec
 def table_generations(tables: list[TableSpec]) -> list[list[TableSpec]]:
     """Children-first topological GENERATIONS over declared FK edges:
     every table in generation g only has parents in generations > g,
-    so all tables within one generation are mutually independent and
-    can run as concurrent Spark job groups (the reference is strictly
-    sequential, main.py:89-91 — parallel generations is the cluster
-    upgrade).
+    so all tables within one generation are mutually independent.
 
     Deterministic: within a generation, input order is kept. Circular
     FK groups can't be ordered; like the reference's escape hatch

@@ -36,10 +36,10 @@ from datetime import datetime
 class WatermarkStore:
     """Per-table high-watermark persistence (JSON file).
 
-    ``advance`` is a read-modify-write of the whole file; the Archiver
-    calls it from concurrent table threads when ``max_parallel_tables
-    > 1``, so it serializes on a per-store lock (two tables advancing
-    at once must not drop each other's entry)."""
+    ``advance`` is a read-modify-write of the whole file, serialized on
+    a per-store lock (two advances at once must not drop each other's
+    entry); ``get`` may run on the Archiver's lookahead thread beside
+    the caller's delete, and sees either file version (tmp+rename)."""
 
     def __init__(self, path: str):
         self.path = path

@@ -16,10 +16,10 @@ Backends re-expressed Spark-first:
 A 100 TB note: every sink takes the *same* cached DataFrame — one
 scan feeds N destinations (reference fan-out, archiver.py:44-64) —
 and the Archiver runs the sink writes concurrently on that one cached
-set, so a sink's ``write`` must be safe to call beside other sinks'.
-The source delete waits until every sink has landed. Writes are
-partitioned by a date column when available, so the archive lays out
-as date-pruned parquet.
+set, so a sink's ``write`` must be safe to call beside other sinks'
+and beside the previous table's source rewrite. The source delete
+waits until every sink has landed. Writes are partitioned by a date
+column when available, so the archive lays out as date-pruned parquet.
 """
 
 from __future__ import annotations

@@ -35,8 +35,11 @@ from osarchiver_spark.sinks.base import Sink
 _S3A_GLOBAL = re.compile(r"^fs\.s3a\.(?!bucket\.)(?P<rest>.+)$")
 
 # held across set -> write -> restore of transient keys: concurrent
-# writes (sink fan-out, max_parallel_tables) would otherwise interleave
-# their set/restore on the shared Hadoop conf and leak or unset values
+# writes (one table's sink fan-out) would otherwise interleave their
+# set/restore on the shared Hadoop conf and leak or unset values. The
+# Archiver runs the next table's sinks on its lookahead thread beside
+# the caller's source rewrite, which does not take this lock: a
+# rewrite to the same scheme can see the keys while they are set
 _TRANSIENT_CONF_LOCK = threading.Lock()
 
 

@@ -1,12 +1,14 @@
 """Pipeline-semantics tests mirroring the reference's runtime
 invariants (SURVEY §5.3): retention edge cases, FK toposort,
 anti-join complement, idempotent re-run, drift rejection, dry-run,
-failure-suppresses-delete, concurrent sink fan-out."""
+failure-suppresses-delete, concurrent sink fan-out, cross-table
+pipeline (the next table archives while this one's delete runs)."""
 
 from __future__ import annotations
 
 import glob
 import threading
+import time
 from datetime import datetime
 
 import pytest
@@ -102,6 +104,25 @@ def _spec(dry_run=False):
     )
 
 
+def _fk_spec(dry_run=False):
+    """orders -> customer: the child (orders) is deleted first."""
+    return ArchiveJobSpec(
+        tables=[
+            TableSpec("customer", "c_custkey", "c_deleted"),
+            TableSpec("orders", "o_orderkey", "o_orderdate", foreign_keys={"o_custkey": ("customer", "c_custkey")}),
+        ],
+        retention_months=36,
+        now=NOW,
+        dry_run=dry_run,
+    )
+
+
+def _fk_tables(spark, sf):
+    customer = load_table(spark, sf, "customer").withColumn("c_deleted", F.to_timestamp(F.lit("1998-01-01")))
+    return {"orders": load_table(spark, sf, "orders"), "customer": customer}
+
+
+
 class _RecordingSink(Sink):
     def __init__(self):
         self.tables = []
@@ -190,7 +211,7 @@ def test_sinks_write_concurrently(spark, sf_small):
 
 
 def test_archive_jobs_inherit_callers_job_group(spark, sf_small, tmp_path):
-    """The fan-out (and max_parallel_tables) start jobs on side
+    """The fan-out and the lookahead archive phase start jobs on side
     threads; every one must carry the caller's job group."""
     tables = {
         "orders": load_table(spark, sf_small, "orders"),
@@ -200,7 +221,7 @@ def test_archive_jobs_inherit_callers_job_group(spark, sf_small, tmp_path):
     }
     spec = ArchiveJobSpec(
         tables=[
-            TableSpec("orders", "o_orderkey", "o_orderdate"),
+            TableSpec("orders", "o_orderkey", "o_orderdate", foreign_keys={"o_custkey": ("customer", "c_custkey")}),
             TableSpec("customer", "c_custkey", "c_deleted"),
         ],
         retention_months=36,
@@ -210,7 +231,7 @@ def test_archive_jobs_inherit_callers_job_group(spark, sf_small, tmp_path):
         CsvSink(str(tmp_path / "csv")),
         ParquetArchiveSink(str(tmp_path / "arch"), {"orders": "o_orderkey", "customer": "c_custkey"}),
     ]
-    arch = Archiver(spec, sinks, source_rewriter=lambda t, df: df.count(), max_parallel_tables=2)
+    arch = Archiver(spec, sinks, source_rewriter=lambda t, df: df.count())
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     bus = sc._jsc.sc().listenerBus()
@@ -231,11 +252,193 @@ def test_archive_jobs_inherit_callers_job_group(spark, sf_small, tmp_path):
 
 
 def test_dry_run_writes_nothing(spark, sf_small, tmp_path):
-    orders = load_table(spark, sf_small, "orders")
-    arch = Archiver(_spec(dry_run=True), [CsvSink(str(tmp_path / "csv"))])
-    res = arch.run({"orders": orders})
-    assert res[0].dry_run and res[0].archived_rows > 0
+    rewritten = []
+    watermarks = WatermarkStore(str(tmp_path / "watermarks.json"))
+    arch = Archiver(
+        _fk_spec(dry_run=True),
+        [CsvSink(str(tmp_path / "csv"))],
+        source_rewriter=lambda t, df: rewritten.append(t),
+        watermarks=watermarks,
+    )
+    res = arch.run(_fk_tables(spark, sf_small))
+    assert [r.table for r in res] == ["orders", "customer"]
+    assert all(r.dry_run and r.archived_rows > 0 and r.remaining_rows is None for r in res)
     assert glob.glob(str(tmp_path / "**" / "part-*"), recursive=True) == []
+    assert rewritten == []
+    assert watermarks.get("customer") is None and watermarks.get("orders") is None
+
+
+def test_missing_table_fails_before_any_work(spark, sf_small):
+    """Every eligible table needs a DataFrame; a missing one raises
+    before any sink call, Spark job or delete."""
+    calls = []
+
+    class _CallSink(Sink):
+        def begin_run(self, now):
+            calls.append("begin_run")
+
+        def write(self, table, df):
+            calls.append(table)
+
+    spec = _fk_spec()
+    spec.tables.append(TableSpec("events", "event_id", "ts"))
+    arch = Archiver(spec, [_CallSink()], source_rewriter=lambda t, df: calls.append(("rewrite", t)))
+    orders = load_table(spark, sf_small, "orders")
+    sc = spark.sparkContext
+    group = "test-archiver-missing-table"
+    sc.setJobGroup(group, group, False)
+    try:
+        with pytest.raises(ValueError) as err:
+            arch.run({"orders": orders})
+    finally:
+        sc._jsc.clearJobGroup()
+    assert "customer" in str(err.value) and "events" in str(err.value)
+    assert "orders" not in str(err.value)
+    assert calls == []
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_next_table_archives_during_delete(spark, sf_small):
+    """The parent's sink write runs while the child's rewriter runs
+    (they meet on one barrier); the parent's rewrite still starts only
+    after the child's has returned."""
+    barrier = threading.Barrier(2, timeout=10)
+    events = []
+
+    class _ParentMeetsChildDelete(Sink):
+        def write(self, table, df):
+            if table == "customer":
+                barrier.wait()
+
+    def rewriter(table, df):
+        events.append(("start", table))
+        if table == "orders":
+            barrier.wait()
+        events.append(("end", table))
+
+    results = Archiver(_fk_spec(), [_ParentMeetsChildDelete()], source_rewriter=rewriter).run(
+        _fk_tables(spark, sf_small)
+    )
+    assert [(r.table, r.error) for r in results] == [("orders", None), ("customer", None)]
+    assert events == [("start", "orders"), ("end", "orders"), ("start", "customer"), ("end", "customer")]
+
+
+def test_failed_delete_drains_lookahead_and_rerun_is_clean(spark, sf_small, tmp_path):
+    """A child rewrite that raises while the parent archives: run
+    re-raises after the parent's sinks landed, the parent is neither
+    rewritten nor advanced, and a healthy re-run leaves the archive
+    equal to one clean run (sinks are idempotent)."""
+    tables = _fk_tables(spark, sf_small)
+    parent_started = threading.Event()
+    finished = []
+
+    class _SlowParent(Sink):
+        def write(self, table, df):
+            if table == "customer":
+                parent_started.set()
+                time.sleep(0.5)
+            finished.append(table)
+
+    rewritten = []
+
+    def failing_rewriter(table, df):
+        rewritten.append(table)
+        if table == "orders":
+            assert parent_started.wait(10)
+            raise RuntimeError("source rewrite failed")
+
+    watermarks = WatermarkStore(str(tmp_path / "watermarks.json"))
+    pks = {"orders": "o_orderkey", "customer": "c_custkey"}
+    sink = ParquetArchiveSink(str(tmp_path / "arch"), pks)
+    with pytest.raises(RuntimeError, match="source rewrite failed"):
+        Archiver(_fk_spec(), [sink, _SlowParent()], source_rewriter=failing_rewriter, watermarks=watermarks).run(tables)
+    assert sorted(finished) == ["customer", "orders"]  # the lookahead drained first
+    assert rewritten == ["orders"]
+    assert watermarks.get("customer") is None and watermarks.get("orders") is None
+
+    again = Archiver(_fk_spec(), [sink], source_rewriter=lambda t, df: None, watermarks=watermarks).run(tables)
+    assert all(r.error is None for r in again)
+    clean = ParquetArchiveSink(str(tmp_path / "clean"), pks)
+    Archiver(_fk_spec(), [clean]).run(tables)
+    for t, pk in pks.items():
+        got, want = sink.read(spark, t), clean.read(spark, t)
+        assert got.count() == got.select(pk).distinct().count() == want.count() > 0
+        assert got.exceptAll(want).count() == want.exceptAll(got).count() == 0
+
+
+def test_cancel_job_group_stops_lookahead_sink(spark, sf_small):
+    """cancelJobGroup on a run's group reaches the lookahead thread:
+    the parent's slow sink job, running during the child's delete, is
+    cancelled; the run ends promptly and the parent is not deleted."""
+    tables = _fk_tables(spark, sf_small)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    group = "test-archiver-cancel"
+    started, cancelled = threading.Event(), threading.Event()
+
+    @F.udf("long")
+    def slow(k):
+        import time
+
+        time.sleep(0.5)
+        return k
+
+    class _SlowParent(Sink):
+        def write(self, table, df):
+            if table == "customer":
+                started.set()
+                df.coalesce(1).select(slow("c_custkey")).write.format("noop").mode("overwrite").save()
+
+    rewritten = []
+
+    def rewriter(table, df):
+        if table == "orders":  # the child's delete spans the cancel
+            assert started.wait(60) and cancelled.wait(60)
+        rewritten.append(table)
+
+    arch = Archiver(_fk_spec(), [_SlowParent()], source_rewriter=rewriter)
+    box = []
+
+    def work():
+        sc.setJobGroup(group, group, interruptOnCancel=True)
+        try:
+            box.append(arch.run(tables))
+        except Exception as exc:  # noqa: BLE001
+            box.append(exc)
+        finally:
+            sc._jsc.clearJobGroup()
+
+    def active_in_group():
+        return set(tracker.getActiveJobsIds()) & set(tracker.getJobIdsForGroup(group))
+
+    bus.waitUntilEmpty()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    worker = threading.Thread(target=work)
+    worker.start()
+    try:
+        assert started.wait(60)
+        slow_jobs: set = set()
+        deadline = time.monotonic() + 60
+        while not slow_jobs and time.monotonic() < deadline:  # a job still active 2 s later is the slow one
+            seen = active_in_group()
+            time.sleep(2)
+            slow_jobs = seen & active_in_group()
+        assert slow_jobs
+    finally:
+        t0 = time.monotonic()
+        sc.cancelJobGroup(group)
+        cancelled.set()
+        worker.join(timeout=60)
+    assert not worker.is_alive()
+    assert time.monotonic() - t0 < 20  # uncancelled, the slow write alone takes over a minute
+    assert rewritten == ["orders"] and len(box) == 1
+    if isinstance(box[0], list):  # else a cancelled count raised out of run
+        assert [(r.table, r.error is not None) for r in box[0]] == [("orders", False), ("customer", True)]
+    bus.waitUntilEmpty()
+    assert not active_in_group()
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped_before
 
 
 def test_parquet_archive_idempotent_rerun(spark, sf_small, tmp_path):

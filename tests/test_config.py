@@ -280,7 +280,9 @@ directory={tmp_path}/arch
     assert WatermarkStore(f"{tmp_path}/orders.wm").get("orders") == datetime(1998, 1, 1)
 
 
-def test_parallel_tables_option_wires_through(spark, sf_small, tmp_path):
+def test_removed_parallel_tables_key_still_loads_and_runs(spark, sf_small, tmp_path):
+    """``parallel_tables=`` is no longer an option; an ini that still
+    sets it loads and runs, the key ignored like any unknown key."""
     ini = f"""
 [archiver:multi]
 src=multi_src
@@ -301,12 +303,10 @@ backend=parquet
 directory={tmp_path}/arch
 """
     (a,) = load_config(text=ini)
-    assert a.parallel_tables == 4
+    assert not hasattr(a, "parallel_tables")
     from osarchiver_spark.operators.archive import Archiver as A
 
-    results = A(
-        a.spec, a.sinks, watermarks=a.watermarks(), max_parallel_tables=a.parallel_tables
-    ).run(a.dataframes(spark))
+    results = A(a.spec, a.sinks, watermarks=a.watermarks()).run(a.dataframes(spark))
     assert results[0].error is None and results[0].archived_rows > 0
 
 
