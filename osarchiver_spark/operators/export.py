@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from osarchiver_spark import storage
+
 SPLITS = ("train", "val", "test")
 
 
@@ -150,7 +152,6 @@ def export_training_set_indexed(
         _begin_epoch,
         _epoch_guard,
         _mark_epoch,
-        _path_exists,
     )
 
     if n_batches < 1:
@@ -198,17 +199,15 @@ def export_training_set_indexed(
             "overwrite" if i == 0 else "append"
         ).parquet(index_dir)
         batch_edges.write.mode(
-            "overwrite" if not _path_exists(spark, pairs_dir) else "append"
+            "overwrite" if not storage.exists(spark, pairs_dir) else "append"
         ).parquet(pairs_dir)
         _mark_epoch(spark, marker_dir, i)
 
     # an edge-free corpus writes only _SUCCESS markers; hand back a
     # typed empty graph for that case only (streaming/text_store.py)
-    from pyspark.errors import AnalysisException
-
-    try:
+    if storage.list_files(spark, pairs_dir):
         pairs = spark.read.parquet(pairs_dir)
-    except AnalysisException:
+    else:
         pairs = spark.createDataFrame([], "doc_a long, doc_b long")
     return _finalize_export(spark, docs, pairs, out_dir, compression, pack_train)
 

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from osarchiver_spark import storage
+
 #: policy defaults — chosen from the sf10 drift rehearsal's measured
 #: trajectory: a healthy fresh build sits at skew ≈1.3–1.6 and
 #: per-query read ≈ the balanced nprobe/k ideal; the 3-drop drifted
@@ -130,22 +132,14 @@ def store_layout_stats(spark: SparkSession, path: str) -> dict:
     """Filesystem fragmentation stats for a hive-partitioned store:
     (n_partitions, n_files, max_files_per_partition, total_bytes,
     max_file_bytes). One recursive listing, no data read."""
-    from osarchiver_spark.operators.maintenance import _fs_and_path
-
-    fs, hpath, _ = _fs_and_path(spark, path)
     per_part: dict[str, int] = {}
     n_files = total = max_file = 0
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")):
-            continue
-        parent = st.getPath().getParent().getName()
+    for f, size in storage.list_files(spark, path):
+        parent = f.rsplit("/", 2)[-2]
         per_part[parent] = per_part.get(parent, 0) + 1
         n_files += 1
-        total += st.getLen()
-        max_file = max(max_file, st.getLen())
+        total += size
+        max_file = max(max_file, size)
     return {
         "n_partitions": len(per_part),
         "n_files": n_files,

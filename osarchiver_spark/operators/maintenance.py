@@ -6,13 +6,11 @@ scan planning (footer reads, task scheduling) dominates every restore
 query — the classic small-file problem. Compaction rewrites a parquet
 directory into ceil(bytes / target) files of ~target size.
 
-The rewrite goes to a sibling temp directory first and swaps in via
-rename, so a crash mid-compaction leaves the original intact (the
-same archive-before-delete discipline as the pipeline itself). On
-HDFS/local the swap is an atomic metadata rename; on object stores
-rename is copy+delete — there, prefer writing to a NEW dated prefix
-and flipping the catalog/manifest pointer instead of swapping in
-place.
+The rewrite goes through ``storage.swap_in``: a sibling temp
+directory first, then a checked two-rename swap, so a crash
+mid-compaction leaves one complete copy that ``storage.recover``
+puts back on the next swap or stream open (the same
+archive-before-delete discipline as the pipeline itself).
 """
 
 from __future__ import annotations
@@ -21,48 +19,13 @@ import math
 
 from pyspark.sql import SparkSession
 
-
-def _fs_and_path(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, hpath, jvm
+from osarchiver_spark import storage
 
 
 def data_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(n_data_files, total_bytes) for a parquet directory."""
-    fs, hpath, _ = _fs_and_path(spark, path)
-    n = 0
-    total = 0
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")):
-            continue
-        n += 1
-        total += st.getLen()
-    return n, total
-
-
-def _swap_in(spark: SparkSession, path: str, write_to_tmp) -> None:
-    """Crash-safe replace of ``path``: ``write_to_tmp(tmp)`` writes the
-    new copy to a sibling temp dir, then a three-step rename swaps it
-    in — at every instant at least one complete copy exists under a
-    predictable name (old aside -> tmp in -> old gone)."""
-    fs, hpath, jvm = _fs_and_path(spark, path)
-    tmp = path.rstrip("/") + "__compacting"
-    tmp_path = jvm.org.apache.hadoop.fs.Path(tmp)
-    if fs.exists(tmp_path):
-        fs.delete(tmp_path, True)  # stale leftover from a crashed run
-    write_to_tmp(tmp)
-    old = path.rstrip("/") + "__precompact"
-    old_path = jvm.org.apache.hadoop.fs.Path(old)
-    if fs.exists(old_path):
-        fs.delete(old_path, True)
-    fs.rename(hpath, old_path)
-    fs.rename(tmp_path, hpath)
-    fs.delete(old_path, True)
+    files = storage.list_files(spark, path)
+    return len(files), sum(n for _, n in files)
 
 
 def compact_parquet_dir(
@@ -76,7 +39,7 @@ def compact_parquet_dir(
     if before <= n_out:
         return before, before  # already compact enough
     df = spark.read.parquet(path)
-    _swap_in(
+    storage.swap_in(
         spark, path,
         lambda tmp: df.repartition(n_out).write.mode("overwrite").parquet(tmp),
     )
@@ -113,7 +76,7 @@ def compact_partitioned_store(
     groups over the default shuffle partitions, so two salts of one
     partition can collide into one task and merge into a ~2×-target
     file the per-partition file-count early-exit would then never
-    split (r10 ADVICE item 2). The pinning precomputes, per global
+    split. The pinning precomputes, per global
     group id gid ∈ [0, Σfiles), a small integer key whose
     murmur3-hash lands in shuffle partition gid (repartition(N, col)
     IS pmod(hash(col), N) — one ~64·N-row driver-side probe job), and
@@ -122,34 +85,25 @@ def compact_partitioned_store(
     after the shuffle (the band index's band_key sort, which its
     row-group min/max skipping relies on). Content is preserved
     exactly (pure physical re-layout — fingerprint identity pinned in
-    tests); the swap is the same crash-safe three-step rename as
+    tests); the swap is the same ``storage.swap_in`` as
     compact_parquet_dir. Returns (files_before, files_after)."""
     from pyspark.sql import functions as F
 
     from urllib.parse import unquote
 
-    fs, hpath, jvm = _fs_and_path(spark, path)
-    # dir value -> (files, bytes); the key is the DECODED partition
-    # value (hive percent-escapes special chars in directory names,
-    # e.g. 'a:b' -> 'a%3Ab') and None for __HIVE_DEFAULT_PARTITION__,
-    # so the mapping join below matches cast(col as string) exactly
+    # dir value -> (files, bytes, max file bytes); the key is the
+    # DECODED value (hive escapes 'a:b' as 'a%3Ab') and None for
+    # __HIVE_DEFAULT_PARTITION__, so the mapping join below matches
+    # cast(col as string) exactly
     per_part: dict[str | None, tuple[int, int, int]] = {}
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if not st.isDirectory() or "=" not in name:
+    for f, size in storage.list_files(spark, path):
+        name = f.rsplit("/", 2)[-2]
+        if "=" not in name:
             continue
         raw = name.split("=", 1)[1]
         value = None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
-        n = b = max_b = 0
-        it = fs.listFiles(st.getPath(), True)
-        while it.hasNext():
-            f = it.next()
-            if f.getPath().getName().startswith(("_", ".")):
-                continue
-            n += 1
-            b += f.getLen()
-            max_b = max(max_b, f.getLen())
-        per_part[value] = (n, b, max_b)
+        n, b, max_b = per_part.get(value, (0, 0, 0))
+        per_part[value] = (n + 1, b + size, max(max_b, size))
     if not per_part:
         raise ValueError(f"{path} has no {partition_col}=* partition dirs")
     before = sum(n for n, _, _ in per_part.values())
@@ -262,7 +216,7 @@ def compact_partitioned_store(
             f"aborting before the swap — original left untouched."
         )
 
-    _swap_in(
+    storage.swap_in(
         spark, path,
         lambda tmp: salted.write.mode("overwrite")
         .partitionBy(partition_col)

@@ -11,8 +11,6 @@ tests/test_similarity.py and tests/test_ivf.py.
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -23,6 +21,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from osarchiver_spark import storage
 from osarchiver_spark.functions.vectors import as_double, norm
 from osarchiver_spark.operators.ivf import (
     INDEXED_PROBE_MAX_QUERIES,
@@ -104,40 +103,34 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _staged_store_build(standing_index: DataFrame, drop_index: DataFrame, idx_dir: str) -> None:
-    """Write the standing store and the drop batch CONCURRENTLY (r12
-    optimization round, guide §2.6 + the staged-publish discipline):
+    """Write the standing store and the drop batch CONCURRENTLY:
     concurrent writers to one parquet root are unsafe, so the drop
     batch lands in its own staging root while the standing overwrite
-    runs, and its cid=* part files are then MOVED into the standing
-    layout — a metadata-only publish. Row-identical to the former
-    sequential ``mode("append")`` (same two write batches under the
-    same frozen models; Spark part-file names carry a job-unique UUID
-    so moves cannot collide), but the drop's scan/assign/encode job no
-    longer waits behind the standing write's commit — the commit wall
-    this removes locally is the same one a 100 TB store append pays.
-    Re-certified against the append==one-shot oracle by every ANN
-    chain's bit-exact parity run.
+    runs, and ``storage.publish_partitions`` then moves its cid=* part
+    files into the standing layout, one ``FileSystem.rename`` each.
+    Row-identical to a sequential overwrite + ``mode("append")`` (same
+    two write batches under the same frozen models), but the drop's
+    scan/assign/encode job no longer waits behind the standing write's
+    commit. Every ANN chain's bit-exact parity run re-certifies it.
 
-    Implementation is local-fs (os.replace): the chain stores always
-    live under the local temp dir, and any other URI scheme is
-    rejected before the first write. On HDFS/object stores the same
-    publish is a FileSystem.rename / manifest swap — the discipline,
-    not the syscall, is what transfers."""
+    The store must be a local path: the staging root is registered
+    with ``reap_at_exit``, a Python ``rmtree`` at process exit, when
+    the JVM may be gone; any other URI scheme is rejected before the
+    first write."""
     parsed = urlparse(idx_dir)
     if parsed.scheme not in ("", "file"):
         raise ValueError(
-            f"staged store publish moves files with os.replace and needs a "
-            f"local path, got {idx_dir!r}"
+            f"the staged store's staging root is removed at exit by a "
+            f"Python rmtree and needs a local path, got {idx_dir!r}"
         )
-    local_idx = parsed.path if parsed.scheme else idx_dir
     stage_dir = idx_dir.rstrip("/") + "__stage"
-    local_stage = local_idx.rstrip("/") + "__stage"
     # a crash between the staged write and the publish below must not
     # leak the staging root past process exit
-    reap_at_exit(local_stage)
+    reap_at_exit((parsed.path if parsed.scheme else idx_dir).rstrip("/") + "__stage")
+    spark = drop_index.sparkSession
     with ThreadPoolExecutor(max_workers=1) as pool:
         f_drop = pool.submit(
-            inheritable_thread_target(drop_index.sparkSession)(
+            inheritable_thread_target(spark)(
                 lambda: drop_index.write.mode("overwrite")
                 .partitionBy("cid")
                 .parquet(stage_dir)
@@ -145,15 +138,7 @@ def _staged_store_build(standing_index: DataFrame, drop_index: DataFrame, idx_di
         )
         standing_index.write.mode("overwrite").partitionBy("cid").parquet(idx_dir)
         f_drop.result()
-    for entry in os.listdir(local_stage):
-        if not entry.startswith("cid="):
-            continue  # root _SUCCESS/marker files stay behind
-        src = os.path.join(local_stage, entry)
-        dst = os.path.join(local_idx, entry)
-        os.makedirs(dst, exist_ok=True)
-        for fname in os.listdir(src):
-            os.replace(os.path.join(src, fname), os.path.join(dst, fname))
-    shutil.rmtree(local_stage, ignore_errors=True)
+    storage.publish_partitions(spark, stage_dir, idx_dir)
 
 
 @dataclass(frozen=True)

@@ -28,9 +28,10 @@ import os
 from abc import ABC, abstractmethod
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osarchiver_spark import storage
 from osarchiver_spark.plans.naming import render_suffix
 from osarchiver_spark.plans.schema_drift import check_schema_drift
 
@@ -46,32 +47,6 @@ class Sink(ABC):
         run's frozen ``now`` so file sinks derive a dated output
         directory (reference {date}-templated directories,
         destination/file/base.py:49-50)."""
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` through the Hadoop API — works
-    for any scheme (file://, s3a://, ...)."""
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
-
-
-def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe without read-and-catch."""
-    fs, hpath = _hadoop_fs(spark, path)
-    return bool(fs.exists(hpath))
-
-
-def _holds_data_files(spark: SparkSession, path: str) -> bool:
-    """Any file below ``path`` whose name does not start with ``_``
-    or ``.`` (Spark's marker/checksum convention: ``_SUCCESS``,
-    ``.part-*.crc``)."""
-    fs, hpath = _hadoop_fs(spark, path)
-    files = fs.listFiles(hpath, True)
-    while files.hasNext():
-        if not files.next().getPath().getName().startswith(("_", ".")):
-            return True
-    return False
 
 
 class _DatedFileSink(Sink):
@@ -102,7 +77,7 @@ class CsvSink(_DatedFileSink):
     header on first batch (destination/file/csv.py:41-50); Spark's
     distributed writer keeps the header-per-file contract and adds
     codec compression (reference compresses post-hoc with
-    shutil.make_archive, destination/file/base.py:113-133).
+    ``make_archive``, destination/file/base.py:113-133).
     """
 
     def __init__(self, root: str, compression: str | None = None, run_template: str = "{date}"):
@@ -193,11 +168,11 @@ class ParquetArchiveSink(Sink):
         # WITH data must raise — silently overwriting would drop
         # previously archived rows whose source copies are gone.
         existing = None
-        if _hadoop_path_exists(spark, path):
+        if storage.exists(spark, path):
             try:
                 existing = spark.read.parquet(path)
             except Exception:  # noqa: BLE001
-                if _holds_data_files(spark, path):
+                if storage.list_files(spark, path):
                     raise
         mode = "overwrite"
         if existing is not None:

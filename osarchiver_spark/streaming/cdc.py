@@ -9,22 +9,21 @@ replaces the stored row only when its sequence is newer, and a
 winning delete removes the key. Out-of-order delivery ACROSS batches
 is therefore safe, not just within a batch.
 
-State is a parquet directory rewritten atomically per batch
-(temp + swap, same crash-safety pattern as
-operators/maintenance.py::compact_parquet_dir). On Delta/Iceberg the
-reconcile collapses into a single MERGE statement; the plan shape —
-hash agg + keyed outer reconcile, never a window over history — is
-what survives a 100 TB state table.
+State is a parquet directory republished per batch through
+``storage.swap_in``: the new state is written once to a sibling, then
+swapped in by two checked renames, and ``storage.recover`` restores
+the last complete state when a crash interrupts the swap. On
+Delta/Iceberg the reconcile collapses into a single MERGE statement;
+the plan shape — hash agg + keyed outer reconcile, never a window over
+history — is what survives a 100 TB state table.
 """
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from osarchiver_spark.operators.merge import cdc_apply
+from osarchiver_spark import storage
 
 
 def reconcile_cdc_state(
@@ -103,17 +102,13 @@ def run_streaming_cdc_upsert(
     skip every changelog file it has seen and return a state missing
     their effects, so that case raises ``ValueError`` before the
     stream starts. A checkpoint with no commit (a crash inside batch
-    0, which Spark replays) restarts normally."""
-    from osarchiver_spark.sinks.base import _hadoop_path_exists, _holds_data_files
-
+    0, which Spark replays) restarts normally. A republish interrupted
+    by a crash is recovered first, so its target counts as present."""
     if checkpoint_dir is None:
         checkpoint_dir = f"{target_dir.rstrip('/')}__ckpt"
+    storage.recover(spark, target_dir)
     commits = f"{checkpoint_dir.rstrip('/')}/commits"
-    if (
-        _hadoop_path_exists(spark, commits)
-        and _holds_data_files(spark, commits)
-        and not _hadoop_path_exists(spark, target_dir)
-    ):
+    if storage.list_files(spark, commits) and not storage.exists(spark, target_dir):
         raise ValueError(
             f"checkpoint {checkpoint_dir} has committed batches but target "
             f"{target_dir} does not exist; delete both or restore the target"
@@ -129,21 +124,14 @@ def run_streaming_cdc_upsert(
     stream = reader.load(watch_dir)
 
     def apply_batch(batch_df: DataFrame, _epoch_id: int) -> None:
-        import shutil
-
         sp = batch_df.sparkSession
-        state = (
-            sp.read.parquet(target_dir)
-            if _hadoop_path_exists(sp, target_dir)
-            else None
-        )
+        state = sp.read.parquet(target_dir) if storage.exists(sp, target_dir) else None
         new_state = reconcile_cdc_state(state, batch_df, key_col, seq_col)
-        # state feeds its own rewrite: materialize to a temp dir first,
-        # then republish (the compact_parquet_dir swap pattern)
-        tmp = f"{target_dir}__tmp_{uuid.uuid4().hex[:8]}"
-        new_state.write.mode("overwrite").parquet(tmp)
-        sp.read.parquet(tmp).write.mode("overwrite").parquet(target_dir)
-        shutil.rmtree(tmp, ignore_errors=True)
+        # state feeds its own rewrite, so it cannot overwrite in place:
+        # write the new state beside it once, then swap it in
+        storage.swap_in(
+            sp, target_dir, lambda tmp: new_state.write.mode("overwrite").parquet(tmp)
+        )
 
     q = (
         stream.writeStream.outputMode("append")

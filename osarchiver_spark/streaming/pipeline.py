@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from osarchiver_spark import storage
 from osarchiver_spark.functions.precision import cent_sum
 from osarchiver_spark.sources.parquet import table_path
 
@@ -101,8 +102,6 @@ def drain_stream_to_parquet(
     dir — on a multi-node cluster point it at a shared filesystem URI
     (executors write the parts there directly; existence is probed
     through the Hadoop FileSystem so s3a://-style URIs work too)."""
-    from osarchiver_spark.sinks.base import _hadoop_path_exists
-
     spark = df.sparkSession
     base = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH", tempfile.gettempdir())
     out_dir = f"{base.rstrip('/')}/{name_prefix}_{uuid.uuid4().hex[:8]}"
@@ -117,7 +116,7 @@ def drain_stream_to_parquet(
             q.processAllAvailable()
         finally:
             q.stop()
-    if not _hadoop_path_exists(spark, out_dir):  # stream produced no batches
+    if not storage.exists(spark, out_dir):  # stream produced no batches
         return spark.createDataFrame([], df.schema)
     return spark.read.parquet(out_dir)
 

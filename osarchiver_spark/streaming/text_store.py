@@ -38,11 +38,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from osarchiver_spark import storage
 from osarchiver_spark.streaming.vector_store import (
     _begin_epoch,
     _epoch_guard,
     _mark_epoch,
-    _path_exists,
     repair_torn_epochs,
 )
 
@@ -89,7 +89,7 @@ def make_text_maintenance_batch_fn(
         edges = minhash_lsh_pairs(
             batch, "doc_id", "text", threshold=threshold, **lsh_kw
         ).select(*edge_cols)
-        if _path_exists(spark, index_dir):
+        if storage.exists(spark, index_dir):
             # declared layouts: re-inferring the GROWING index/corpus
             # dirs' footers every micro-batch is pure latency (r11
             # optimization round; minhash_lsh_index's fixed columns,
@@ -115,13 +115,13 @@ def make_text_maintenance_batch_fn(
         _begin_epoch(
             spark, marker_dir, epoch_id, [index_dir, corpus_dir, pairs_dir]
         )
-        first = not _path_exists(spark, index_dir)
+        first = not storage.exists(spark, index_dir)
         minhash_lsh_index(batch, "doc_id", "text", **lsh_kw).write.mode(
             "overwrite" if first else "append"
         ).parquet(index_dir)
         batch.write.mode("overwrite" if first else "append").parquet(corpus_dir)
         edges.write.mode(
-            "overwrite" if not _path_exists(spark, pairs_dir) else "append"
+            "overwrite" if not storage.exists(spark, pairs_dir) else "append"
         ).parquet(pairs_dir)
         _mark_epoch(spark, marker_dir, epoch_id)
 
@@ -191,11 +191,7 @@ def run_streaming_text_maintenance(
         q.stop()
     # an edge-free corpus writes only _SUCCESS markers (0-row parquet
     # writes produce no part files), which read as "unable to infer
-    # schema" — hand back a typed empty graph for THAT case only; a
-    # corrupted footer / permission error must still surface
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(pairs_dir)
-    except AnalysisException:
+    # schema": hand back a typed empty graph for THAT case only
+    if not storage.list_files(spark, pairs_dir):
         return spark.createDataFrame([], "doc_a long, doc_b long")
+    return spark.read.parquet(pairs_dir)

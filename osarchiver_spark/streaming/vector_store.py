@@ -58,6 +58,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from osarchiver_spark import storage
+
 EMBEDDINGS_RAW_SCHEMA = T.StructType(
     [
         T.StructField("vec_id", T.LongType()),
@@ -67,60 +69,10 @@ EMBEDDINGS_RAW_SCHEMA = T.StructType(
 )
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath, jvm
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    fs, hpath, _ = _fs(spark, path)
-    return fs.exists(hpath)
-
-
 def _mark_epoch(
     spark: SparkSession, marker_dir: str, epoch_id: int, phase: str = "done"
 ) -> None:
-    fs, _, jvm = _fs(spark, marker_dir)
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{marker_dir}/{epoch_id}.{phase}"))
-
-
-def _list_data_files(spark: SparkSession, path: str) -> list[str]:
-    """Recursive listing of every file under ``path`` (full-path
-    strings); empty when the directory does not exist. One FS listing
-    per call — the snapshot cost per epoch is O(files in the store),
-    the same order as the write-side commit's own listing.
-
-    Unlike operators/maintenance.py::data_file_stats this deliberately
-    INCLUDES hidden/underscore files (_SUCCESS et al.): the rollback
-    manifest must cover everything an append might create, or repair
-    would leave a torn epoch's commit markers behind."""
-    fs, hpath, _ = _fs(spark, path)
-    if not fs.exists(hpath):
-        return []
-    out = []
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        out.append(it.next().getPath().toString())
-    return out
-
-
-def _write_text(spark: SparkSession, path: str, text: str) -> None:
-    fs, hpath, _ = _fs(spark, path)
-    stream = fs.create(hpath, True)
-    try:
-        stream.write(bytearray(text.encode("utf-8")))
-    finally:
-        stream.close()
-
-
-def _read_text(spark: SparkSession, path: str) -> str:
-    fs, hpath, jvm = _fs(spark, path)
-    stream = fs.open(hpath)
-    try:
-        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
+    storage.mkdirs(spark, f"{marker_dir}/{epoch_id}.{phase}")
 
 
 def _begin_epoch(
@@ -136,15 +88,16 @@ def _begin_epoch(
     marker whose manifest diff identifies exactly the partial files."""
     import json
 
+    # markers included: repair removes everything a torn append made
     snapshot = {
         d: {
-            "exists": _path_exists(spark, d),
-            "files": _list_data_files(spark, d),
+            "exists": storage.exists(spark, d),
+            "files": [f for f, _ in storage.list_files(spark, d, data_only=False)],
         }
         for d in protected_dirs
     }
     _mark_epoch(spark, marker_dir, epoch_id, "begin")
-    _write_text(
+    storage.write_text(
         spark,
         f"{marker_dir}/{epoch_id}.begin/manifest.json",
         json.dumps(snapshot),
@@ -156,9 +109,9 @@ def _epoch_guard(spark: SparkSession, marker_dir: str, epoch_id: int) -> bool:
     it BEGAN but never finished (partially-applied multi-directory
     appends — replaying would double-append); otherwise returns False
     (proceed — the caller marks BEGIN right before its first write)."""
-    if _path_exists(spark, f"{marker_dir}/{epoch_id}.done"):
+    if storage.exists(spark, f"{marker_dir}/{epoch_id}.done"):
         return True
-    if _path_exists(spark, f"{marker_dir}/{epoch_id}.begin"):
+    if storage.exists(spark, f"{marker_dir}/{epoch_id}.begin"):
         raise RuntimeError(
             f"epoch {epoch_id} began but never completed under "
             f"{marker_dir}: its appends are partially applied across "
@@ -182,43 +135,29 @@ def repair_torn_epochs(
     Returns the repaired epoch ids."""
     import json
 
-    fs, hpath, jvm = _fs(spark, marker_dir)
-    if not fs.exists(hpath):
-        return []
     torn = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
+    for name in storage.children(spark, marker_dir):
         if not name.endswith(".begin"):
             continue
         epoch_id = int(name[: -len(".begin")])
-        if _path_exists(spark, f"{marker_dir}/{epoch_id}.done"):
+        begin = f"{marker_dir}/{name}"
+        if storage.exists(spark, f"{marker_dir}/{epoch_id}.done"):
             continue
-        if not _path_exists(
-            spark, f"{marker_dir}/{epoch_id}.begin/manifest.json"
-        ):
-            # crash INSIDE _begin_epoch, between the marker mkdir and
-            # the manifest write: the first append comes only after
-            # _begin_epoch returns, so nothing landed — clearing the
-            # bare marker IS the complete repair
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(f"{marker_dir}/{epoch_id}.begin"),
-                True,
-            )
-            torn.append(epoch_id)
-            continue
-        manifest = json.loads(
-            _read_text(spark, f"{marker_dir}/{epoch_id}.begin/manifest.json")
-        )
-        for d, snap in manifest.items():
-            dfs, dpath, _ = _fs(spark, d)
-            if not snap["exists"]:
-                dfs.delete(dpath, True)
-                continue
-            keep = set(snap["files"])
-            for f in _list_data_files(spark, d):
-                if f not in keep:
-                    dfs.delete(jvm.org.apache.hadoop.fs.Path(f), False)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{marker_dir}/{epoch_id}.begin"), True)
+        if storage.exists(spark, f"{begin}/manifest.json"):
+            manifest = json.loads(storage.read_text(spark, f"{begin}/manifest.json"))
+            for d, snap in manifest.items():
+                if not snap["exists"]:
+                    storage.delete(spark, d)
+                    continue
+                keep = set(snap["files"])
+                for f, _ in storage.list_files(spark, d, data_only=False):
+                    if f not in keep:
+                        storage.delete(spark, f)
+        # no manifest: the crash came INSIDE _begin_epoch, between the
+        # marker mkdir and the manifest write; the first append comes
+        # only after _begin_epoch returns, so nothing landed and
+        # clearing the bare marker IS the complete repair
+        storage.delete(spark, begin)
         torn.append(epoch_id)
     return sorted(torn)
 
@@ -270,7 +209,7 @@ def make_maintenance_batch_fn(
             threshold=threshold, nprobe=nprobe, batch_rows=n, prepped=prepped,
         ).filter(F.col("neighbor_id") < F.col("query_id"))
         losers = intra.select(F.col("query_id").alias("vec_id"))
-        if _path_exists(spark, index_dir):
+        if storage.exists(spark, index_dir):
             from osarchiver_spark.operators.ivf import IVF_STORE_SCHEMA
 
             # declared layout: re-inferring the GROWING index dir's
@@ -289,8 +228,8 @@ def make_maintenance_batch_fn(
         # before this point leaves no marker and no repair debt; the
         # manifest snapshot bounds the torn window to the two appends
         _begin_epoch(spark, marker_dir, epoch_id, [index_dir, store_dir])
-        first = not _path_exists(spark, index_dir)
-        store_mode = "overwrite" if not _path_exists(spark, store_dir) else "append"
+        first = not storage.exists(spark, index_dir)
+        store_mode = "overwrite" if not storage.exists(spark, store_dir) else "append"
         # the two appends target DIFFERENT directories and both read
         # only pinned checkpoints (batch, losers), so they overlap as
         # concurrent driver-thread jobs (guide §2.6; r12 round) — the
@@ -360,6 +299,11 @@ def run_streaming_vector_maintenance(
 
     ensure_session_defaults(spark)
     marker_dir = f"{store_dir.rstrip('/')}__epochs"
+    # a compaction swap interrupted between its renames leaves the only
+    # complete copy under __precompact: restore it before anything
+    # reads, repairs or appends to the store
+    storage.recover(spark, index_dir)
+    storage.recover(spark, store_dir)
     if auto_repair:
         repair_torn_epochs(spark, marker_dir, [index_dir, store_dir])
     watch_dir, glob = fixture_table_watch(sf_dir, "embeddings")

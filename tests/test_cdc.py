@@ -129,3 +129,85 @@ def test_checkpoint_without_commit_restarts(spark, tmp_path):
     (tmp_path / "state__ckpt" / "commits").mkdir(parents=True)
     final = run_streaming_cdc_upsert(spark, str(watch), CHANGELOG_SCHEMA, "k", "seq", state)
     assert {(r.k, r.v, r.last_seq) for r in final.collect()} == EXPECT
+
+
+def _three_file_log(spark, tmp_path):
+    """ROWS split so key 3's delete lands a batch before its insert."""
+    watch = tmp_path / "log"
+    watch.mkdir()
+    log = spark.createDataFrame(ROWS, CHANGELOG_SCHEMA)
+    for name, lo, hi in (("a", 1, 3), ("b", 7, 7), ("c", 4, 6)):
+        log.filter((F.col("seq") >= lo) & (F.col("seq") <= hi)).coalesce(
+            1
+        ).write.parquet(str(watch / f"{name}.parquet"))
+    return str(watch)
+
+
+def test_republish_crash_between_renames_recovers_on_restart(spark, tmp_path, monkeypatch):
+    """Batch 1's republish dies after the old state moved aside and
+    before the new one moved in, so the target is missing while the
+    checkpoint holds batch 0's commit. The restart must restore the
+    last complete state and replay batch 1, ending where an
+    uninterrupted run ends."""
+    import os
+
+    from osarchiver_spark import storage
+
+    watch, state = _three_file_log(spark, tmp_path), str(tmp_path / "state")
+    real, calls = storage.rename, {"n": 0}
+
+    def crashy(*args):
+        calls["n"] += 1
+        if calls["n"] == 3:  # batch 0: tmp -> state; batch 1: state -> old, tmp -> state
+            raise RuntimeError("injected crash mid-republish")
+        return real(*args)
+
+    monkeypatch.setattr(storage, "rename", crashy)
+    with pytest.raises(Exception, match="injected crash"):
+        run_streaming_cdc_upsert(spark, watch, CHANGELOG_SCHEMA, "k", "seq", state)
+    monkeypatch.undo()
+    assert calls["n"] == 3 and not os.path.exists(state)
+
+    final = run_streaming_cdc_upsert(spark, watch, CHANGELOG_SCHEMA, "k", "seq", state)
+    assert {(r.k, r.v, r.last_seq) for r in final.collect()} == EXPECT
+    assert sorted(os.listdir(tmp_path)) == ["log", "state", "state__ckpt"]
+
+
+def test_clean_run_leaves_no_tmp_sibling_and_writes_state_once_per_batch(spark, tmp_path):
+    """Every job the stream starts for a batch carries the batch number
+    in its description (the stream's job group). A batch
+    writes its full state exactly once: one job with output records,
+    not a write to a temp dir plus a rewrite of the target."""
+    import os
+    import re
+    from collections import Counter
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    # the store keeps only the newest spark.ui.retainedJobs jobs, so
+    # mark the start by job id, not by count
+    jobs = store.jobsList(None)  # newest first
+    last_before = jobs.apply(0).jobId() if jobs.size() else -1
+
+    watch, state = _three_file_log(spark, tmp_path), str(tmp_path / "state")
+    run_streaming_cdc_upsert(spark, watch, CHANGELOG_SCHEMA, "k", "seq", state).collect()
+    bus.waitUntilEmpty()
+    assert sorted(os.listdir(tmp_path)) == ["log", "state", "state__ckpt"]
+
+    writes = Counter()
+    jobs = store.jobsList(None)
+    for i in range(jobs.size()):
+        jd = jobs.apply(i)
+        if jd.jobId() <= last_before:
+            break
+        desc = jd.description()
+        batch = desc.isDefined() and re.search(r"batch = (\d+)", desc.get())
+        if not batch:
+            continue  # the caller's own reads and collects
+        stages = tracker.getJobInfo(jd.jobId()).stageIds
+        if sum(store.lastStageAttempt(s).outputRecords() for s in stages) > 0:
+            writes[int(batch.group(1))] += 1
+    assert writes == {0: 1, 1: 1, 2: 1}, writes

@@ -1,0 +1,155 @@
+"""The storage layer: checked renames, and a crash anywhere inside the
+swap leaves one complete copy that ``recover`` (and every stream
+open) restores, in the style of tests/test_crash_recovery.py."""
+
+from __future__ import annotations
+
+import glob
+import os
+import shutil
+
+import pytest
+from pyspark.sql import functions as F
+
+from osarchiver_spark import storage
+from osarchiver_spark.operators.ivf import kmeans_fit
+from osarchiver_spark.sources.parquet import load_table
+from osarchiver_spark.streaming.vector_store import run_streaming_vector_maintenance
+
+THRESHOLD = 0.45  # fixture embeddings are near-uniform (max cos ~0.5)
+
+
+def test_rename_of_missing_source_names_both_paths(spark, tmp_path):
+    src, dst = str(tmp_path / "missing"), str(tmp_path / "dst")
+    with pytest.raises(OSError) as err:
+        storage.rename(spark, src, dst)
+    assert src in str(err.value) and dst in str(err.value)
+    assert not os.path.exists(dst)
+
+
+def test_list_files_skips_markers_and_tolerates_missing_path(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(3).coalesce(1).write.parquet(path)
+    names = lambda files: {f.rsplit("/", 1)[-1] for f, _ in files}  # noqa: E731
+    data = storage.list_files(spark, path)
+    assert len(data) == 1 and names(data) == {n for n in os.listdir(path) if n.startswith("part-")}
+    assert all(size > 0 for _, size in data)
+    # the local filesystem hides its own .crc files from every listing
+    want_all = {n for n in os.listdir(path) if not n.endswith(".crc")}
+    assert names(storage.list_files(spark, path, data_only=False)) == want_all
+    assert storage.list_files(spark, str(tmp_path / "nope")) == []
+
+
+def _crash_nth(monkeypatch, name, n):
+    """Make ``storage.<name>`` raise on its ``n``-th call, once."""
+    real = getattr(storage, name)
+    calls = {"n": 0}
+
+    def crashy(*args):
+        calls["n"] += 1
+        if calls["n"] == n:
+            raise RuntimeError(f"injected crash in {name} #{n}")
+        return real(*args)
+
+    monkeypatch.setattr(storage, name, crashy)
+    return calls
+
+
+@pytest.mark.parametrize(
+    "crash, want",
+    [
+        (("rename", 1), "old"),  # path -> __precompact never happened
+        (("rename", 2), "old"),  # between the renames: path is missing
+        (("write", 1), "old"),  # the new copy never finished
+        (("delete", 1), "new"),  # swapped in, old copy not yet dropped
+    ],
+)
+def test_swap_crash_recovers_one_complete_copy(spark, tmp_path, monkeypatch, crash, want):
+    path = str(tmp_path / "t")
+    copies = {"old": list(range(10)), "new": list(range(100, 113))}
+    spark.range(10).repartition(3).write.parquet(path)
+
+    def write_to_tmp(tmp):
+        spark.range(100, 113).coalesce(1).write.mode("overwrite").parquet(tmp)
+        if crash[0] == "write":
+            raise RuntimeError("injected crash in write")
+
+    if crash[0] != "write":
+        _crash_nth(monkeypatch, *crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        storage.swap_in(spark, path, write_to_tmp)
+    monkeypatch.undo()
+
+    storage.recover(spark, path)
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == copies[want]
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+
+
+def test_recover_without_interrupted_swap_is_a_no_op(spark, tmp_path):
+    path = str(tmp_path / "t")
+    storage.recover(spark, path)  # nothing there at all
+    spark.range(4).write.parquet(path)
+    storage.recover(spark, path)
+    assert spark.read.parquet(path).count() == 4
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+
+
+def _land(emb, tmp_path, land, lo, step, ids):
+    """Copy id-range slices ``ids`` of ``emb`` into ``land`` as one
+    mtime-ordered file each (the file stream replays them in id
+    order)."""
+    os.makedirs(land, exist_ok=True)
+    for i in ids:
+        scratch = str(tmp_path / f"scratch{i}")
+        if not os.path.isdir(scratch):
+            emb.filter(
+                (F.col("vec_id") >= lo + i * step) & (F.col("vec_id") < lo + (i + 1) * step)
+            ).coalesce(1).write.parquet(scratch)
+        dst = str(land / f"batch{i}.parquet")
+        shutil.copy(glob.glob(f"{scratch}/part-*.parquet")[0], dst)
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def test_stream_restart_recovers_a_compaction_crashed_between_renames(
+    spark, sf_small, tmp_path, monkeypatch
+):
+    """A maintain_store compaction of the streaming store crashes
+    between its two renames, leaving the store only under
+    __precompact. The restart, with one more input file, must restore
+    it before the first epoch and land the store an uncrashed run
+    lands; without recovery the new epoch overwrites a missing store
+    with its own rows only."""
+    emb = load_table(spark, sf_small, "embeddings")
+    lo, hi = (int(v) for v in emb.agg(F.min("vec_id"), F.max("vec_id")).first())
+    step = -(-(hi - lo + 1) // 4)
+    cents = kmeans_fit(emb, "vec_id", "embedding", k=8, iters=2)
+    vec_ids = lambda d: {r.neighbor_id for r in spark.read.parquet(d).collect()}  # noqa: E731
+
+    _land(emb, tmp_path, tmp_path / "all_sf" / "embeddings.parquet", lo, step, range(4))
+    clean_store = str(tmp_path / "clean")
+    run_streaming_vector_maintenance(
+        spark, str(tmp_path / "all_sf"), str(tmp_path / "cidx"), clean_store, cents,
+        threshold=THRESHOLD, nprobe=3, max_files_per_trigger=1,
+    )
+
+    src_sf = tmp_path / "src_sf"
+    _land(emb, tmp_path, src_sf / "embeddings.parquet", lo, step, range(3))
+    idx, store = str(tmp_path / "idx"), str(tmp_path / "store")
+    calls = _crash_nth(monkeypatch, "rename", 2)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_streaming_vector_maintenance(
+            spark, str(src_sf), idx, store, cents,
+            threshold=THRESHOLD, nprobe=3, max_files_per_trigger=1,
+            maintenance_policy={"nprobe": 4, "files_per_partition_compact": 2},
+        )
+    monkeypatch.undo()
+    assert calls["n"] == 2
+    assert not os.path.exists(store) and os.path.isdir(f"{store}__precompact")
+
+    _land(emb, tmp_path, src_sf / "embeddings.parquet", lo, step, [3])
+    run_streaming_vector_maintenance(
+        spark, str(src_sf), idx, store, cents,
+        threshold=THRESHOLD, nprobe=3, max_files_per_trigger=1,
+    )
+    assert vec_ids(store) == vec_ids(clean_store)
+    assert not glob.glob(f"{store}__pre*") and not glob.glob(f"{store}__compacting")
