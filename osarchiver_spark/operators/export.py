@@ -22,6 +22,12 @@ only), and one write per split from the same cached survivor set.
 Determinism: every decision is a pure function of doc content/ids
 (md5 splits, min-id cluster reps), so a re-run writes byte-identical
 membership — the export is idempotent at the row level.
+
+The two INDEXED builds (``export_training_set_indexed``,
+``export_vector_store_indexed``) land the corpus drop by drop; each
+drop's appends span several directories and are one
+``storage.run_epoch`` transaction, so a crashed build resumes, or
+refuses until ``storage.repair_torn_epochs`` rolls the torn drop back.
 """
 
 from __future__ import annotations
@@ -129,13 +135,14 @@ def export_training_set_indexed(
     lazily-planned probe can never observe files appended after it.
 
     Crash safety: each drop persists its edge set to a sibling pairs
-    store (``<index>__pairs``) and brackets its two appends with the
-    streaming loop's BEGIN/DONE manifest markers
-    (``<index>__epochs``) — a re-run after a mid-build crash skips
+    store (``<index>__pairs``), and its two appends are one
+    ``storage.run_epoch`` transaction (markers under
+    ``<index>__epochs``) — a re-run after a mid-build crash skips
     DONE drops (their bands AND edges are on disk), refuses on a torn
-    drop until ``repair_torn_epochs`` rolls it back, then completes
-    identically (tests/test_crash_recovery.py). Index/pairs/marker
-    dirs are single-use; rebuilds need fresh directories.
+    drop until ``storage.repair_torn_epochs`` rolls it back, then
+    completes identically (tests/test_crash_recovery.py).
+    Index/pairs/marker dirs are single-use; rebuilds need fresh
+    directories.
     """
     from osarchiver_spark.operators.dedup import (
         minhash_lsh_incremental_indexed,
@@ -148,11 +155,6 @@ def export_training_set_indexed(
         NUM_HASHES,
     )
     from osarchiver_spark.sources.parquet import load_table
-    from osarchiver_spark.streaming.vector_store import (
-        _begin_epoch,
-        _epoch_guard,
-        _mark_epoch,
-    )
 
     if n_batches < 1:
         raise ValueError(f"n_batches must be >= 1: {n_batches}")
@@ -173,17 +175,16 @@ def export_training_set_indexed(
     edge_cols = ["doc_a", "doc_b"]
 
     for i in range(n_batches):
-        if _epoch_guard(spark, marker_dir, i):
-            continue  # resumed run: this drop's bands + edges landed
         batch = docs.filter(
             (F.col("doc_id") >= bounds[i]) & (F.col("doc_id") < bounds[i + 1])
         )
-        intra = minhash_lsh_pairs(
-            batch, "doc_id", "text", threshold=MINHASH_THRESHOLD, **lsh_kw
-        ).select(*edge_cols)
-        if i == 0:
-            batch_edges = intra
-        else:
+
+        def stage():
+            intra = minhash_lsh_pairs(
+                batch, "doc_id", "text", threshold=MINHASH_THRESHOLD, **lsh_kw
+            ).select(*edge_cols)
+            if i == 0:
+                return intra.localCheckpoint()
             corpus = docs.filter(F.col("doc_id") < bounds[i])
             cross = minhash_lsh_incremental_indexed(
                 spark.read.parquet(index_dir), corpus, batch, "doc_id", "text",
@@ -192,16 +193,18 @@ def export_training_set_indexed(
                 F.col("corpus_id").alias("doc_a"),
                 F.col("new_id").alias("doc_b"),
             )
-            batch_edges = cross.unionByName(intra)
-        batch_edges = batch_edges.localCheckpoint()
-        _begin_epoch(spark, marker_dir, i, [index_dir, pairs_dir])
-        minhash_lsh_index(batch, "doc_id", "text", **lsh_kw).write.mode(
-            "overwrite" if i == 0 else "append"
-        ).parquet(index_dir)
-        batch_edges.write.mode(
-            "overwrite" if not storage.exists(spark, pairs_dir) else "append"
-        ).parquet(pairs_dir)
-        _mark_epoch(spark, marker_dir, i)
+            return cross.unionByName(intra).localCheckpoint()
+
+        def append(batch_edges):
+            minhash_lsh_index(batch, "doc_id", "text", **lsh_kw).write.mode(
+                "overwrite" if i == 0 else "append"
+            ).parquet(index_dir)
+            batch_edges.write.mode(
+                "overwrite" if not storage.exists(spark, pairs_dir) else "append"
+            ).parquet(pairs_dir)
+
+        # called before the next iteration rebinds batch and i
+        storage.run_epoch(spark, marker_dir, i, [index_dir, pairs_dir], stage, append)
 
     # an edge-free corpus writes only _SUCCESS markers; hand back a
     # typed empty graph for that case only (streaming/text_store.py)
@@ -408,7 +411,6 @@ def export_vector_store_indexed(
     nprobe: int = 4,
     max_batch_rows: int | None = None,
     pq_models: tuple[list[list[float]], list[list[list[float]]]] | None = None,
-    on_stage=None,
 ) -> DataFrame:
     """The INCREMENTAL-INDEX build of the same vector store: the
     corpus arrives as ``n_batches`` vec_id-ordered drops. Each drop
@@ -435,42 +437,24 @@ def export_vector_store_indexed(
     drop's ROW COUNT up front — one corpus scan producing a
     model-sized (batch, count) table — so an id-range batch that is
     denser than the value split anticipated fails BEFORE anything is
-    written, never mid-build after earlier drops were appended. The
-    per-drop counts then ride into both probes of that drop
-    (``batch_rows``), so the drop's batch contract is checked once,
-    not once per probe.
+    written, never mid-build after earlier drops were appended. Each
+    drop's probes then check the same bound against that drop's own
+    count.
 
-    ``on_stage(label, seconds)``, when given, receives per-drop
-    probe/append wall timings (rehearsal instrumentation; no effect
-    on the artifacts).
-
-    Crash safety: each drop brackets its two appends with the
-    streaming loop's BEGIN/DONE markers (``<store>__epochs/``, BEGIN
-    carrying a manifest snapshot of both directories). A re-run after
-    a mid-build crash skips DONE drops whole and REFUSES on a torn
-    drop (BEGIN without DONE) until ``repair_torn_epochs`` rolls its
-    partial appends back — then the re-run completes the build
-    identically to a never-crashed one (pinned in
-    tests/test_crash_recovery.py). Consequence: out/index dirs are
-    single-use — a deliberate rebuild needs fresh (or cleared)
-    directories, matching the streaming maintainers' contract."""
-    import time as _time
-
-    from osarchiver_spark.operators.ivf import (
-        INDEXED_PROBE_MAX_QUERIES,
-        ivf_index,
-        ivf_neardup_probe,
-    )
+    Each drop is one run of the streaming loop's maintenance step
+    (streaming/vector_store.py::make_maintenance_batch_fn), so its two
+    appends are one ``storage.run_epoch`` transaction
+    (``<store>__epochs/``). A re-run after a mid-build crash skips
+    DONE drops whole and REFUSES on a torn drop (BEGIN without DONE)
+    until ``storage.repair_torn_epochs`` rolls its partial appends
+    back — then the re-run completes the build identically to a
+    never-crashed one (pinned in tests/test_crash_recovery.py).
+    Consequence: out/index dirs are single-use — a deliberate rebuild
+    needs fresh (or cleared) directories, matching the streaming
+    maintainers' contract."""
+    from osarchiver_spark.operators.ivf import INDEXED_PROBE_MAX_QUERIES
     from osarchiver_spark.sources.parquet import load_table
-    from osarchiver_spark.streaming.vector_store import (
-        _begin_epoch,
-        _epoch_guard,
-        _mark_epoch,
-    )
-
-    def _stage(label, t0):
-        if on_stage is not None:
-            on_stage(label, round(_time.perf_counter() - t0, 3))
+    from osarchiver_spark.streaming.vector_store import make_maintenance_batch_fn
 
     if n_batches < 1:
         raise ValueError(f"n_batches must be >= 1: {n_batches}")
@@ -505,83 +489,14 @@ def export_vector_store_indexed(
             f"up front so no partial store is written."
         )
 
-    marker_dir = f"{store_dir.rstrip('/')}__epochs"
+    # id-ordered drops: every standing match has a smaller id, so the
+    # streaming step's first-arrival-wins rule IS the one-shot rule
+    step_fn = make_maintenance_batch_fn(
+        spark, index_dir, store_dir, centroids, threshold, nprobe,
+        pq_models=pq_models, max_batch_rows=max_batch_rows,
+    )
     for i in range(n_batches):
-        if _epoch_guard(spark, marker_dir, i):
-            continue  # resumed run: this drop's appends already landed
-        batch = emb.filter(
-            (F.col("vec_id") >= bounds[i]) & (F.col("vec_id") < bounds[i + 1])
-        )
-        n_batch = counts.get(i, 0)
-        batch_index = ivf_index(batch, "vec_id", "embedding", centroids)
-        # intra + cross probe the SAME drop: one probe pass + cid
-        # collect feeds both (prep_indexed_probe, r11 round)
-        from osarchiver_spark.operators.ivf import (
-            IVF_STORE_SCHEMA,
-            prep_indexed_probe,
-        )
-
-        prepped = prep_indexed_probe(
-            batch, "vec_id", "embedding", centroids, nprobe
-        )
-        intra = ivf_neardup_probe(
-            batch_index, batch, "vec_id", "embedding", centroids,
-            threshold=threshold, nprobe=nprobe,
-            max_batch_rows=max_batch_rows, batch_rows=n_batch,
-            prepped=prepped,
-        )
-        if i == 0:
-            pairs = intra
-        else:
-            standing = spark.read.schema(IVF_STORE_SCHEMA).parquet(index_dir)
-            cross = ivf_neardup_probe(
-                standing, batch, "vec_id", "embedding", centroids,
-                threshold=threshold, nprobe=nprobe,
-                max_batch_rows=max_batch_rows, batch_rows=n_batch,
-                prepped=prepped,
-            )
-            pairs = intra.unionByName(cross)
-        # materialize this drop's losers BEFORE appending its cells to
-        # the dedup index (the lazily-planned probe must never observe
-        # files appended after it — the text capstone's checkpoint rule)
-        t0 = _time.perf_counter()
-        losers = (
-            pairs.filter(F.col("neighbor_id") < F.col("query_id"))
-            .select(F.col("query_id").alias("vec_id"))
-            .distinct()
-            .localCheckpoint()
-        )
-        _stage(f"batch{i}_probe", t0)
-        t0 = _time.perf_counter()
-        # BEGIN only now: everything above is read-only, so a crash in
-        # the probe leaves no marker; the manifest snapshot bounds the
-        # torn window to the two appends below
-        _begin_epoch(spark, marker_dir, i, [index_dir, store_dir])
-        # the two appends target DIFFERENT directories and read only
-        # pinned checkpoints — overlap them (guide §2.6; r12 round;
-        # BEGIN/DONE brackets both, repair semantics unchanged)
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_idx = pool.submit(
-                inheritable_thread_target(spark)(
-                    lambda i=i: batch_index.write.mode(
-                        "overwrite" if i == 0 else "append"
-                    ).partitionBy("cid").parquet(index_dir)
-                )
-            )
-            survivors = batch.join(losers, "vec_id", "left_anti")
-            # the DEDUP index always stores full vectors (the probe
-            # needs them); pq_models shapes only the serving artifact
-            _write_store(
-                survivors, centroids, pq_models, store_dir,
-                "overwrite" if i == 0 else "append",
-            )
-            f_idx.result()
-        _mark_epoch(spark, marker_dir, i)
-        _stage(f"batch{i}_append", t0)
+        step_fn(emb.filter((F.col("vec_id") >= bounds[i]) & (F.col("vec_id") < bounds[i + 1])), i)
     return _vector_manifest(spark, out_dir)
 
 

@@ -50,15 +50,23 @@ class Sink(ABC):
 
 
 class _DatedFileSink(Sink):
-    """Shared per-run dated-directory logic for file-format sinks.
+    """Shared per-run dated-directory writer for file-format sinks:
+    each table lands as one Spark ``fmt`` dataset at
+    ``<root>/<run>/<table>.<ext>``, with the class's writer
+    ``options`` and the instance's codec ``compression``.
 
     Run N+1 must never clobber run N's archive (those rows are gone
     from the source after the delete step): each run writes under
     ``<root>/<rendered {date} suffix>/``. A re-run with the SAME
     frozen now overwrites its own directory — idempotent."""
 
-    def __init__(self, root: str, run_template: str = "{date}"):
+    fmt: str
+    ext: str
+    options: dict = {}
+
+    def __init__(self, root: str, compression: str | None = None, run_template: str = "{date}"):
         self.root = root
+        self.compression = compression
         self.run_template = run_template
         self._run_dir: str | None = None
 
@@ -68,6 +76,12 @@ class _DatedFileSink(Sink):
     def _out_path(self, leaf: str) -> str:
         run_dir = self._run_dir or render_suffix(self.run_template, datetime.now())
         return os.path.join(self.root, run_dir, leaf)
+
+    def write(self, table: str, df: DataFrame) -> None:
+        writer = df.write.mode("overwrite").options(**self.options)
+        if self.compression:
+            writer = writer.option("compression", self.compression)
+        writer.format(self.fmt).save(self._out_path(f"{table}.{self.ext}"))
 
 
 class CsvSink(_DatedFileSink):
@@ -80,15 +94,8 @@ class CsvSink(_DatedFileSink):
     ``make_archive``, destination/file/base.py:113-133).
     """
 
-    def __init__(self, root: str, compression: str | None = None, run_template: str = "{date}"):
-        super().__init__(root, run_template)
-        self.compression = compression
-
-    def write(self, table: str, df: DataFrame) -> None:
-        writer = df.write.mode("overwrite").option("header", True)
-        if self.compression:
-            writer = writer.option("compression", self.compression)
-        writer.csv(self._out_path(f"{table}.csv"))
+    fmt = ext = "csv"
+    options = {"header": True}
 
 
 class JsonlSink(_DatedFileSink):
@@ -101,15 +108,7 @@ class JsonlSink(_DatedFileSink):
     reference's csv/sql formatter pair (destination/file/base.py:
     146-180) but the same fan-out contract."""
 
-    def __init__(self, root: str, compression: str | None = None, run_template: str = "{date}"):
-        super().__init__(root, run_template)
-        self.compression = compression
-
-    def write(self, table: str, df: DataFrame) -> None:
-        writer = df.write.mode("overwrite")
-        if self.compression:
-            writer = writer.option("compression", self.compression)
-        writer.json(self._out_path(f"{table}.jsonl"))
+    fmt, ext = "json", "jsonl"
 
 
 class OrcSink(_DatedFileSink):
@@ -119,15 +118,7 @@ class OrcSink(_DatedFileSink):
     written by Spark's built-in ORC datasource with min/max stats and
     optional codec compression (zlib/snappy/zstd)."""
 
-    def __init__(self, root: str, compression: str | None = None, run_template: str = "{date}"):
-        super().__init__(root, run_template)
-        self.compression = compression
-
-    def write(self, table: str, df: DataFrame) -> None:
-        writer = df.write.mode("overwrite")
-        if self.compression:
-            writer = writer.option("compression", self.compression)
-        writer.orc(self._out_path(f"{table}.orc"))
+    fmt = ext = "orc"
 
 
 class ParquetArchiveSink(Sink):
@@ -216,8 +207,10 @@ class SqlDumpSink(_DatedFileSink):
     per row, rendered distributed (no driver collect) and written via
     the text writer, under the per-run dated directory."""
 
+    fmt, ext = "text", "sql"
+
     def __init__(self, root: str, primary_keys: dict[str, str | list[str]], run_template: str = "{date}"):
-        super().__init__(root, run_template)
+        super().__init__(root, run_template=run_template)
         self.primary_keys = {t: [k] if isinstance(k, str) else list(k) for t, k in primary_keys.items()}
 
     def write(self, table: str, df: DataFrame) -> None:
@@ -236,4 +229,4 @@ class SqlDumpSink(_DatedFileSink):
             F.concat_ws(", ", *rendered),
             F.lit(f") ON DUPLICATE KEY UPDATE `{pk}` = `{pk}`;"),
         )
-        df.select(line.alias("value")).write.mode("overwrite").text(self._out_path(f"{table}.sql"))
+        super().write(table, df.select(line.alias("value")))

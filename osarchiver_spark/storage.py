@@ -1,27 +1,48 @@
 """The one module that talks to ``org.apache.hadoop.fs``. Every call
 goes through the Hadoop ``FileSystem`` of its path, so file://,
-hdfs:// and s3a:// URIs all work, and resolves the ``Path`` class once:
-each package hop of ``jvm.org.apache.hadoop.fs.Path`` is a py4j round
-trip.
+hdfs:// and s3a:// URIs all work, and resolves the ``Path`` class once
+per SparkContext: each package hop of ``jvm.org.apache.hadoop.fs.Path``
+is a py4j round trip.
 
 ``swap_in`` keeps the pipeline's archive-before-delete discipline: at
 every instant one complete copy of ``path`` exists under a name that
 ``recover`` knows, so an interrupted swap completes or rolls back on
 the next open. On object stores rename is copy+delete; there, prefer
 a NEW dated prefix and a catalog pointer flip.
+
+``run_epoch`` is the same discipline for an incremental store whose
+per-drop appends span several directories: BEGIN/DONE markers make a
+replayed epoch a no-op, a torn one a refusal, and
+``repair_torn_epochs`` rolls the torn one back.
 """
 
 from __future__ import annotations
 
+import json
+
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
+
+# (SparkContext, its Path class, its Hadoop conf): a new context
+# re-resolves, so a stopped one's JVM handles are never reused
+_jvm_handles: tuple = (None, None, None)
+
+
+def _jvm(spark: SparkSession):
+    """``(Path class, Hadoop conf)`` of ``spark``'s context."""
+    global _jvm_handles
+    sc = spark.sparkContext
+    handles = _jvm_handles
+    if handles[0] is not sc:
+        handles = _jvm_handles = (sc, sc._jvm.org.apache.hadoop.fs.Path, sc._jsc.hadoopConfiguration())
+    return handles[1:]
 
 
 def resolve(spark: SparkSession, path: str, *more: str):
     """``(FileSystem of path, Path, *Paths)``."""
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    Path, conf = _jvm(spark)
     hpaths = [Path(p) for p in (path, *more)]
-    fs = hpaths[0].getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs = hpaths[0].getFileSystem(conf)
     return (fs, *hpaths)
 
 
@@ -143,19 +164,122 @@ def publish_partitions(spark: SparkSession, stage: str, dst: str) -> None:
     a metadata-only append of one single-level partitioned parquet
     root onto another. Spark part-file names carry a job-unique id, so
     moves cannot collide; the local filesystem moves each ``.crc``
-    along with its file."""
-    dst = dst.rstrip("/")
-    moves = [
-        (src, f"{dst}/{part}/{name}")
-        for src, _ in list_files(spark, stage)
-        for part, name in [src.rsplit("/", 2)[-2:]]
-        if "=" in part
-    ]
-    parts = sorted({d.rsplit("/", 1)[0] for _, d in moves})
-    fs, hstage, *hpaths = resolve(spark, stage, *parts, *(p for m in moves for p in m))
-    for hpart in hpaths[: len(parts)]:
-        fs.mkdirs(hpart)
-    hmoves = hpaths[len(parts):]
-    for src, to in zip(hmoves[::2], hmoves[1::2]):
-        _rename(fs, src, to)
+    along with its file. Renames straight from the listed ``Path``
+    objects: every string round trip through py4j costs a call."""
+    fs, hstage, hdst = resolve(spark, stage, dst)
+    Path, _ = _jvm(spark)
+    for part in fs.listStatus(hstage):
+        if not part.isDirectory():
+            continue
+        src_dir = part.getPath()
+        name = src_dir.getName()
+        if "=" not in name:
+            continue
+        to = Path(hdst, name)
+        fs.mkdirs(to)
+        for f in fs.listStatus(src_dir):
+            src = f.getPath()
+            fname = src.getName()
+            if not fname.startswith(("_", ".")):
+                _rename(fs, src, Path(to, fname))
     fs.delete(hstage, True)
+
+
+# -- epoch transactions -------------------------------------------------
+# Layout under an incremental store's marker_dir, written here only:
+#   <epoch_id>.begin/manifest.json  every file each protected dir held
+#                                   before the epoch's first append
+#   <epoch_id>.done                 every append of the epoch landed
+
+
+def mark_epoch(spark: SparkSession, marker_dir: str, epoch_id: int, phase: str = "done") -> None:
+    """Write the bare ``phase`` marker of ``epoch_id``."""
+    mkdirs(spark, f"{marker_dir}/{epoch_id}.{phase}")
+
+
+def run_epoch(spark: SparkSession, marker_dir: str, epoch_id: int, dirs: list[str], stage, append) -> bool:
+    """Apply one epoch of multi-directory appends at most once.
+
+    A DONE epoch is skipped (``False``). A BEGIN-without-DONE epoch
+    raises: its appends are partially applied and re-running would
+    double-append, so ``repair_torn_epochs`` must roll it back first.
+    Otherwise ``staged = stage()`` runs, which must only read; a
+    ``None`` (an empty drop) writes DONE alone. Else BEGIN is written
+    with a manifest snapshot of ``dirs``, then ``append(staged)``,
+    then DONE. A crash before BEGIN leaves no marker and no repair
+    debt; one after leaves a BEGIN whose manifest names exactly the
+    files the torn appends made."""
+    if exists(spark, f"{marker_dir}/{epoch_id}.done"):
+        return False
+    if exists(spark, f"{marker_dir}/{epoch_id}.begin"):
+        raise RuntimeError(
+            f"epoch {epoch_id} began but never completed under "
+            f"{marker_dir}: its appends are partially applied across "
+            f"the store directories and re-running would double-append. "
+            f"Run storage.repair_torn_epochs (or drop the partial "
+            f"epoch's files by hand) before restarting."
+        )
+    staged = stage()
+    if staged is not None:
+        # markers included: repair removes everything a torn append made
+        snapshot = {
+            d: {
+                "exists": exists(spark, d),
+                "files": [f for f, _ in list_files(spark, d, data_only=False)],
+            }
+            for d in dirs
+        }
+        mark_epoch(spark, marker_dir, epoch_id, "begin")
+        write_text(spark, f"{marker_dir}/{epoch_id}.begin/manifest.json", json.dumps(snapshot))
+        append(staged)
+    mark_epoch(spark, marker_dir, epoch_id)
+    return True
+
+
+def repair_torn_epochs(spark: SparkSession, marker_dir: str, dirs: list[str]) -> list[int]:
+    """Roll back every BEGIN-without-DONE epoch under ``marker_dir``:
+    delete the files the torn epoch appended (anything in a protected
+    directory that is NOT in the BEGIN manifest's snapshot; a
+    directory the snapshot says did not exist is removed whole), then
+    clear the marker. With a stream's durable checkpoint, a restart
+    replays the same epoch id over the same input files, so the
+    repaired-and-rerun store is identical to a never-crashed run.
+    Returns the repaired epoch ids.
+
+    A manifest naming a directory outside ``dirs`` raises
+    ``ValueError`` before anything is deleted: a ``marker_dir`` that
+    belongs to another store must not roll that store back."""
+    allowed = {d.rstrip("/") for d in dirs}
+    torn = {}
+    for name in children(spark, marker_dir):
+        if not name.endswith(".begin"):
+            continue
+        epoch_id = int(name[: -len(".begin")])
+        if exists(spark, f"{marker_dir}/{epoch_id}.done"):
+            continue
+        begin = f"{marker_dir}/{name}"
+        # no manifest: the crash came between the BEGIN mkdir and the
+        # manifest write; the first append comes only after both, so
+        # nothing landed and clearing the bare marker IS the repair
+        manifest = {}
+        if exists(spark, f"{begin}/manifest.json"):
+            manifest = json.loads(read_text(spark, f"{begin}/manifest.json"))
+        for d in manifest:
+            if d.rstrip("/") not in allowed:
+                raise ValueError(
+                    f"epoch {epoch_id} under {marker_dir} protects {d}, "
+                    f"which is not among the directories to repair "
+                    f"{sorted(allowed)}; nothing was deleted"
+                )
+        torn[epoch_id] = (begin, manifest)
+    for epoch_id, (begin, manifest) in sorted(torn.items()):
+        for d, snap in manifest.items():
+            if not snap["exists"]:
+                delete(spark, d)
+                continue
+            keep = set(snap["files"])
+            for f, _ in list_files(spark, d, data_only=False):
+                if f not in keep:
+                    delete(spark, f)
+        delete(spark, begin)
+    return sorted(torn)

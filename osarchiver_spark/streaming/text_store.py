@@ -22,14 +22,15 @@ tests/test_streaming_text_store.py. Downstream consumers (loser
 anti-join, connected components, split keys) read the pair graph
 exactly as the batch pipeline does.
 
-Restart safety mirrors the vector loop: BEGIN/DONE epoch markers —
-a replayed DONE epoch is a no-op, a BEGIN-without-DONE epoch (crash
-inside the multi-directory append window) raises instead of silently
-double-appending; the BEGIN manifest + ``repair_torn_epochs`` rolls
-the partial appends back, and the durable checkpoint
-(``<pairs>__checkpoint``) replays the same epoch over the same input
-files, so repair-then-restart is fingerprint-identical to a
-never-crashed run (pinned in tests/test_streaming_text_store.py).
+Restart safety mirrors the vector loop: each epoch's three appends
+are one ``storage.run_epoch`` transaction — a replayed DONE epoch is a
+no-op, a torn one (crash inside the multi-directory append window)
+raises instead of silently double-appending, and
+``storage.repair_torn_epochs`` rolls the partial appends back from the
+BEGIN manifest. The durable checkpoint (``<pairs>__checkpoint``)
+replays the same epoch over the same input files, so
+repair-then-restart is fingerprint-identical to a never-crashed run
+(pinned in tests/test_crash_recovery.py).
 """
 
 from __future__ import annotations
@@ -39,12 +40,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osarchiver_spark import storage
-from osarchiver_spark.streaming.vector_store import (
-    _begin_epoch,
-    _epoch_guard,
-    _mark_epoch,
-    repair_torn_epochs,
-)
 
 DOCUMENTS_RAW_SCHEMA = T.StructType(
     [
@@ -80,50 +75,49 @@ def make_text_maintenance_batch_fn(
     edge_cols = ["doc_a", "doc_b"]
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if _epoch_guard(spark, marker_dir, epoch_id):
-            return  # replayed epoch: its appends already landed
-        if batch_df.isEmpty():
-            _mark_epoch(spark, marker_dir, epoch_id)
-            return
-        batch = batch_df.localCheckpoint()
-        edges = minhash_lsh_pairs(
-            batch, "doc_id", "text", threshold=threshold, **lsh_kw
-        ).select(*edge_cols)
-        if storage.exists(spark, index_dir):
-            # declared layouts: re-inferring the GROWING index/corpus
-            # dirs' footers every micro-batch is pure latency (r11
-            # optimization round; minhash_lsh_index's fixed columns,
-            # long doc ids per DOCUMENTS_RAW_SCHEMA)
-            standing = spark.read.schema(
-                "corpus_id bigint, band_idx int, band_key string"
+        def stage():
+            if batch_df.isEmpty():
+                return None
+            batch = batch_df.localCheckpoint()
+            edges = minhash_lsh_pairs(
+                batch, "doc_id", "text", threshold=threshold, **lsh_kw
+            ).select(*edge_cols)
+            if storage.exists(spark, index_dir):
+                # declared layouts: re-inferring the GROWING index/corpus
+                # dirs' footers every micro-batch is pure latency
+                # (minhash_lsh_index's fixed columns, long doc ids per
+                # DOCUMENTS_RAW_SCHEMA)
+                standing = spark.read.schema(
+                    "corpus_id bigint, band_idx int, band_key string"
+                ).parquet(index_dir)
+                corpus = spark.read.schema(DOCUMENTS_RAW_SCHEMA).parquet(corpus_dir)
+                cross = minhash_lsh_incremental_indexed(
+                    standing, corpus, batch, "doc_id", "text",
+                    threshold=threshold, **lsh_kw,
+                ).select(
+                    F.col("corpus_id").alias("doc_a"),
+                    F.col("new_id").alias("doc_b"),
+                )
+                edges = edges.unionByName(cross)
+            # materialize the edges BEFORE appending this batch's bands
+            # (the lazily-planned probe must never observe files
+            # appended after it)
+            return batch, edges.localCheckpoint()
+
+        def append(staged) -> None:
+            batch, edges = staged
+            first = not storage.exists(spark, index_dir)
+            minhash_lsh_index(batch, "doc_id", "text", **lsh_kw).write.mode(
+                "overwrite" if first else "append"
             ).parquet(index_dir)
-            corpus = spark.read.schema(DOCUMENTS_RAW_SCHEMA).parquet(corpus_dir)
-            cross = minhash_lsh_incremental_indexed(
-                standing, corpus, batch, "doc_id", "text",
-                threshold=threshold, **lsh_kw,
-            ).select(
-                F.col("corpus_id").alias("doc_a"),
-                F.col("new_id").alias("doc_b"),
-            )
-            edges = edges.unionByName(cross)
-        # materialize the edges BEFORE appending this batch's bands
-        # (the lazily-planned probe must never observe files appended
-        # after it — the capstone's checkpoint rule)
-        edges = edges.localCheckpoint()
-        # BEGIN only now — everything above is read-only; the manifest
-        # snapshot bounds the torn window to the three appends below
-        _begin_epoch(
-            spark, marker_dir, epoch_id, [index_dir, corpus_dir, pairs_dir]
+            batch.write.mode("overwrite" if first else "append").parquet(corpus_dir)
+            edges.write.mode(
+                "overwrite" if not storage.exists(spark, pairs_dir) else "append"
+            ).parquet(pairs_dir)
+
+        storage.run_epoch(
+            spark, marker_dir, epoch_id, [index_dir, corpus_dir, pairs_dir], stage, append
         )
-        first = not storage.exists(spark, index_dir)
-        minhash_lsh_index(batch, "doc_id", "text", **lsh_kw).write.mode(
-            "overwrite" if first else "append"
-        ).parquet(index_dir)
-        batch.write.mode("overwrite" if first else "append").parquet(corpus_dir)
-        edges.write.mode(
-            "overwrite" if not storage.exists(spark, pairs_dir) else "append"
-        ).parquet(pairs_dir)
-        _mark_epoch(spark, marker_dir, epoch_id)
 
     return process_batch
 
@@ -136,7 +130,6 @@ def run_streaming_text_maintenance(
     pairs_dir: str,
     threshold: float | None = None,
     max_files_per_trigger: int | None = None,
-    auto_repair: bool = False,
     **lsh_overrides,
 ) -> DataFrame:
     """Stream the documents fixture through the maintenance loop and
@@ -144,8 +137,9 @@ def run_streaming_text_maintenance(
     parameters default to the registry's production set
     (queries/dedup.py constants, xxhash64 sketches). Checkpoints under
     ``<pairs>__checkpoint`` so epoch ids are durable across restarts
-    (the index/corpus/pairs/marker/checkpoint dirs form one unit);
-    ``auto_repair`` rolls back a torn epoch before starting."""
+    (the index/corpus/pairs/marker/checkpoint dirs form one unit); a
+    torn epoch refuses the restart until
+    ``storage.repair_torn_epochs`` has rolled it back."""
     from osarchiver_spark.queries.dedup import (
         BANDS,
         MINHASH_THRESHOLD,
@@ -170,12 +164,6 @@ def run_streaming_text_maintenance(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.load(watch_dir)
 
-    if auto_repair:
-        repair_torn_epochs(
-            spark,
-            f"{pairs_dir.rstrip('/')}__epochs",
-            [index_dir, corpus_dir, pairs_dir],
-        )
     process_batch = make_text_maintenance_batch_fn(
         spark, index_dir, corpus_dir, pairs_dir, threshold, lsh_kw
     )

@@ -3,8 +3,9 @@ operators/export.py::export_vector_store_indexed.
 
 A live embedding pipeline does not batch drops by hand — vectors land
 in a directory (or a queue) and a Structured Streaming job keeps the
-serving store deduplicated and current. Each micro-batch runs exactly
-the per-drop maintenance step the batch capstone rehearses:
+serving store deduplicated and current. Each micro-batch runs the
+per-drop maintenance step (``make_maintenance_batch_fn``), the same
+step that export_vector_store_indexed runs once per id-range drop:
 
     micro-batch of new vectors
       → intra-batch near-dup probe        (ivf_neardup_probe over the
@@ -29,27 +30,20 @@ micro-batch boundaries. Retrain + ``ivf_reindex`` is an offline
 migration, not a streaming concern.
 
 Restart safety: ``foreachBatch`` appends are not idempotent on epoch
-REPLAY (a recovered query re-runs its last epoch), so each epoch
-brackets its appends with BEGIN/DONE markers under
-``<store>__epochs/``. A replayed epoch that finds DONE is skipped
-whole; one that finds BEGIN without DONE raises — the appends span
-several directories and are not atomic, so a crash inside that
-window leaves a partially-applied epoch that silent re-processing
-would double-append (duplicate index cells ⇒ duplicate loser pairs ⇒
-permanent divergence from the batch-build identity). Detected-and-
-refused beats silently-corrupted — and the refusal is REPAIRABLE:
-the BEGIN marker carries a manifest of every data file that existed
-in the protected directories at epoch start, so
-``repair_torn_epochs`` can delete exactly the torn epoch's partial
-appends (files not in the snapshot) and clear the marker. The stream
-checkpoints its offsets (``<store>__checkpoint``), so a restarted
-query replays the SAME epoch id over the SAME input files — after
-repair the re-run lands the epoch once, and the recovered store is
-fingerprint-identical to the one-shot build (pinned in
-tests/test_streaming_vector_store.py). BEGIN is written immediately
-before the first real append (after the probe results are
-materialized), so a crash anywhere earlier in the batch leaves no
-marker and no repair debt.
+REPLAY (a recovered query re-runs its last epoch), and the two appends
+span two directories, so each epoch is one ``storage.run_epoch``
+transaction under ``<store>__epochs/``: a replayed DONE epoch is
+skipped whole, a torn one (BEGIN without DONE) refuses instead of
+double-appending (duplicate index cells ⇒ duplicate loser pairs ⇒
+permanent divergence from the batch-build identity), and
+``storage.repair_torn_epochs`` rolls the torn appends back from the
+BEGIN manifest. The stream checkpoints its offsets
+(``<store>__checkpoint``), so a restarted query replays the SAME epoch
+id over the SAME input files — after repair the re-run lands the
+epoch once, and the recovered store is fingerprint-identical to the
+one-shot build (pinned in tests/test_crash_recovery.py). The probes
+run in the transaction's read-only stage, so a crash anywhere before
+the appends leaves no marker and no repair debt.
 """
 
 from __future__ import annotations
@@ -59,6 +53,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osarchiver_spark import storage
+from osarchiver_spark.operators.ivf import (
+    INDEXED_PROBE_MAX_QUERIES,
+    IVF_STORE_SCHEMA,
+    ivf_index,
+    ivf_neardup_probe,
+    prep_indexed_probe,
+)
 
 EMBEDDINGS_RAW_SCHEMA = T.StructType(
     [
@@ -69,99 +70,6 @@ EMBEDDINGS_RAW_SCHEMA = T.StructType(
 )
 
 
-def _mark_epoch(
-    spark: SparkSession, marker_dir: str, epoch_id: int, phase: str = "done"
-) -> None:
-    storage.mkdirs(spark, f"{marker_dir}/{epoch_id}.{phase}")
-
-
-def _begin_epoch(
-    spark: SparkSession,
-    marker_dir: str,
-    epoch_id: int,
-    protected_dirs: list[str],
-) -> None:
-    """Write the BEGIN marker with a manifest snapshot of every data
-    file currently in the protected directories. Called immediately
-    before the epoch's FIRST append — a crash before any write leaves
-    no marker at all (nothing to repair), a crash after leaves a
-    marker whose manifest diff identifies exactly the partial files."""
-    import json
-
-    # markers included: repair removes everything a torn append made
-    snapshot = {
-        d: {
-            "exists": storage.exists(spark, d),
-            "files": [f for f, _ in storage.list_files(spark, d, data_only=False)],
-        }
-        for d in protected_dirs
-    }
-    _mark_epoch(spark, marker_dir, epoch_id, "begin")
-    storage.write_text(
-        spark,
-        f"{marker_dir}/{epoch_id}.begin/manifest.json",
-        json.dumps(snapshot),
-    )
-
-
-def _epoch_guard(spark: SparkSession, marker_dir: str, epoch_id: int) -> bool:
-    """Returns True if the epoch is already DONE (skip it); raises if
-    it BEGAN but never finished (partially-applied multi-directory
-    appends — replaying would double-append); otherwise returns False
-    (proceed — the caller marks BEGIN right before its first write)."""
-    if storage.exists(spark, f"{marker_dir}/{epoch_id}.done"):
-        return True
-    if storage.exists(spark, f"{marker_dir}/{epoch_id}.begin"):
-        raise RuntimeError(
-            f"epoch {epoch_id} began but never completed under "
-            f"{marker_dir}: its appends are partially applied across "
-            f"the index/store directories and re-running would "
-            f"double-append. Run repair_torn_epochs (or drop the "
-            f"partial epoch's files by hand) before restarting."
-        )
-    return False
-
-
-def repair_torn_epochs(
-    spark: SparkSession, marker_dir: str, protected_dirs: list[str]
-) -> list[int]:
-    """Roll back every BEGIN-without-DONE epoch under ``marker_dir``:
-    delete the files the torn epoch appended (anything in a protected
-    directory that is NOT in the BEGIN manifest's snapshot; a
-    directory the snapshot says did not exist is removed whole), then
-    clear the marker. With the stream's durable checkpoint, a restart
-    replays the same epoch id over the same input files, so the
-    repaired-and-rerun store is identical to a never-crashed run.
-    Returns the repaired epoch ids."""
-    import json
-
-    torn = []
-    for name in storage.children(spark, marker_dir):
-        if not name.endswith(".begin"):
-            continue
-        epoch_id = int(name[: -len(".begin")])
-        begin = f"{marker_dir}/{name}"
-        if storage.exists(spark, f"{marker_dir}/{epoch_id}.done"):
-            continue
-        if storage.exists(spark, f"{begin}/manifest.json"):
-            manifest = json.loads(storage.read_text(spark, f"{begin}/manifest.json"))
-            for d, snap in manifest.items():
-                if not snap["exists"]:
-                    storage.delete(spark, d)
-                    continue
-                keep = set(snap["files"])
-                for f, _ in storage.list_files(spark, d, data_only=False):
-                    if f not in keep:
-                        storage.delete(spark, f)
-        # no manifest: the crash came INSIDE _begin_epoch, between the
-        # marker mkdir and the manifest write; the first append comes
-        # only after _begin_epoch returns, so nothing landed and
-        # clearing the bare marker IS the complete repair
-        storage.delete(spark, begin)
-        torn.append(epoch_id)
-    return sorted(torn)
-
-
 def make_maintenance_batch_fn(
     spark: SparkSession,
     index_dir: str,
@@ -170,87 +78,79 @@ def make_maintenance_batch_fn(
     threshold: float,
     nprobe: int,
     pq_models: tuple[list[list[float]], list[list[list[float]]]] | None = None,
+    max_batch_rows: int | None = INDEXED_PROBE_MAX_QUERIES,
 ):
-    """The per-micro-batch maintenance step, factored out so tests can
-    drive it directly (epoch-replay semantics) and foreachBatch can
-    wrap it. Appends the batch's cells to ``index_dir`` and its
-    survivors to ``store_dir`` (as PQ codes when ``pq_models`` is
-    given — the batch exports' serving-format knob, same semantics);
-    skips epochs already marked done."""
+    """The per-drop maintenance step, shared by foreachBatch and by
+    export_vector_store_indexed's drop loop, and driven directly by
+    tests (epoch-replay semantics). Appends the batch's cells to
+    ``index_dir`` and its survivors to ``store_dir`` (as PQ codes when
+    ``pq_models`` is given — the batch exports' serving-format knob,
+    same semantics); skips epochs already marked done.
+    ``max_batch_rows`` bounds both probes' query side."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
     from osarchiver_spark.operators.export import _write_store
-    from osarchiver_spark.operators.ivf import (
-        ivf_index,
-        ivf_neardup_probe,
-        prep_indexed_probe,
-    )
 
     marker_dir = f"{store_dir.rstrip('/')}__epochs"
+    probe_kw = dict(threshold=threshold, nprobe=nprobe, max_batch_rows=max_batch_rows)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if _epoch_guard(spark, marker_dir, epoch_id):
-            return  # replayed epoch: its appends already landed
-        batch = batch_df.localCheckpoint()  # stream-sourced frames
-        # cannot be re-planned after the trigger; pin the rows once
-        # (checkpoint FIRST, then count the pinned blocks — the old
-        # count-then-checkpoint order computed the batch twice)
-        n = batch.count()
-        if n == 0:
-            _mark_epoch(spark, marker_dir, epoch_id)
-            return
-        batch_index = ivf_index(batch, "vec_id", "embedding", centroids)
-        # the intra and cross probes share the SAME query side and
-        # frozen model, so the probe pass + cid collect runs ONCE and
-        # feeds both (prep_indexed_probe; r11 optimization round)
-        prepped = prep_indexed_probe(
-            batch, "vec_id", "embedding", centroids, nprobe
-        )
-        intra = ivf_neardup_probe(
-            batch_index, batch, "vec_id", "embedding", centroids,
-            threshold=threshold, nprobe=nprobe, batch_rows=n, prepped=prepped,
-        ).filter(F.col("neighbor_id") < F.col("query_id"))
-        losers = intra.select(F.col("query_id").alias("vec_id"))
-        if storage.exists(spark, index_dir):
-            from osarchiver_spark.operators.ivf import IVF_STORE_SCHEMA
+        def stage():
+            batch = batch_df.localCheckpoint()  # stream-sourced frames
+            # cannot be re-planned after the trigger; pin the rows once
+            # (checkpoint FIRST, then count the pinned blocks)
+            n = batch.count()
+            if n == 0:
+                return None
+            batch_index = ivf_index(batch, "vec_id", "embedding", centroids)
+            # the intra and cross probes share the SAME query side and
+            # frozen model, so the probe pass + cid collect runs ONCE
+            # and feeds both
+            prepped = prep_indexed_probe(batch, "vec_id", "embedding", centroids, nprobe)
+            intra = ivf_neardup_probe(
+                batch_index, batch, "vec_id", "embedding", centroids,
+                batch_rows=n, prepped=prepped, **probe_kw,
+            ).filter(F.col("neighbor_id") < F.col("query_id"))
+            losers = intra.select(F.col("query_id").alias("vec_id"))
+            if storage.exists(spark, index_dir):
+                # declared layout: re-inferring the GROWING index dir's
+                # footers every micro-batch is pure latency
+                standing = spark.read.schema(IVF_STORE_SCHEMA).parquet(index_dir)
+                cross = ivf_neardup_probe(
+                    standing, batch, "vec_id", "embedding", centroids,
+                    batch_rows=n, prepped=prepped, **probe_kw,
+                )  # first-arrival-wins: ANY standing match is a loss
+                losers = losers.unionByName(cross.select(F.col("query_id").alias("vec_id")))
+            # materialize losers BEFORE appending this batch's cells
+            # (the lazily-planned probe must never observe files
+            # appended after it)
+            return batch, batch_index, losers.distinct().localCheckpoint()
 
-            # declared layout: re-inferring the GROWING index dir's
-            # footers every micro-batch is pure latency (r11 round)
-            standing = spark.read.schema(IVF_STORE_SCHEMA).parquet(index_dir)
-            cross = ivf_neardup_probe(
-                standing, batch, "vec_id", "embedding", centroids,
-                threshold=threshold, nprobe=nprobe, batch_rows=n, prepped=prepped,
-            )  # first-arrival-wins: ANY standing match is a loss
-            losers = losers.unionByName(cross.select(F.col("query_id").alias("vec_id")))
-        # materialize losers BEFORE appending this batch's cells (the
-        # lazily-planned probe must never observe files appended after
-        # it — the capstone's checkpoint rule)
-        losers = losers.distinct().localCheckpoint()
-        # BEGIN only now: everything above is read-only, so a crash
-        # before this point leaves no marker and no repair debt; the
-        # manifest snapshot bounds the torn window to the two appends
-        _begin_epoch(spark, marker_dir, epoch_id, [index_dir, store_dir])
-        first = not storage.exists(spark, index_dir)
-        store_mode = "overwrite" if not storage.exists(spark, store_dir) else "append"
-        # the two appends target DIFFERENT directories and both read
-        # only pinned checkpoints (batch, losers), so they overlap as
-        # concurrent driver-thread jobs (guide §2.6; r12 round) — the
-        # BEGIN/DONE manifest brackets both regardless of order, so
-        # torn-epoch repair semantics are unchanged
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_idx = pool.submit(
-                inheritable_thread_target(spark)(
-                    lambda: batch_index.write.mode(
-                        "overwrite" if first else "append"
-                    ).partitionBy("cid").parquet(index_dir)
+        def append(staged) -> None:
+            batch, batch_index, losers = staged
+            first = not storage.exists(spark, index_dir)
+            store_mode = "overwrite" if not storage.exists(spark, store_dir) else "append"
+            # the two appends target DIFFERENT directories and both
+            # read only pinned checkpoints, so they overlap as
+            # concurrent driver-thread jobs; the epoch's manifest
+            # brackets both regardless of order
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                f_idx = pool.submit(
+                    inheritable_thread_target(spark)(
+                        lambda: batch_index.write.mode(
+                            "overwrite" if first else "append"
+                        ).partitionBy("cid").parquet(index_dir)
+                    )
                 )
-            )
-            survivors = batch.join(losers, "vec_id", "left_anti")
-            _write_store(survivors, centroids, pq_models, store_dir, store_mode)
-            f_idx.result()
-        _mark_epoch(spark, marker_dir, epoch_id)
+                # the DEDUP index always stores full vectors (the probe
+                # needs them); pq_models shapes only the serving store
+                survivors = batch.join(losers, "vec_id", "left_anti")
+                _write_store(survivors, centroids, pq_models, store_dir, store_mode)
+                f_idx.result()
+
+        storage.run_epoch(spark, marker_dir, epoch_id, [index_dir, store_dir], stage, append)
 
     return process_batch
 
@@ -265,9 +165,7 @@ def run_streaming_vector_maintenance(
     nprobe: int = 4,
     max_files_per_trigger: int | None = None,
     pq_models: tuple[list[list[float]], list[list[list[float]]]] | None = None,
-    auto_repair: bool = False,
     maintenance_policy: dict | None = None,
-    on_epoch=None,
 ) -> DataFrame:
     """Stream the embeddings fixture through the maintenance loop and
     return the resulting store's manifest (cid, n_vectors).
@@ -280,11 +178,11 @@ def run_streaming_vector_maintenance(
     The query checkpoints under ``<store>__checkpoint`` so epoch ids
     are DURABLE: a restarted run resumes from the committed offsets
     and a replayed epoch maps to the same input files — the property
-    the BEGIN/DONE marker guard's replay semantics rely on. The
+    the epoch transaction's replay semantics rely on. The
     index/store/marker/checkpoint directories form one unit; never
-    reuse some of them without the others. ``auto_repair`` rolls back
-    any torn epoch (crash inside the append window) before starting,
-    via ``repair_torn_epochs``.
+    reuse some of them without the others. A torn epoch (crash inside
+    the append window) refuses the restart until
+    ``storage.repair_torn_epochs`` has rolled it back.
 
     ``maintenance_policy`` (kwargs for
     :func:`osarchiver_spark.operators.health.maintain_store`, e.g.
@@ -298,14 +196,11 @@ def run_streaming_vector_maintenance(
     from osarchiver_spark.streaming.pipeline import fixture_table_watch
 
     ensure_session_defaults(spark)
-    marker_dir = f"{store_dir.rstrip('/')}__epochs"
     # a compaction swap interrupted between its renames leaves the only
     # complete copy under __precompact: restore it before anything
-    # reads, repairs or appends to the store
+    # reads or appends to the store
     storage.recover(spark, index_dir)
     storage.recover(spark, store_dir)
-    if auto_repair:
-        repair_torn_epochs(spark, marker_dir, [index_dir, store_dir])
     watch_dir, glob = fixture_table_watch(sf_dir, "embeddings")
     reader = spark.readStream.format("parquet").schema(EMBEDDINGS_RAW_SCHEMA)
     if glob:
@@ -317,16 +212,6 @@ def run_streaming_vector_maintenance(
     process_batch = make_maintenance_batch_fn(
         spark, index_dir, store_dir, centroids, threshold, nprobe, pq_models
     )
-    if on_epoch is not None:  # rehearsal instrumentation: per-epoch wall
-        import time as _time
-
-        inner = process_batch
-
-        def process_batch(batch_df, epoch_id):  # noqa: F811
-            t0 = _time.perf_counter()
-            inner(batch_df, epoch_id)
-            on_epoch(epoch_id, round(_time.perf_counter() - t0, 3))
-
     q = (
         stream.writeStream.outputMode("append")
         .option("checkpointLocation", f"{store_dir.rstrip('/')}__checkpoint")

@@ -4,7 +4,7 @@ and its epoch marker write, restart, and prove the recovered store is
 fingerprint-identical to the one-shot build — the torn-run case a
 100 TB operator actually hits.
 
-The contract under test (streaming/vector_store.py docstring):
+The contract under test (osarchiver_spark/storage.py::run_epoch):
   - a torn epoch (BEGIN without DONE) makes a plain restart REFUSE,
   - ``repair_torn_epochs`` rolls back exactly the torn epoch's
     partial appends (BEGIN-manifest diff),
@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
 
 import pytest
@@ -24,13 +25,14 @@ from pyspark.sql import functions as F
 import osarchiver_spark.operators.export as export_mod
 import osarchiver_spark.streaming.text_store as ts
 import osarchiver_spark.streaming.vector_store as vs
+from osarchiver_spark import storage
 from osarchiver_spark.operators.export import (
     export_vector_store,
     export_vector_store_indexed,
 )
 from osarchiver_spark.operators.ivf import kmeans_fit
 from osarchiver_spark.sources.parquet import load_table
-from osarchiver_spark.streaming.vector_store import repair_torn_epochs
+from osarchiver_spark.storage import repair_torn_epochs
 
 THRESHOLD = 0.45  # fixture embeddings are near-uniform (max cos ~0.5)
 
@@ -68,11 +70,11 @@ def _multi_file_source(spark, sf_small, tmp_path, n_files=3):
     return str(src_sf), emb
 
 
-def _crash_done_marker_once(monkeypatch, module, epoch_id):
-    """Patch ``module._mark_epoch`` to raise ONCE on the DONE write of
+def _crash_done_marker_once(monkeypatch, epoch_id):
+    """Patch ``storage.mark_epoch`` to raise ONCE on the DONE write of
     ``epoch_id`` — after every append landed, before the marker: the
     widest torn window."""
-    real = module._mark_epoch
+    real = storage.mark_epoch
     state = {"crashed": False}
 
     def crashy(spark, marker_dir, eid, phase="done"):
@@ -81,7 +83,7 @@ def _crash_done_marker_once(monkeypatch, module, epoch_id):
             raise RuntimeError("injected crash: appends landed, DONE marker lost")
         return real(spark, marker_dir, eid, phase)
 
-    monkeypatch.setattr(module, "_mark_epoch", crashy)
+    monkeypatch.setattr(storage, "mark_epoch", crashy)
     return state
 
 
@@ -95,7 +97,7 @@ def test_vector_stream_crash_between_append_and_marker(
     export_vector_store(spark, src_sf, one, cents, threshold=THRESHOLD, nprobe=3)
 
     idx, store = str(tmp_path / "idx"), str(tmp_path / "store")
-    state = _crash_done_marker_once(monkeypatch, vs, epoch_id=1)
+    state = _crash_done_marker_once(monkeypatch, epoch_id=1)
     with pytest.raises(Exception, match="injected crash"):
         vs.run_streaming_vector_maintenance(
             spark, src_sf, idx, store, cents,
@@ -115,10 +117,10 @@ def test_vector_stream_crash_between_append_and_marker(
 
     # repair + restart: the checkpoint replays epoch 1 over the same
     # file, epoch 2 follows, and the store equals the one-shot build
+    repair_torn_epochs(spark, f"{store}__epochs", [idx, store])
     manifest = vs.run_streaming_vector_maintenance(
         spark, src_sf, idx, store, cents,
         threshold=THRESHOLD, nprobe=3, max_files_per_trigger=1,
-        auto_repair=True,
     )
     assert _store_rows(spark, f"{one}/store") == _store_rows(spark, store)
     done = sorted(
@@ -203,7 +205,7 @@ def test_text_stream_crash_between_append_and_marker(
     idx = str(tmp_path / "tidx")
     corpus = str(tmp_path / "tcorpus")
     pairs = str(tmp_path / "tpairs")
-    state = _crash_done_marker_once(monkeypatch, ts, epoch_id=1)
+    state = _crash_done_marker_once(monkeypatch, epoch_id=1)
     with pytest.raises(Exception, match="injected crash"):
         ts.run_streaming_text_maintenance(
             spark, str(src_sf), idx, corpus, pairs,
@@ -215,9 +217,10 @@ def test_text_stream_crash_between_append_and_marker(
             spark, str(src_sf), idx, corpus, pairs,
             threshold=0.6, max_files_per_trigger=1, **kw,
         )
+    repair_torn_epochs(spark, f"{pairs}__epochs", [idx, corpus, pairs])
     graph = ts.run_streaming_text_maintenance(
         spark, str(src_sf), idx, corpus, pairs,
-        threshold=0.6, max_files_per_trigger=1, auto_repair=True, **kw,
+        threshold=0.6, max_files_per_trigger=1, **kw,
     )
     streamed = sorted(
         (min(r.doc_a, r.doc_b), max(r.doc_a, r.doc_b))
@@ -299,7 +302,7 @@ def test_text_export_mid_build_crash_is_repairable(
     )
 
     out, idx = str(tmp_path / "out"), str(tmp_path / "idx")
-    state = _crash_done_marker_once(monkeypatch, vs, epoch_id=1)
+    state = _crash_done_marker_once(monkeypatch, epoch_id=1)
     with pytest.raises(Exception, match="injected crash"):
         export_training_set_indexed(spark, sf_small, out, idx, n_batches=3)
     assert state["crashed"]
@@ -323,12 +326,43 @@ def test_text_export_mid_build_crash_is_repairable(
 
 
 def test_repair_handles_manifestless_begin_marker(spark, tmp_path):
-    """Crash INSIDE _begin_epoch (marker mkdir landed, manifest write
-    did not): no append ever ran, so repair must clear the bare
+    """Crash INSIDE the BEGIN write (marker mkdir landed, manifest
+    write did not): no append ever ran, so repair must clear the bare
     marker and report the epoch repaired."""
-    from osarchiver_spark.streaming.vector_store import _mark_epoch
-
     marker_dir = str(tmp_path / "markers")
-    _mark_epoch(spark, marker_dir, 3, "begin")  # bare: no manifest.json
+    storage.mark_epoch(spark, marker_dir, 3, "begin")  # bare: no manifest.json
     assert repair_torn_epochs(spark, marker_dir, [str(tmp_path / "idx")]) == [3]
     assert not os.path.isdir(f"{marker_dir}/3.begin")
+
+
+def test_repair_refuses_a_manifest_naming_a_foreign_directory(spark, tmp_path):
+    """A torn epoch's manifest protects [idx, store]; repairing it with
+    only [idx] (a marker_dir mismatched to its store) must raise,
+    naming the foreign directory, before any file is deleted — in idx
+    or in store."""
+    idx, store = str(tmp_path / "idx"), str(tmp_path / "store")
+    marker_dir = f"{store}__epochs"
+    for d in (idx, store):
+        spark.range(3).coalesce(1).write.parquet(d)
+
+    def append(_):  # the torn appends: one new file in each dir
+        for d in (idx, store):
+            spark.range(3, 5).coalesce(1).write.mode("append").parquet(d)
+        raise RuntimeError("injected crash: appends landed, DONE marker lost")
+
+    with pytest.raises(RuntimeError, match="injected crash"):
+        storage.run_epoch(spark, marker_dir, 0, [idx, store], lambda: True, append)
+    before = {d: sorted(os.listdir(d)) for d in (idx, store)}
+
+    with pytest.raises(ValueError, match=f"protects {re.escape(store)},"):
+        repair_torn_epochs(spark, marker_dir, [idx])
+    assert {d: sorted(os.listdir(d)) for d in (idx, store)} == before
+    assert os.path.isdir(f"{marker_dir}/0.begin")
+
+    # the matching directory list still repairs it
+    assert repair_torn_epochs(spark, marker_dir, [idx, store]) == [0]
+    assert spark.read.parquet(idx).count() == spark.read.parquet(store).count() == 3
+    # the replay stages an empty drop: DONE alone, then skipped as DONE
+    assert storage.run_epoch(spark, marker_dir, 0, [idx, store], lambda: None, None)
+    assert not storage.run_epoch(spark, marker_dir, 0, [idx, store], None, None)
+    assert sorted(os.listdir(marker_dir)) == ["0.done"]

@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
+from pathlib import Path
+from types import SimpleNamespace as NS
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,6 +41,45 @@ def test_list_files_skips_markers_and_tolerates_missing_path(spark, tmp_path):
     want_all = {n for n in os.listdir(path) if not n.endswith(".crc")}
     assert names(storage.list_files(spark, path, data_only=False)) == want_all
     assert storage.list_files(spark, str(tmp_path / "nope")) == []
+
+
+def test_hadoop_fs_and_epoch_markers_live_in_storage_only():
+    """storage.py is the one Hadoop-FS layer and the one writer of the
+    epoch marker layout (``<id>.begin/manifest.json``, ``<id>.done``):
+    no other package module may name either."""
+    pattern = re.compile(r"org\.apache\.hadoop\.fs|\.(begin|done)\b[\"'/]|manifest\.json")
+    home = Path(storage.__file__)
+    assert pattern.search(home.read_text())  # the scan sees the layer
+    offenders = [
+        f"{path.relative_to(home.parent)}:{n}: {line.strip()}"
+        for path in sorted(home.parent.rglob("*.py"))
+        if path != home
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not offenders, offenders
+
+
+def test_jvm_handles_resolve_once_per_spark_context(monkeypatch):
+    """The Path class and Hadoop conf are looked up once per
+    SparkContext (each package hop is a py4j round trip), and again
+    for a new context: a stopped context's handles are never reused."""
+    lookups = []
+
+    def session(tag):
+        def conf():
+            lookups.append(tag)
+            return f"conf-{tag}"
+
+        fs = NS(Path=f"Path-{tag}")
+        jvm = NS(org=NS(apache=NS(hadoop=NS(fs=fs))))
+        return NS(sparkContext=NS(_jvm=jvm, _jsc=NS(hadoopConfiguration=conf)))
+
+    monkeypatch.setattr(storage, "_jvm_handles", (None, None, None))
+    old, new = session("old"), session("new")
+    assert storage._jvm(old) == storage._jvm(old) == ("Path-old", "conf-old")
+    assert storage._jvm(new) == ("Path-new", "conf-new")
+    assert lookups == ["old", "new"]
 
 
 def _crash_nth(monkeypatch, name, n):
@@ -153,3 +195,37 @@ def test_stream_restart_recovers_a_compaction_crashed_between_renames(
     )
     assert vec_ids(store) == vec_ids(clean_store)
     assert not glob.glob(f"{store}__pre*") and not glob.glob(f"{store}__compacting")
+
+
+@pytest.mark.parametrize("where", ["first", "middle"])
+def test_staged_publish_crash_reruns_to_the_uncrashed_store(spark, tmp_path, monkeypatch, where):
+    """A crash on the first or on a middle part-file rename of the
+    staged publish leaves the store half-published and the stage
+    behind; re-running the build into the same directory lands the
+    rows of an uncrashed build and no ``__stage``."""
+    from osarchiver_spark.queries.similarity import _staged_store_build
+
+    schema = "neighbor_id long, v array<double>, cid int"
+    standing = spark.createDataFrame([(i, [float(i), 0.0], i % 3) for i in range(30)], schema)
+    # cid=3 is new relative to the standing write
+    drop = spark.createDataFrame([(100 + i, [0.0, float(i)], i % 4) for i in range(12)], schema).repartition(3)
+    rows = lambda d: sorted(  # noqa: E731
+        (r.neighbor_id, tuple(r.v), r.cid) for r in spark.read.schema(schema).parquet(d).collect()
+    )
+
+    clean = str(tmp_path / "clean")
+    calls = _crash_nth(monkeypatch, "_rename", 0)  # count only
+    _staged_store_build(standing, drop, clean)
+    monkeypatch.undo()
+    assert calls["n"] >= 3
+
+    idx = str(tmp_path / "idx")
+    _crash_nth(monkeypatch, "_rename", 1 if where == "first" else calls["n"] // 2 + 1)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _staged_store_build(standing, drop, idx)
+    monkeypatch.undo()
+    assert os.path.isdir(idx + "__stage")
+
+    _staged_store_build(standing, drop, idx)
+    assert rows(idx) == rows(clean) and len(rows(idx)) == 42
+    assert not os.path.exists(idx + "__stage")

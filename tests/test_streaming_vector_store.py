@@ -146,7 +146,7 @@ def test_streaming_partial_epoch_is_detected_not_replayed(
 
     import pytest
 
-    from osarchiver_spark.streaming.vector_store import _mark_epoch
+    from osarchiver_spark import storage
 
     emb = load_table(spark, sf_small, "embeddings")
     cents = kmeans_fit(emb, "vec_id", "embedding", k=8, iters=2)
@@ -154,7 +154,7 @@ def test_streaming_partial_epoch_is_detected_not_replayed(
     fn = make_maintenance_batch_fn(spark, idx, store, cents, THRESHOLD, 3)
     half = emb.filter(F.col("vec_id") % 2 == 0)
     fn(half, 0)  # completes: 0.begin + 0.done
-    _mark_epoch(spark, f"{store}__epochs", 1, "begin")  # simulated crash
+    storage.mark_epoch(spark, f"{store}__epochs", 1, "begin")  # simulated crash
     with pytest.raises(RuntimeError, match="began but never completed"):
         fn(emb.filter(F.col("vec_id") % 2 == 1), 1)
     # the completed epoch still replays as a no-op
