@@ -12,7 +12,8 @@ errors.py:24-29).
 Dry-run (reference X1, common/db.py:287-303: execute+rollback) is
 plan-only: count what would be archived, write nothing.
 
-Scale design notes:
+Scale design notes (both overlaps are ``session.concurrently``, so
+every job carries the caller's job group):
 - one cached set, consumed concurrently: the archived count, every
   sink write and the remaining-count run at once on driver threads
   (a not-yet-built cached block is computed once, shared through the
@@ -22,7 +23,7 @@ Scale design notes:
   second pushdown scan, no shuffle at all; the anti-join path exists
   for externally-supplied archived sets;
 - tables are pipelined, deletes are not: table k+1's archive phase
-  runs on one lookahead thread while table k's delete (rewrite, then
+  runs on a side thread while table k's delete (rewrite, then
   watermark advance) runs on the caller's thread, one delete at a
   time in FK order. If a delete raises, the run re-raises once the
   lookahead has drained: sinks may already hold the next table's rows
@@ -31,11 +32,10 @@ Scale design notes:
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime
+from functools import partial
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from osarchiver_spark.operators.retention import (
@@ -47,6 +47,7 @@ from osarchiver_spark.operators.retention import (
 )
 from osarchiver_spark.plans.jobspec import ArchiveJobSpec, TableSpec
 from osarchiver_spark.plans.toposort import sort_tables
+from osarchiver_spark.session import concurrently
 from osarchiver_spark.sinks.base import Sink
 
 
@@ -93,25 +94,28 @@ class Archiver:
         cutoff = retention_cutoff(now, self.spec.retention_months)
         for sink in self.sinks:
             sink.begin_run(now)  # dated per-run namespace for file sinks
+
+        def archive(t: TableSpec):
+            return self._archive(t, dataframes[t.name], cutoff)
+
+        def delete(t: TableSpec, staged: tuple[TableRunResult, DataFrame | None]) -> TableRunResult:
+            result, remaining = staged
+            if result.error is None and not result.dry_run:
+                if remaining is not None and self.source_rewriter is not None:
+                    self.source_rewriter(t.name, remaining)  # type: ignore[operator]
+                if self.watermarks is not None:
+                    self.watermarks.advance(t.name, cutoff)  # type: ignore[attr-defined]
+            return result
+
+        if not tables:
+            return []
         results: list[TableRunResult] = []
-        with ThreadPoolExecutor(max_workers=1) as lookahead:  # drains before a raise leaves run
-
-            def archive(t: TableSpec):  # one wrap per table: its own copy of the job group
-                df = dataframes[t.name]
-                return lookahead.submit(inheritable_thread_target(df.sparkSession)(self._archive), t, df, cutoff)
-
-            pending = archive(tables[0]) if tables else None
-            for k, tspec in enumerate(tables):
-                result, remaining = pending.result()
-                if k + 1 < len(tables):
-                    pending = archive(tables[k + 1])  # overlaps this table's delete
-                if result.error is None and not result.dry_run:
-                    if remaining is not None and self.source_rewriter is not None:
-                        self.source_rewriter(tspec.name, remaining)  # type: ignore[operator]
-                    if self.watermarks is not None:
-                        self.watermarks.advance(tspec.name, cutoff)  # type: ignore[attr-defined]
-                results.append(result)
-        return results
+        staged = archive(tables[0])
+        for tspec, nxt in zip(tables, tables[1:]):  # the next table's archive phase overlaps this delete
+            spark = dataframes[nxt.name].sparkSession
+            result, staged = concurrently(spark, partial(delete, tspec, staged), partial(archive, nxt))
+            results.append(result)
+        return results + [delete(tables[-1], staged)]
 
     def _archive(
         self, tspec: TableSpec, df: DataFrame, cutoff: datetime
@@ -135,30 +139,31 @@ class Archiver:
             archived = archived.cache()  # one scan feeds N sinks
         # negated-predicate complement: no join/shuffle (module docstring)
         remaining = df.filter(~pred | df[tspec.deleted_column].isNull()) if self.spec.delete_data else None
-        ex = ThreadPoolExecutor(max_workers=len(sinks) + 2)
 
-        def submit(fn, *args):
-            # one wrap per task: each thread gets its own copy of the
-            # caller's local properties (job group included)
-            return ex.submit(inheritable_thread_target(df.sparkSession)(fn), *args)
+        def attempt(fn, *args):  # the exception is the outcome: every sink is attempted
+            try:
+                return fn(*args)
+            except Exception as exc:  # noqa: BLE001
+                return exc
 
+        legs = [partial(attempt, sink.write, tspec.name, archived) for sink in sinks]
+        if remaining is not None:
+            legs.append(partial(attempt, remaining.count))
         try:  # both counts land BEFORE the rewriter touches the source
-            with ex:
-                archived_count = submit(archived.count)
-                writes = [submit(sink.write, tspec.name, archived) for sink in sinks]
-                remaining_count = submit(remaining.count) if remaining is not None else None
+            n_archived, *outcomes = concurrently(df.sparkSession, archived.count, *legs)
         finally:
             if sinks:
-                archived.unpersist()  # the pool has drained
-        n_archived = archived_count.result()  # a failed count raises before any delete
-        failed = [(s, w.exception()) for s, w in zip(sinks, writes) if w.exception() is not None]
+                archived.unpersist()  # every leg has drained
+        failed = [(s, exc) for s, exc in zip(sinks, outcomes) if isinstance(exc, Exception)]
         if failed:
             # Suppress this table's delete, keep the run going: other
             # sinks' and tables' completed work stands (archiver.py:97-103).
             sink, exc = failed[0]
             error = f"sink {type(sink).__name__} failed for {tspec.name}: {exc}"
             return TableRunResult(tspec.name, n_archived, None, dry_run=False, error=error), None
-        n_remaining = remaining_count.result() if remaining_count is not None else None
+        n_remaining = outcomes[-1] if remaining is not None else None
+        if isinstance(n_remaining, Exception):
+            raise n_remaining
         return TableRunResult(tspec.name, n_archived, n_remaining, dry_run=False), remaining
 
 

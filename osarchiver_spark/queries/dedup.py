@@ -104,15 +104,12 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     write to a temp dir, read back, probe. Same semantics — and the
     same oracle — as dedup_incremental: at 100 TB this replaces the
     per-batch corpus re-sketch with an indexed lookup."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     from osarchiver_spark.operators.dedup import (
         minhash_lsh_incremental_indexed,
         minhash_lsh_index,
         prep_new_bands,
     )
+    from osarchiver_spark.session import concurrently
 
     docs = load_table(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 10 == 3)
@@ -129,18 +126,11 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_n=3, num_hashes=NUM_HASHES, bands=BANDS, num_files=8,
     )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_idx = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: built.write.mode("overwrite").parquet(idx_dir)
-            )
-        )
-        f_prep = pool.submit(
-            inheritable_thread_target(spark)(prep_new_bands),
-            new, "doc_id", "text", 3, NUM_HASHES, BANDS,
-        )
-        f_idx.result()
-        prepped = f_prep.result()
+    _, prepped = concurrently(
+        spark,
+        lambda: built.write.mode("overwrite").parquet(idx_dir),
+        lambda: prep_new_bands(new, "doc_id", "text", 3, NUM_HASHES, BANDS),
+    )
     # read back with the builder's own (analysis-only) schema: no
     # footer re-inference job on the freshly written index (r11 round)
     index = spark.read.schema(built.schema).parquet(idx_dir)
@@ -213,20 +203,10 @@ def q_dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     table its output equals batch first-occurrence dedup, so the same
     SQL oracle applies; cross-batch state is tested in
     tests/test_streaming_dedup.py."""
-    from pyspark.sql import types as T
-
     from osarchiver_spark.streaming.dedup import run_streaming_dedup
+    from osarchiver_spark.streaming.text_store import DOCUMENTS_RAW_SCHEMA
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    return run_streaming_dedup(spark, sf_dir, schema, path_glob="documents.parquet")
+    return run_streaming_dedup(spark, sf_dir, "documents", DOCUMENTS_RAW_SCHEMA)
 
 
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,12 +12,10 @@ tests/test_similarity.py and tests/test_ivf.py.
 from __future__ import annotations
 
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Any
 from urllib.parse import urlparse
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,6 +42,7 @@ from osarchiver_spark.operators.pq import (
 )
 from osarchiver_spark.operators.similarity import brute_force_topk, lsh_topk
 from osarchiver_spark.queries.scratch import reap_at_exit, scratch_dir
+from osarchiver_spark.session import concurrently
 from osarchiver_spark.sources.parquet import load_table
 
 QUERY_MOD = 100  # vec_id % 100 == 0 → small deterministic query set
@@ -128,16 +127,11 @@ def _staged_store_build(standing_index: DataFrame, drop_index: DataFrame, idx_di
     # leak the staging root past process exit
     reap_at_exit((parsed.path if parsed.scheme else idx_dir).rstrip("/") + "__stage")
     spark = drop_index.sparkSession
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_drop = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: drop_index.write.mode("overwrite")
-                .partitionBy("cid")
-                .parquet(stage_dir)
-            )
-        )
-        standing_index.write.mode("overwrite").partitionBy("cid").parquet(idx_dir)
-        f_drop.result()
+    concurrently(
+        spark,
+        lambda: standing_index.write.mode("overwrite").partitionBy("cid").parquet(idx_dir),
+        lambda: drop_index.write.mode("overwrite").partitionBy("cid").parquet(stage_dir),
+    )
     storage.publish_partitions(spark, stage_dir, idx_dir)
 
 
@@ -236,21 +230,23 @@ def ann_chain(
       then probe the migrated store.
 
     Mutually independent legs run as concurrent driver-thread jobs
-    (guide §2.6: actions are only sequential because the driver calls
-    them sequentially): the probe's batch-contract count beside the
-    fit(s), the migrate shape's old leg beside the new fit, and the
-    query-side probe prep beside the store write. The batch guard runs
-    before the prep, so an oversized batch fails before its
-    queries × nprobe frame is materialized. Side threads inherit the
-    caller's job group, so every job is attributed to the query and
-    ``cancelJobGroup`` reaches all of them. Each leg's own job chain,
-    and therefore its math, is the sequential one."""
+    through ``session.concurrently`` (guide §2.6: actions are only
+    sequential because the driver calls them sequentially): the
+    probe's batch-contract count beside the fit(s), the migrate
+    shape's old leg beside the new fit, and the query-side probe prep
+    beside the store write (whose standing and drop writes overlap in
+    turn, :func:`_staged_store_build`). The batch guard runs before
+    the prep, so an oversized batch fails before its queries × nprobe
+    frame is materialized. Every job carries the caller's job group,
+    so it is attributed to the query and ``cancelJobGroup`` reaches
+    all of them. Each leg's own job chain, and therefore its math, is
+    the sequential one."""
     emb = load_table(spark, sf_dir, "embeddings")
     standing = emb.filter(F.col("vec_id") % 10 != 3)
     drop = emb.filter(F.col("vec_id") % 10 == 3)
-    count_batch = inheritable_thread_target(spark)(
-        lambda: queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count()
-    )
+
+    def count_batch() -> int:
+        return queries.limit(INDEXED_PROBE_MAX_QUERIES + 1).count()
 
     def build_store(model, store_dir: str) -> None:
         _staged_store_build(codec.index(standing, model), codec.index(drop, model), store_dir)
@@ -262,33 +258,22 @@ def ann_chain(
         def old_leg() -> None:
             build_store(codec.fit(emb.filter(F.col("vec_id") % 2 == 0), 8), old_dir)
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_old = pool.submit(inheritable_thread_target(spark)(old_leg))
-            f_new = pool.submit(inheritable_thread_target(spark)(codec.fit), emb, 16)
-            f_n = pool.submit(count_batch)
-            f_old.result()
-            model = f_new.result()
-            batch_rows = f_n.result()
+        _, model, batch_rows = concurrently(spark, old_leg, lambda: codec.fit(emb, 16), count_batch)
         old_store = spark.read.schema(codec.store_schema).parquet(old_dir)
     else:
         store_dir = scratch_dir(spark, sf_dir, dir_prefix)
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_n = pool.submit(count_batch)
-            model = codec.fit(emb, 16)
-            batch_rows = f_n.result()
+        model, batch_rows = concurrently(spark, lambda: codec.fit(emb, 16), count_batch)
     guard_batch(queries, INDEXED_PROBE_MAX_QUERIES, codec.op_name, batch_rows)
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_probe = pool.submit(
-            inheritable_thread_target(spark)(codec.prep), queries, model, nprobe
-        )
+    def write_store() -> None:
         if migrate:
             codec.reindex(old_store, emb, model).write.mode("overwrite").partitionBy(
                 "cid"
             ).parquet(store_dir)
         else:
             build_store(model, store_dir)
-        prepped = f_probe.result()
+
+    _, prepped = concurrently(spark, write_store, lambda: codec.prep(queries, model, nprobe))
     store = spark.read.schema(codec.store_schema).parquet(store_dir)
     return codec.probe(store, queries, emb, model, nprobe, batch_rows, prepped)
 

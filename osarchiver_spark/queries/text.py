@@ -154,24 +154,11 @@ def q_streaming_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch of the whole table this equals the batch min-per-
     fingerprint of the gated documents — the SQL oracle; cross-batch
     state is pinned in tests/test_streaming_dedup.py."""
-    from pyspark.sql import types as T
-
     from osarchiver_spark.streaming.dedup import run_streaming_dedup
+    from osarchiver_spark.streaming.text_store import DOCUMENTS_RAW_SCHEMA
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
     return run_streaming_dedup(
-        spark, sf_dir, schema,
-        path_glob="documents.parquet",
-        transform=corpus_gate,
-        scratch="scorpus",
+        spark, sf_dir, "documents", DOCUMENTS_RAW_SCHEMA, transform=corpus_gate, scratch="scorpus"
     )
 
 

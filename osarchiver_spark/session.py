@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-aware defaults.
+"""SparkSession factory with scale-aware defaults, and the one
+driver-thread overlap.
 
 Local testing runs on local[N]; the same config block is what we'd
 ship to a 1000-executor cluster (AQE on, adaptive coalesce, skew-join
@@ -10,7 +11,11 @@ doesn't over-parallelize tiny SFs.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 
@@ -50,3 +55,27 @@ def get_spark(app_name: str = "osarchiver_spark", shuffle_partitions: int | None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def concurrently(spark: SparkSession, *calls: Callable[[], Any]) -> list:
+    """Run independent Spark actions at once from the driver: Spark
+    schedules jobs from several driver threads side by side, so legs
+    that share no inputs need not wait for each other.
+
+    ``calls[0]`` runs on the caller's thread, each of ``calls[1:]`` on
+    its own side thread. Every side call is wrapped here, at call time,
+    in ``inheritable_thread_target(spark)``: it runs with a copy of the
+    caller's local properties, so its jobs carry the caller's job group
+    (attributed to the caller's query, reached by ``cancelJobGroup``).
+    Waits for every call, then raises the first exception in argument
+    order, else returns the results in argument order."""
+    failed: Exception | None = None
+    with ThreadPoolExecutor(max_workers=max(len(calls) - 1, 1)) as pool:
+        side = [pool.submit(inheritable_thread_target(spark)(call)) for call in calls[1:]]
+        try:
+            head = calls[0]()
+        except Exception as exc:  # re-raised once the side calls have drained
+            failed = exc
+    if failed is not None:
+        raise failed
+    return [head] + [f.result() for f in side]

@@ -16,10 +16,13 @@ Backends re-expressed Spark-first:
 A 100 TB note: every sink takes the *same* cached DataFrame — one
 scan feeds N destinations (reference fan-out, archiver.py:44-64) —
 and the Archiver runs the sink writes concurrently on that one cached
-set, so a sink's ``write`` must be safe to call beside other sinks'
-and beside the previous table's source rewrite. The source delete
-waits until every sink has landed. Writes are partitioned by a date
-column when available, so the archive lays out as date-pruned parquet.
+set (``session.concurrently``, one driver thread per sink, each in the
+run's job group), so a sink's ``write`` must be thread-safe beside
+other sinks' and beside the previous table's source rewrite. A sink
+that raises fails only its table; every other sink is still
+attempted. The source delete waits until every sink has landed.
+Writes are partitioned by a date column when available, so the
+archive lays out as date-pruned parquet.
 """
 
 from __future__ import annotations
@@ -34,6 +37,12 @@ from pyspark.sql import functions as F
 from osarchiver_spark import storage
 from osarchiver_spark.plans.naming import render_suffix
 from osarchiver_spark.plans.schema_drift import check_schema_drift
+
+
+def key_lists(primary_keys: dict[str, str | list[str]]) -> dict[str, list[str]]:
+    """Per-table primary keys, single or composite (e.g. lineitem's
+    (l_orderkey, l_linenumber)), normalized to column lists."""
+    return {t: [k] if isinstance(k, str) else list(k) for t, k in primary_keys.items()}
 
 
 class Sink(ABC):
@@ -77,11 +86,16 @@ class _DatedFileSink(Sink):
         run_dir = self._run_dir or render_suffix(self.run_template, datetime.now())
         return os.path.join(self.root, run_dir, leaf)
 
+    def _object_prefix(self, table: str) -> str:
+        """The table's dataset: a directory of part files (an object
+        name prefix on a store)."""
+        return self._out_path(f"{table}.{self.ext}")
+
     def write(self, table: str, df: DataFrame) -> None:
         writer = df.write.mode("overwrite").options(**self.options)
         if self.compression:
             writer = writer.option("compression", self.compression)
-        writer.format(self.fmt).save(self._out_path(f"{table}.{self.ext}"))
+        writer.format(self.fmt).save(self._object_prefix(table))
 
 
 class CsvSink(_DatedFileSink):
@@ -136,9 +150,7 @@ class ParquetArchiveSink(Sink):
         allow_additive: bool = False,
     ):
         self.root = root
-        # single or composite keys (e.g. lineitem's (l_orderkey,
-        # l_linenumber)); normalized to lists
-        self.primary_keys = {t: [k] if isinstance(k, str) else list(k) for t, k in primary_keys.items()}
+        self.primary_keys = key_lists(primary_keys)
         self.partition_column = partition_column
         # additive schema evolution: accept sources that have grown
         # new columns (old files read them back as null via
@@ -211,7 +223,7 @@ class SqlDumpSink(_DatedFileSink):
 
     def __init__(self, root: str, primary_keys: dict[str, str | list[str]], run_template: str = "{date}"):
         super().__init__(root, run_template=run_template)
-        self.primary_keys = {t: [k] if isinstance(k, str) else list(k) for t, k in primary_keys.items()}
+        self.primary_keys = key_lists(primary_keys)
 
     def write(self, table: str, df: DataFrame) -> None:
         pk = self.primary_keys[table][0]

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from osarchiver_spark.plans.schema_drift import check_schema_drift
-from osarchiver_spark.sinks.base import Sink
+from osarchiver_spark.sinks.base import Sink, key_lists
 
 _DDL_TYPES: dict[type, str] = {
     T.LongType: "BIGINT",
@@ -228,10 +228,7 @@ class JdbcArchiveSink(Sink):
         read_partitions: int = 8,
     ):
         self.url = url
-        self.primary_keys = {
-            t: [k] if isinstance(k, str) else list(k)
-            for t, k in primary_keys.items()
-        }
+        self.primary_keys = key_lists(primary_keys)
         self.driver = driver
         self.batch_size = batch_size
         self.user = user

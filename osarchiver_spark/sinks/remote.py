@@ -23,12 +23,11 @@ from __future__ import annotations
 import re
 import threading
 from contextlib import nullcontext
-from datetime import datetime
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 
-from osarchiver_spark.sinks.base import Sink
+from osarchiver_spark.sinks.base import _DatedFileSink
 
 # global s3a keys (NOT already bucket-scoped) that can be rewritten to
 # Hadoop's per-bucket form so they never touch other sinks' buckets
@@ -43,8 +42,9 @@ _S3A_GLOBAL = re.compile(r"^fs\.s3a\.(?!bucket\.)(?P<rest>.+)$")
 _TRANSIENT_CONF_LOCK = threading.Lock()
 
 
-class RemoteStoreSink(Sink):
-    """Direct-to-object-store archive writes.
+class RemoteStoreSink(_DatedFileSink):
+    """Direct-to-object-store archive writes: a dated file sink rooted
+    at ``<base_uri>/<file_name_prefix>``.
 
     store_options: like the reference, ``opt_``-prefixed keys pass
     through to the underlying connector — here they become Hadoop
@@ -69,27 +69,15 @@ class RemoteStoreSink(Sink):
         if fmt not in ("parquet", "csv"):
             raise ValueError(f"unsupported remote format {fmt!r}")
         self.base_uri = base_uri.rstrip("/")
-        self.file_name_prefix = file_name_prefix.strip("/")
-        self.fmt = fmt
-        self.compression = compression
+        prefix = file_name_prefix.strip("/")
+        super().__init__(f"{self.base_uri}/{prefix}" if prefix else self.base_uri, compression)
+        self.fmt = self.ext = fmt
+        self.options = {"header": True} if fmt == "csv" else {}
         self.store_options = {
             k.removeprefix("opt_"): v
             for k, v in (store_options or {}).items()
             if k.startswith("opt_")
         }
-        self._date: str | None = None
-
-    def begin_run(self, now: datetime) -> None:
-        self._date = now.strftime("%Y-%m-%d_%H-%M-%S")
-
-    def _object_prefix(self, table: str) -> str:
-        date = self._date or datetime.now().strftime("%Y-%m-%d_%H-%M-%S")
-        parts = [self.base_uri]
-        if self.file_name_prefix:
-            parts.append(self.file_name_prefix)
-        parts.append(date)
-        parts.append(f"{table}.{self.fmt}")
-        return "/".join(parts)
 
     def scoped_store_options(self) -> tuple[dict[str, str], dict[str, str]]:
         """Partition store_options into (bucket-scoped, transient).
@@ -112,8 +100,7 @@ class RemoteStoreSink(Sink):
         return scoped, transient
 
     def write(self, table: str, df: DataFrame) -> None:
-        spark = df.sparkSession
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
+        hconf = df.sparkSession.sparkContext._jsc.hadoopConfiguration()
         scoped, transient = self.scoped_store_options()
         for k, v in scoped.items():
             hconf.set(k, v)
@@ -122,16 +109,7 @@ class RemoteStoreSink(Sink):
             for k, v in transient.items():
                 hconf.set(k, v)
             try:
-                writer = df.write.mode("overwrite")
-                if self.fmt == "csv":
-                    writer = writer.option("header", True)
-                    if self.compression:
-                        writer = writer.option("compression", self.compression)
-                    writer.csv(self._object_prefix(table))
-                else:
-                    if self.compression:
-                        writer = writer.option("compression", self.compression)
-                    writer.parquet(self._object_prefix(table))
+                super().write(table, df)
             finally:
                 for k, old in prior.items():
                     if old is None:

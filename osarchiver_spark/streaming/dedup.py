@@ -95,33 +95,22 @@ def streaming_dedup_watermarked(
 
 def run_streaming_dedup(
     spark: SparkSession,
-    watch_dir: str,
+    sf_dir: str,
+    table: str,
     schema: T.StructType,
-    path_glob: str | None = None,
     transform=None,
     scratch: str = "sdedup",
 ) -> DataFrame:
-    """Drive the stateful dedup over all files currently in watch_dir
-    (optionally narrowed by a glob) and return the emitted rows as a
-    batch DataFrame. ``transform`` (stream → stream, stateless
-    columns/filters only) runs BEFORE the stateful dedup — the hook
-    that fuses ingest gates into the same micro-batch pass."""
-    import os
+    """Drive the stateful dedup over all files currently in one
+    fixture table and return the emitted rows as a batch DataFrame.
+    ``transform`` (stream → stream, stateless columns/filters only)
+    runs BEFORE the stateful dedup — the hook that fuses ingest gates
+    into the same micro-batch pass."""
+    from osarchiver_spark.streaming.pipeline import drain_stream_to_parquet, fixture_stream
 
-    # directory-per-table fixtures (self-built scale dirs): the glob
-    # names a DIRECTORY, which the file source would silently match
-    # zero files against — watch the directory itself instead (see
-    # streaming/pipeline.py::fixture_table_watch)
-    if path_glob and os.path.isdir(os.path.join(watch_dir, path_glob)):
-        watch_dir = os.path.join(watch_dir, path_glob)
-        path_glob = None
-    reader = spark.readStream.format("parquet").schema(schema)
-    if path_glob:
-        reader = reader.option("pathGlobFilter", path_glob)
-    stream = reader.load(watch_dir)
+    stream = fixture_stream(spark, sf_dir, table, schema)
     if transform is not None:
         stream = transform(stream)
-    from osarchiver_spark.streaming.pipeline import drain_stream_to_parquet
 
     out = streaming_dedup_first_seen(stream, "doc_id", "text")
     return drain_stream_to_parquet(out, "append", scratch)

@@ -67,12 +67,14 @@ class stream_state_partitions:
     session-global for the drain window, so a batch job planned from
     ANOTHER driver thread during that window would silently run at
     the streaming partition count. Every drain in this package runs
-    single-threaded on its query's critical path (the §2.6 thread
-    overlaps live in the batch-only ANN/dedup builders, never around
-    a drain); callers embedding these drains in their own thread
-    pools must either serialize them with concurrent batch planning
-    or build the streaming frame in a cloned session
-    (``spark.newSession()``) and narrow that clone instead."""
+    single-threaded on its query's critical path: the §2.6 thread
+    overlaps all go through ``session.concurrently`` (the archive
+    fan-out and lookahead, the ANN/dedup builders, the vector store's
+    per-epoch append), and none of them runs around a narrowed drain.
+    Callers embedding these drains in their own driver threads must
+    either serialize them with concurrent batch planning or build the
+    streaming frame in a cloned session (``spark.newSession()``) and
+    narrow that clone instead."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -154,16 +156,32 @@ def fixture_table_watch(sf_dir: str, table: str) -> tuple[str, str | None]:
     return sf_dir, f"{table}.parquet"
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events fixture with event-time column."""
+def fixture_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    schema: T.StructType,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """readStream over one fixture table (watched as
+    :func:`fixture_table_watch` says) with its declared schema.
+    ``max_files_per_trigger`` splits a multi-file source into several
+    micro-batches; ``None`` reads all available input in one."""
     from osarchiver_spark.sources.parquet import ensure_session_defaults
 
     ensure_session_defaults(spark)
-    watch_dir, glob = fixture_table_watch(sf_dir, "events")
-    reader = spark.readStream.format("parquet").schema(EVENTS_RAW_SCHEMA)
+    watch_dir, glob = fixture_table_watch(sf_dir, table)
+    reader = spark.readStream.format("parquet").schema(schema)
     if glob:
         reader = reader.option("pathGlobFilter", glob)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(watch_dir)
+
+
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """readStream over the events fixture with event-time column."""
+    return fixture_stream(spark, sf_dir, "events", EVENTS_RAW_SCHEMA)
 
 
 def streaming_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

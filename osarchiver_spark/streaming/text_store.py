@@ -145,8 +145,7 @@ def run_streaming_text_maintenance(
         MINHASH_THRESHOLD,
         NUM_HASHES,
     )
-    from osarchiver_spark.sources.parquet import ensure_session_defaults
-    from osarchiver_spark.streaming.pipeline import fixture_table_watch
+    from osarchiver_spark.streaming.pipeline import fixture_stream
 
     lsh_kw = dict(
         shingle_n=3, num_hashes=NUM_HASHES, bands=BANDS, hash_fn="xxhash64"
@@ -155,14 +154,7 @@ def run_streaming_text_maintenance(
     if threshold is None:
         threshold = MINHASH_THRESHOLD
 
-    ensure_session_defaults(spark)
-    watch_dir, glob = fixture_table_watch(sf_dir, "documents")
-    reader = spark.readStream.format("parquet").schema(DOCUMENTS_RAW_SCHEMA)
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(watch_dir)
+    stream = fixture_stream(spark, sf_dir, "documents", DOCUMENTS_RAW_SCHEMA, max_files_per_trigger)
 
     process_batch = make_text_maintenance_batch_fn(
         spark, index_dir, corpus_dir, pairs_dir, threshold, lsh_kw

@@ -87,11 +87,8 @@ def make_maintenance_batch_fn(
     ``pq_models`` is given — the batch exports' serving-format knob,
     same semantics); skips epochs already marked done.
     ``max_batch_rows`` bounds both probes' query side."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     from osarchiver_spark.operators.export import _write_store
+    from osarchiver_spark.session import concurrently
 
     marker_dir = f"{store_dir.rstrip('/')}__epochs"
     probe_kw = dict(threshold=threshold, nprobe=nprobe, max_batch_rows=max_batch_rows)
@@ -132,23 +129,20 @@ def make_maintenance_batch_fn(
             batch, batch_index, losers = staged
             first = not storage.exists(spark, index_dir)
             store_mode = "overwrite" if not storage.exists(spark, store_dir) else "append"
+            # the DEDUP index always stores full vectors (the probe
+            # needs them); pq_models shapes only the serving store
+            survivors = batch.join(losers, "vec_id", "left_anti")
             # the two appends target DIFFERENT directories and both
             # read only pinned checkpoints, so they overlap as
             # concurrent driver-thread jobs; the epoch's manifest
             # brackets both regardless of order
-            with ThreadPoolExecutor(max_workers=1) as pool:
-                f_idx = pool.submit(
-                    inheritable_thread_target(spark)(
-                        lambda: batch_index.write.mode(
-                            "overwrite" if first else "append"
-                        ).partitionBy("cid").parquet(index_dir)
-                    )
-                )
-                # the DEDUP index always stores full vectors (the probe
-                # needs them); pq_models shapes only the serving store
-                survivors = batch.join(losers, "vec_id", "left_anti")
-                _write_store(survivors, centroids, pq_models, store_dir, store_mode)
-                f_idx.result()
+            concurrently(
+                spark,
+                lambda: _write_store(survivors, centroids, pq_models, store_dir, store_mode),
+                lambda: batch_index.write.mode("overwrite" if first else "append")
+                .partitionBy("cid")
+                .parquet(index_dir),
+            )
 
         storage.run_epoch(spark, marker_dir, epoch_id, [index_dir, store_dir], stage, append)
 
@@ -192,22 +186,14 @@ def run_streaming_vector_maintenance(
     branch rewrites it layout-preserving once a cell's file count
     crosses the threshold; drift signals come back as a ``retrain``
     decision in the report (never auto-executed)."""
-    from osarchiver_spark.sources.parquet import ensure_session_defaults
-    from osarchiver_spark.streaming.pipeline import fixture_table_watch
+    from osarchiver_spark.streaming.pipeline import fixture_stream
 
-    ensure_session_defaults(spark)
     # a compaction swap interrupted between its renames leaves the only
     # complete copy under __precompact: restore it before anything
     # reads or appends to the store
     storage.recover(spark, index_dir)
     storage.recover(spark, store_dir)
-    watch_dir, glob = fixture_table_watch(sf_dir, "embeddings")
-    reader = spark.readStream.format("parquet").schema(EMBEDDINGS_RAW_SCHEMA)
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(watch_dir)
+    stream = fixture_stream(spark, sf_dir, "embeddings", EMBEDDINGS_RAW_SCHEMA, max_files_per_trigger)
 
     process_batch = make_maintenance_batch_fn(
         spark, index_dir, store_dir, centroids, threshold, nprobe, pq_models

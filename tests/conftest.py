@@ -4,6 +4,7 @@ import os
 import sys
 
 import pytest
+from pyspark import SparkContext
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -29,6 +30,13 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("osarchiver_spark_tests")
     yield spark
+    # Stop the session and its py4j gateway while pytest's streams are
+    # open: left to interpreter exit, each connection's finalizer logs
+    # "Closing down clientserver connection" through the root handler
+    # that the CLI tests' configure_logger bound to a closed capture
+    # stream ("--- Logging error ---" after the summary line).
+    spark.stop()
+    SparkContext._gateway.shutdown()
 
 
 @pytest.fixture(scope="session")

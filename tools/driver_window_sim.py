@@ -23,12 +23,14 @@ compare runs in a worker thread under a per-query Spark job group that
 is cancelled on expiry (skip-and-record beats stall; a timed-out entry
 is recorded as ``timeout``, not a value mismatch).
 
-Exit 0 iff every compared query matches. Queries without an oracle
+Exit 0 iff every compared query matches, 2 on a bad command line
+(before any Spark session starts). Queries without an oracle
 (rows-only at the driver) are reported and skipped.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -40,12 +42,16 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
 
-def _flag_value(flag: str) -> str | None:
-    if flag in sys.argv:
-        i = sys.argv.index(flag)
-        if i + 1 < len(sys.argv):
-            return sys.argv[i + 1]
-    return None
+def _parse_args(argv: list[str] | None) -> argparse.Namespace:
+    parser = argparse.ArgumentParser(
+        description="Compare registry queries against their DuckDB oracles, bit-exact."
+    )
+    parser.add_argument("sf_dir", nargs="?", metavar="SF_DIR", help="fixture directory (default: sf0.01)")
+    parser.add_argument("--all", action="store_true", help="every registry entry, not the first 50")
+    parser.add_argument("--only", metavar="NAMES", help="comma-separated registry names")
+    parser.add_argument("--log", metavar="FILE", help="append one JSON line per query; resume from it")
+    parser.add_argument("--timeout", type=float, metavar="SECS", help="cancel a query after SECS")
+    return parser.parse_args(argv)
 
 
 def _done_names(log_path: str) -> dict[str, str]:
@@ -70,21 +76,10 @@ def _done_names(log_path: str) -> dict[str, str]:
     return done
 
 
-def main() -> int:
-    log_path = _flag_value("--log")
-    timeout_s = float(_flag_value("--timeout") or 0) or None
-    only = _flag_value("--only")
-    consumed: set[int] = set()
-    for flag in ("--log", "--timeout", "--only"):
-        if flag in sys.argv:
-            i = sys.argv.index(flag)
-            consumed.update({i, i + 1})
-    args = [
-        a
-        for i, a in enumerate(sys.argv[1:], 1)
-        if not a.startswith("--") and i not in consumed
-    ]
-    run_all = "--all" in sys.argv
+def main(argv: list[str] | None = None) -> int:
+    opts = _parse_args(argv)
+    log_path, only, timeout_s = opts.log, opts.only, opts.timeout or None
+    args = [opts.sf_dir] if opts.sf_dir else []
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
 
     import importlib.util
@@ -108,7 +103,7 @@ def main() -> int:
             return 2
         names = wanted
     else:
-        names = list(qs) if run_all else list(qs)[:50]
+        names = list(qs) if opts.all else list(qs)[:50]
     done = _done_names(log_path) if log_path else {}
     if done:
         print(f"resume: skipping {len(done)} names already recorded in {log_path}")
