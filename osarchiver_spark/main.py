@@ -117,7 +117,22 @@ def run_query(name: str, sf_dir: str, out: str | None, limit: int) -> int:
 
 
 def run(argv: list[str] | None = None) -> int:
-    args = parse_args(argv)
+    """CLI entry. The root logger's handlers and level are restored on
+    return, so a host process (a test, a notebook) keeps its own
+    logging rather than one bound to a stream that may close."""
+    root = logging.getLogger()
+    handlers, level = root.handlers[:], root.level
+    try:
+        return _run(parse_args(argv))
+    finally:
+        for h in root.handlers:
+            if h not in handlers:
+                h.close()
+        root.handlers[:] = handlers
+        root.setLevel(level)
+
+
+def _run(args: argparse.Namespace) -> int:
     configure_logger(args.log_level, args.log_file)
     if args.explain:
         return explain_query(args.explain, args.sf_dir)

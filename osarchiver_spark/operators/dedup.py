@@ -810,18 +810,16 @@ def embedding_lsh_neardup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via multi-table hyperplane LSH.
 
-    The 100 TB shape: candidates come from an EQUI-JOIN on
-    (table_idx, bucket) — never a data×data cross join. Pipeline:
+    The 100 TB shape: candidates are the (table_idx, bucket) groups —
+    never a data×data cross join. Pipeline:
 
-    1. a tiny "model" DataFrame of ``n_tables`` rows, each holding
-       ``planes_per_table`` deterministic hyperplanes (md5-derived
-       coefficients, functions/vectors.py::_pseudo_coeff — same
-       derivation in any engine, no RNG state);
-    2. vectors × broadcast(model) → per (vector, table) a sign-bit
-       bucket key (nested transform/zip_with/aggregate — JVM codegen,
-       float64, no Python);
-    3. self equi-join on (table_idx, bucket) → distinct candidates;
-    4. exact rounded-cosine verify ``>= threshold``.
+    1. ``n_tables`` × ``planes_per_table`` deterministic hyperplanes
+       (operators/blas.py::hyperplanes — md5-derived, same in any
+       engine, no RNG state), model-sized, riding in the UDF closure;
+    2. one Arrow-batched BLAS projection per vector → a sign-bit
+       bucket key per (vector, table) (blas.bucket_keys);
+    3. exact rounded-cosine verify ``>= threshold`` inside each
+       (table_idx, bucket) group (blas.threshold_pairs).
 
     Recall is probabilistic (1-(1-p^b)^L, p = 1-θ/π); (b=6, L=64) was
     swept empirically to give FULL recall at threshold 0.45 on every
@@ -836,24 +834,18 @@ def embedding_lsh_neardup_pairs(
     wider than ``max_bucket`` therefore leave the grouped path: the
     bucket census (model-sized by construction, ≤ n·L/max_bucket
     keys) is collected driver-side, oversized keys become a literal
-    isin filter, and their pairs come from a plain (table_idx,
-    bucket) self equi-join — which AQE skew-join CAN split —
-    verified by Arrow-batched row-wise cosine. When the census finds
-    no hot bucket (the common case) the overflow subtree is skipped
-    entirely.
-    Same pairs, same rounding, full recall; only the physical strategy
-    changes, so the exact oracle is unaffected.
-
-    The broadcast side is the 64-row plane model — the plan's
-    BroadcastNestedLoopJoin is model-sized fan-out (×L per vector,
-    the same amplification shape as MinHash banding), not a cross
-    join of the corpus against itself.
+    isin predicate, and threshold_pairs routes them to a self
+    equi-join AQE skew-join CAN split. When the census finds no hot
+    bucket (the common case) the overflow subtree is skipped
+    entirely. Same pairs, same rounding, full recall; only the
+    physical strategy changes, so the exact oracle is unaffected.
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    from osarchiver_spark.functions.vectors import _pseudo_coeff, as_double
+    from osarchiver_spark.functions.vectors import as_double
+    from osarchiver_spark.operators.blas import bucket_keys, hyperplanes, threshold_pairs, vec_matrix
 
     # Why Pandas here and not built-ins: the math is dense linear
     # algebra (384 plane projections per vector, within-bucket
@@ -862,15 +854,8 @@ def embedding_lsh_neardup_pairs(
     # codegen — ~50M lambda evals at sf0.1 — while Arrow-batched
     # numpy runs the same flops through BLAS. This is compute
     # plumbing, not per-row business logic.
-    planes = np.array(
-        [
-            [_pseudo_coeff(f"{seed}{l}", k, i) for i in range(dim)]
-            for l in range(n_tables)
-            for k in range(planes_per_table)
-        ]
-    )  # model-sized constant (L*b x dim), serialized into the UDF closure
-    bit_weights = (1 << np.arange(planes_per_table)).astype("int64")
-    thr = float(threshold)
+    # model-sized constant (L*b x dim), serialized into the UDF closure
+    planes = hyperplanes(seed, n_tables, planes_per_table, dim)
     L, b = n_tables, planes_per_table
 
     par = df.sparkSession.sparkContext.defaultParallelism
@@ -900,9 +885,7 @@ def embedding_lsh_neardup_pairs(
         for pdf in batches:
             if pdf.empty:
                 continue
-            V = np.stack(pdf["v"].to_numpy())
-            signs = (V @ planes.T) >= 0  # n x L*b
-            buckets = signs.reshape(len(pdf), L, b) @ bit_weights  # n x L
+            buckets = bucket_keys(vec_matrix(pdf["v"]), planes, b)  # n x L
             yield pd.DataFrame(
                 {
                     "table_idx": np.tile(np.arange(L, dtype="int32"), len(pdf)),
@@ -920,45 +903,6 @@ def embedding_lsh_neardup_pairs(
     # The bucket CENSUS never sees the fat rows at all (see
     # bucket_census below).
     keyed = base.mapInPandas(bucketize, schema=keyed_schema)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_a", id_type),
-            T.StructField("vec_b", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def _empty_pairs() -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "vec_a": pd.Series([], dtype=object),
-                "vec_b": pd.Series([], dtype=object),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
-
-    def group_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return _empty_pairs()
-        V = np.stack(pdf["v"].to_numpy())
-        norms = np.sqrt((V * V).sum(axis=1))
-        safe = np.where(norms > 0, norms, np.inf)  # zero-norm -> cosine 0, like vectors.cosine
-        C = np.round((V @ V.T) / np.outer(safe, safe), 6)
-        ia, ib = np.triu_indices(n, 1)
-        vals = C[ia, ib]
-        mask = vals >= thr
-        ia, ib = ia[mask], ib[mask]
-        vids = pdf["vid"].to_numpy(dtype=object)
-        a, bb = vids[ia], vids[ib]
-        return pd.DataFrame(
-            {
-                "vec_a": np.minimum(a, bb),
-                "vec_b": np.maximum(a, bb),
-                "cosine": vals[mask],
-            }
-        )
 
     # Hot-bucket split: bucket widths from a SLIM census pass that
     # never materializes the fat keyed rows — the projection runs
@@ -984,11 +928,9 @@ def embedding_lsh_neardup_pairs(
         for pdf in batches:
             if pdf.empty:
                 continue
-            V = np.stack(pdf["v"].to_numpy())
-            signs = (V @ planes.T) >= 0
-            buckets = (signs.reshape(len(V), L, b) @ bit_weights).reshape(-1)
+            buckets = bucket_keys(vec_matrix(pdf["v"]), planes, b).reshape(-1)
             if tid is None or len(tid) != len(buckets):
-                tid = np.tile(np.arange(L, dtype="int64"), len(V))
+                tid = np.tile(np.arange(L, dtype="int64"), len(pdf))
             uk, cnt = np.unique((tid << 40) | buckets, return_counts=True)
             yield pd.DataFrame(
                 {
@@ -1007,72 +949,15 @@ def embedding_lsh_neardup_pairs(
         .select("table_idx", "bucket")
         .collect()
     )
+    hot = None
     if hot_keys:
         hot_lit = [f"{int(r['table_idx'])}:{int(r['bucket'])}" for r in hot_keys]
-        is_hot = F.concat_ws(":", F.col("table_idx"), F.col("bucket")).isin(hot_lit)
-        small = keyed.filter(~is_hot)
-        big = keyed.filter(is_hot)
-    else:
-        small = keyed
-        big = None
+        hot = F.concat_ws(":", F.col("table_idx"), F.col("bucket")).isin(hot_lit)
 
-    # Verify INSIDE the bucket: survivors (>= threshold) are the only
-    # rows that leave Python, so the O(|bucket|^2) gram matrix never
-    # materializes as a Spark-side pair set. The same pair found in
-    # several tables deduplicates with one tiny aggregate (values are
-    # identical after 6-decimal rounding; max() makes it deterministic).
-    pairs_small = small.groupBy("table_idx", "bucket").applyInPandas(
-        group_pairs, schema=out_schema
-    )
-
-    # Oversized buckets: plain self equi-join on the bucket key — a
-    # shuffle join AQE skew-join can split across tasks — then
-    # Arrow-batched row-wise cosine on the candidate pairs. Identical
-    # pair set and rounding as the grouped path. Skipped outright when
-    # the census found no hot bucket (the common case).
-    if big is None:
-        pairs = pairs_small
-    else:
-        a_side = big.select(
-            "table_idx",
-            "bucket",
-            F.col("vid").alias("vid_a"),
-            F.col("v").alias("va"),
-        )
-        b_side = big.select(
-            "table_idx",
-            "bucket",
-            F.col("vid").alias("vid_b"),
-            F.col("v").alias("vb"),
-        )
-        cand = (
-            a_side.join(b_side, ["table_idx", "bucket"])
-            .filter(F.col("vid_a") < F.col("vid_b"))
-            .select("vid_a", "va", "vid_b", "vb")
-        )
-
-        def pair_cosine(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                A = np.stack(pdf["va"].to_numpy())
-                B = np.stack(pdf["vb"].to_numpy())
-                na = np.sqrt((A * A).sum(axis=1))
-                nb = np.sqrt((B * B).sum(axis=1))
-                na = np.where(na > 0, na, np.inf)
-                nb = np.where(nb > 0, nb, np.inf)
-                vals = np.round((A * B).sum(axis=1) / (na * nb), 6)
-                mask = vals >= thr
-                yield pd.DataFrame(
-                    {
-                        "vec_a": pdf["vid_a"].to_numpy(dtype=object)[mask],
-                        "vec_b": pdf["vid_b"].to_numpy(dtype=object)[mask],
-                        "cosine": vals[mask],
-                    }
-                )
-
-        pairs_big = cand.mapInPandas(pair_cosine, schema=out_schema)
-        pairs = pairs_small.unionByName(pairs_big)
+    # The same pair found in several tables deduplicates with one tiny
+    # aggregate (values are identical after 6-decimal rounding; max()
+    # makes it deterministic).
+    pairs = threshold_pairs(keyed, ["table_idx", "bucket"], threshold, hot)
     return pairs.groupBy("vec_a", "vec_b").agg(F.max("cosine").alias("cosine"))
 
 
@@ -1188,28 +1073,20 @@ def embedding_lsh_incremental(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    from osarchiver_spark.functions.vectors import _pseudo_coeff, as_double
-
-    planes = np.array(
-        [
-            [_pseudo_coeff(f"{seed}{l}", k, i) for i in range(dim)]
-            for l in range(n_tables)
-            for k in range(planes_per_table)
-        ]
+    from osarchiver_spark.functions.vectors import as_double
+    from osarchiver_spark.operators.blas import (
+        bucket_keys,
+        hyperplanes,
+        pair_schema,
+        safe_norms,
+        vec_matrix,
     )
-    bit_weights = (1 << np.arange(planes_per_table)).astype("int64")
+
+    planes = hyperplanes(seed, n_tables, planes_per_table, dim)
     thr = float(threshold)
     L, b = n_tables, planes_per_table
-    id_type = corpus.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("new_id", id_type),
-            T.StructField("corpus_id", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
+    out_schema = pair_schema(corpus.schema[id_col].dataType, "new_id", "corpus_id")
     spark = corpus.sparkSession
 
     if max_batch_rows <= 0:
@@ -1232,21 +1109,22 @@ def embedding_lsh_incremental(
     if not new_rows:
         return spark.createDataFrame([], out_schema)
     new_ids = np.array([r["vid"] for r in new_rows], dtype=object)
-    NV = np.array([r["v"] for r in new_rows], dtype="float64")
+    NV = vec_matrix([r["v"] for r in new_rows])
     n_new = len(new_ids)
-    # new-side bucket keys, table-combined into one int64
-    # (table_idx << b | bucket), sorted for searchsorted range probes;
-    # several new vectors can share a key, so matches are [lo, hi)
-    # ranges into the parallel row-index array
-    nsigns = (NV @ planes.T) >= 0
-    nbuckets = nsigns.reshape(n_new, L, b) @ bit_weights
-    nkeys = (np.arange(L, dtype="int64")[None, :] << b) | nbuckets
-    flat = nkeys.reshape(-1)
+
+    def table_keys(V):
+        # bucket keys table-combined into one int64 (table_idx << b | bucket)
+        tables = np.arange(L, dtype="int64")[None, :] << b
+        return (tables | bucket_keys(V, planes, b)).reshape(-1)
+
+    # new-side keys, sorted for searchsorted range probes; several new
+    # vectors can share a key, so matches are [lo, hi) ranges into the
+    # parallel row-index array
+    flat = table_keys(NV)
     order = np.argsort(flat, kind="stable")
     nk_sorted = flat[order]
     nrow_sorted = (np.repeat(np.arange(n_new, dtype="int64"), L))[order]
-    nnorm = np.sqrt((NV * NV).sum(axis=1))
-    nnorm = np.where(nnorm > 0, nnorm, np.inf)
+    nnorm = safe_norms(NV)
     bc = spark.sparkContext.broadcast((NV, nk_sorted, nrow_sorted, new_ids, nnorm))
 
     # Fixture-parallelism knob ONLY: a tiny single-file corpus arrives
@@ -1285,17 +1163,14 @@ def embedding_lsh_incremental(
         for pdf in batches:
             if pdf.empty:
                 continue
-            V = np.stack(pdf["v"].to_numpy())
+            V = vec_matrix(pdf["v"])
             cids = pdf["vid"].to_numpy(dtype=object)
             m = len(pdf)
             # per-row norms once per batch, gathered per pair below —
             # identical float64 values to a per-pair recompute (same
             # row data, same op), one fewer 512 B/pair temporary
-            cnorm = np.sqrt((V * V).sum(axis=1))
-            cnorm = np.where(cnorm > 0, cnorm, np.inf)
-            signs = (V @ planes.T) >= 0
-            buckets = signs.reshape(m, L, b) @ bit_weights
-            ckeys = ((np.arange(L, dtype="int64")[None, :] << b) | buckets).reshape(-1)
+            cnorm = safe_norms(V)
+            ckeys = table_keys(V)
             lo = np.searchsorted(nk, ckeys, side="left")
             hi = np.searchsorted(nk, ckeys, side="right")
             counts = hi - lo

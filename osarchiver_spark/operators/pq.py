@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osarchiver_spark.functions.vectors import as_double
-from osarchiver_spark.operators.blas import vec_matrix
+from osarchiver_spark.operators.blas import empty_pairs, pair_schema, vec_matrix
 from osarchiver_spark.operators.ivf import (
     INDEXED_PROBE_MAX_QUERIES as _IVF_DEFAULT_MAX_QUERIES,
 )
@@ -88,7 +88,7 @@ def pq_joint_fit(
         if dim % m:
             raise ValueError(f"dim {dim} not divisible into {m} subspaces")
         sub = dim // m
-        init_mat = np.stack([np.asarray(r.v, dtype="float64") for r in init])
+        init_mat = vec_matrix([r.v for r in init])
         coarse = init_mat[:n_clusters].copy() if n_clusters else None
         books = [init_mat[:codes, j * sub : (j + 1) * sub].copy() for j in range(m)]
 
@@ -292,24 +292,12 @@ def _adc_shortlist(
     b_sq = [(bb * bb).sum(axis=1) for bb in B]
     sub = B[0].shape[1]
 
-    adc_schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("adc", T.DoubleType()),
-        ]
-    )
+    adc_schema = pair_schema(id_type, score="adc")
     local_take = shortlist + 1  # headroom for the self-match row
 
     def adc_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series([], dtype=object),
-                    "neighbor_id": pd.Series([], dtype=object),
-                    "adc": pd.Series([], dtype="float64"),
-                }
-            )
+            return empty_pairs(score="adc")
         Q = vec_matrix(left["qv"])
         codes_mat = np.stack(
             [np.asarray(c, dtype="int64") for c in right["code"].to_numpy()]

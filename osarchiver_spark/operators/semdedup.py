@@ -22,7 +22,9 @@ The 100 TB shape:
   collected driver-side and oversized clusters take a plain self
   equi-join on ``cid`` — which AQE skew-join CAN split — verified by
   Arrow-batched row-wise cosine. Same pairs, same rounding; only the
-  physical strategy changes, so the exact oracle is unaffected.
+  physical strategy changes, so the exact oracle is unaffected. Both
+  paths are operators/blas.py::threshold_pairs, the verify the
+  hyperplane-LSH dedup runs over its (table_idx, bucket) groups.
 
 Determinism/oracle story: centroids are quantized to ``quantize``
 decimals after every Lloyd's update (kmeans_fit(quantize=...)), which
@@ -47,7 +49,7 @@ from osarchiver_spark.functions.precision import money_sum
 from pyspark.sql import types as T
 
 from osarchiver_spark.functions.vectors import as_double
-from osarchiver_spark.operators.blas import vec_matrix
+from osarchiver_spark.operators.blas import pair_schema, threshold_pairs, vec_matrix
 from osarchiver_spark.operators.ivf import _assign_pandas, kmeans_fit
 
 
@@ -58,16 +60,6 @@ def semantic_assign(
     ties to the lowest cid) — one BLAS matmul per Arrow batch."""
     base = df.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v"))
     return _assign_pandas(base, centroids)
-
-
-def _pair_schema(id_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("vec_a", id_type),
-            T.StructField("vec_b", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
 
 
 def semdedup_pairs(
@@ -85,15 +77,15 @@ def semdedup_pairs(
     >= threshold). Clustering is the (lossy-by-design) candidate
     generator — cross-cluster pairs are intentionally not compared,
     exactly the SemDeDup trade."""
-    thr = float(threshold)
-    id_type = df.schema[id_col].dataType
     if centroids is None:
         try:
             centroids = kmeans_fit(
                 df, id_col, vec_col, k=n_clusters, iters=iters, quantize=quantize
             )
         except ValueError:  # empty input: no clusters, no pairs
-            return df.sparkSession.createDataFrame([], _pair_schema(id_type))
+            return df.sparkSession.createDataFrame(
+                [], pair_schema(df.schema[id_col].dataType, "vec_a", "vec_b")
+            )
 
     from osarchiver_spark.operators.cache import transient
 
@@ -103,38 +95,6 @@ def semdedup_pairs(
     # outlives this function; blocks are auto-released when the caller
     # drops the result instead of pinning the cache manager
     assigned = transient(semantic_assign(df, id_col, vec_col, centroids))
-    out_schema = _pair_schema(id_type)
-
-    def _empty() -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "vec_a": pd.Series([], dtype=object),
-                "vec_b": pd.Series([], dtype=object),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
-
-    def group_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return _empty()
-        V = np.stack(pdf["v"].to_numpy())
-        norms = np.sqrt((V * V).sum(axis=1))
-        safe = np.where(norms > 0, norms, np.inf)  # zero-norm -> cosine 0
-        C = np.round((V @ V.T) / np.outer(safe, safe), 6)
-        ia, ib = np.triu_indices(n, 1)
-        vals = C[ia, ib]
-        mask = vals >= thr
-        ia, ib = ia[mask], ib[mask]
-        vids = pdf["vid"].to_numpy(dtype=object)
-        a, b = vids[ia], vids[ib]
-        return pd.DataFrame(
-            {
-                "vec_a": np.minimum(a, b),
-                "vec_b": np.maximum(a, b),
-                "cosine": vals[mask],
-            }
-        )
 
     # cluster census: k rows, model-sized by construction — also the
     # action that materializes the persisted assignment exactly once
@@ -145,41 +105,9 @@ def semdedup_pairs(
         .filter(F.col("n") > max_cluster)
         .collect()
     ]
-    small = assigned.filter(~F.col("cid").isin(hot)) if hot else assigned
-    pairs_small = small.groupBy("cid").applyInPandas(group_pairs, schema=out_schema)
-    if not hot:
-        return pairs_small
-
-    big = assigned.filter(F.col("cid").isin(hot))
-    a_side = big.select("cid", F.col("vid").alias("vid_a"), F.col("v").alias("va"))
-    b_side = big.select("cid", F.col("vid").alias("vid_b"), F.col("v").alias("vb"))
-    cand = (
-        a_side.join(b_side, "cid")
-        .filter(F.col("vid_a") < F.col("vid_b"))
-        .select("vid_a", "va", "vid_b", "vb")
+    return threshold_pairs(
+        assigned, ["cid"], threshold, F.col("cid").isin(hot) if hot else None
     )
-
-    def pair_cosine(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            A = np.stack(pdf["va"].to_numpy())
-            B = np.stack(pdf["vb"].to_numpy())
-            na = np.sqrt((A * A).sum(axis=1))
-            nb = np.sqrt((B * B).sum(axis=1))
-            na = np.where(na > 0, na, np.inf)
-            nb = np.where(nb > 0, nb, np.inf)
-            vals = np.round((A * B).sum(axis=1) / (na * nb), 6)
-            mask = vals >= thr
-            yield pd.DataFrame(
-                {
-                    "vec_a": pdf["vid_a"].to_numpy(dtype=object)[mask],
-                    "vec_b": pdf["vid_b"].to_numpy(dtype=object)[mask],
-                    "cosine": vals[mask],
-                }
-            )
-
-    return pairs_small.unionByName(cand.mapInPandas(pair_cosine, schema=out_schema))
 
 
 def semdedup_losers(

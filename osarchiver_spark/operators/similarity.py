@@ -48,9 +48,14 @@ def brute_force_topk(
     so the failure costs one truncated scan, not a driver OOM).
     """
     import numpy as np
-    import pandas as pd
 
-    from osarchiver_spark.operators.blas import cosine_pair_schema, vec_matrix
+    from osarchiver_spark.operators.blas import (
+        cosine_matrix,
+        local_topk,
+        pair_schema,
+        safe_norms,
+        vec_matrix,
+    )
 
     q_rows = (
         queries.select(
@@ -67,11 +72,10 @@ def brute_force_topk(
         )
     # object dtype keeps string/uuid ids intact through numpy ops
     qids = np.array([r.query_id for r in q_rows], dtype=object)
-    Q = np.stack([np.asarray(r.qv, dtype="float64") for r in q_rows])
-    qn = np.sqrt((Q * Q).sum(axis=1))
-    qn = np.where(qn > 0, qn, np.inf)  # zero-norm -> cosine 0, like vectors.cosine
+    Q = vec_matrix([r.qv for r in q_rows])
+    qn = safe_norms(Q)
 
-    out_schema = cosine_pair_schema(queries.schema[id_col].dataType)
+    out_schema = pair_schema(queries.schema[id_col].dataType)
     take = k + 1  # headroom for the self-match row
 
     def score(batches):
@@ -79,19 +83,8 @@ def brute_force_topk(
             if len(pdf) == 0:
                 continue
             V = vec_matrix(pdf["cv"])
-            vn = np.sqrt((V * V).sum(axis=1))
-            vn = np.where(vn > 0, vn, np.inf)
-            S = np.round((Q @ V.T) / np.outer(qn, vn), 6)  # n_q × n_batch
-            nids = pdf["neighbor_id"].to_numpy(dtype=object)
-            n_take = min(take, S.shape[1])
-            order = np.lexsort((np.broadcast_to(nids, S.shape), -S), axis=1)[:, :n_take]
-            rows_q = np.repeat(qids, n_take)
-            rows_n = nids[order].reshape(-1)
-            rows_s = np.take_along_axis(S, order, axis=1).reshape(-1)
-            keep = rows_q != rows_n
-            yield pd.DataFrame(
-                {"query_id": rows_q[keep], "neighbor_id": rows_n[keep], "cosine": rows_s[keep]}
-            )
+            S = cosine_matrix(Q, V, qn, safe_norms(V))  # n_q × n_batch
+            yield local_topk(qids, pdf["neighbor_id"].to_numpy(dtype=object), S, take)
 
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")

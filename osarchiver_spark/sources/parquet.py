@@ -100,13 +100,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
-def discover_tables(sf_dir: str) -> list[str]:
-    """Table discovery à la SHOW TABLES (reference common/db.py:402-414):
-    enumerate ``*.parquet`` entries in the scale-factor directory."""
-    out = []
-    for entry in sorted(os.listdir(sf_dir)):
-        if entry.endswith(".parquet"):
-            out.append(entry[: -len(".parquet")])
-    return out

@@ -31,10 +31,11 @@ def spark():
     spark = get_spark("osarchiver_spark_tests")
     yield spark
     # Stop the session and its py4j gateway while pytest's streams are
-    # open: left to interpreter exit, each connection's finalizer logs
-    # "Closing down clientserver connection" through the root handler
-    # that the CLI tests' configure_logger bound to a closed capture
-    # stream ("--- Logging error ---" after the summary line).
+    # open, rather than leaving each connection's finalizer to log
+    # "Closing down clientserver connection" at interpreter exit,
+    # after pytest has closed the streams its handlers write to.
+    # (main.run restores the root logger it configures, so the CLI
+    # tests no longer leave a handler on a closed capture stream.)
     spark.stop()
     SparkContext._gateway.shutdown()
 

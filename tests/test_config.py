@@ -158,6 +158,21 @@ def test_cli_end_to_end(spark, sf_small, tmp_path, capsys):
     assert run(["--config", str(cfg), "--dry-run"]) == 0
 
 
+def test_cli_restores_the_root_logger(spark, sf_small, tmp_path):
+    """run() configures its own root handler on the current stdout and
+    removes it on return: the host keeps its handlers and level."""
+    import logging
+
+    from osarchiver_spark.main import run
+
+    root = logging.getLogger()
+    before = (root.handlers[:], root.level)
+    cfg = tmp_path / "archiver.ini"
+    cfg.write_text(_render(sf_small, str(tmp_path)))
+    assert run(["--config", str(cfg), "--dry-run"]) == 0
+    assert (root.handlers[:], root.level) == before
+
+
 DB_INI = """
 [src:nova]
 backend=db

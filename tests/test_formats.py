@@ -186,7 +186,7 @@ def _define_marker_sink():
         one row-count marker file per table per dated run."""
 
         def __init__(self, root, compression=None, run_template="{date}"):
-            super().__init__(root, run_template)
+            super().__init__(root, compression, run_template)
 
         def write(self, table, df):
             import os
