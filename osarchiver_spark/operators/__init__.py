@@ -27,9 +27,8 @@ from osarchiver_spark.operators.boost import adaboost_score_by_source, adaboost_
 from osarchiver_spark.operators.bpe import bpe_segment_counts, bpe_train, bpe_vocab
 from osarchiver_spark.operators.ivf import ivf_topk, kmeans_fit
 from osarchiver_spark.operators.lr import lr_features, lr_score_by_source, lr_train
-from osarchiver_spark.operators.pq import ivf_pq_topk, pq_joint_fit, pq_train
+from osarchiver_spark.operators.pq import ivf_pq_topk, pq_joint_fit
 from osarchiver_spark.operators.semdedup import (
-    semantic_assign,
     semantic_cluster_profile,
     semdedup_losers,
     semdedup_pairs,
@@ -86,12 +85,10 @@ __all__ = [
     "lr_features",
     "lr_score_by_source",
     "lr_train",
-    "semantic_assign",
     "semantic_cluster_profile",
     "semdedup_losers",
     "semdedup_pairs",
     "pq_joint_fit",
-    "pq_train",
     "merge_insert_if_absent",
     "merge_upsert",
     "attach_binary",

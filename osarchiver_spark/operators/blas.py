@@ -11,10 +11,14 @@ similarity, IVF/PQ and dedup operators share:
 - :func:`safe_norms`, :func:`cosine_matrix`, :func:`row_cosine`: the
   6-decimal rounded cosine, zero vectors scoring 0 like
   functions/vectors.py::cosine;
-- :func:`local_topk`: a group's or batch's top-(k+1) candidates by
-  (rounded cosine desc, id asc), self-matches dropped. Top-k is
-  associative under that order, so local pre-selection plus a global
-  window is exact (the REPOSE shape);
+- :func:`centroid_dists`, :func:`nearest_codes`: the nearest-centroid
+  kernel behind k-means assignment, IVF cell probes, PQ encoding and
+  the ADC lookup tables;
+- :func:`local_topk`, :func:`global_topk`: a group's or batch's
+  top-(k+1) candidates by (rounded cosine desc, id asc), self-matches
+  dropped, and the per-query window that finishes the selection.
+  Top-k is associative under that order, so local pre-selection plus
+  a global window is exact (the REPOSE shape);
 - :func:`hyperplanes`, :func:`bucket_keys`: hyperplane-LSH planes and
   sign-bit bucket keys;
 - :func:`threshold_pairs`: grouped threshold pairs with hot groups
@@ -28,7 +32,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -56,6 +60,28 @@ def cosine_matrix(X: np.ndarray, Y: np.ndarray, nx: np.ndarray, ny: np.ndarray) 
 def row_cosine(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     """Rounded cosine of each row pair (A[i], B[i])."""
     return np.round((A * B).sum(axis=1) / (safe_norms(A) * safe_norms(B)), 6)
+
+
+def centroid_dists(V: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """len(V) × len(C) squared euclidean distances to the centroids ``C``
+    minus each row's constant |v|²: argmin of |v-c|² == argmin of
+    -2 v·c + |c|². One matmul; the row order of ``C`` is the id order."""
+    return -2.0 * (V @ C.T) + (C * C).sum(axis=1)
+
+
+def nearest_codes(V: np.ndarray, books: list[np.ndarray]) -> np.ndarray:
+    """len(V) × len(books) int array: column j is the nearest entry of
+    ``books[j]`` to the j-th of len(books) equal column slices of
+    ``V`` (ties to the lowest id). One book is plain nearest-centroid
+    assignment; m books are a product quantizer's m subspace codes."""
+    sub = V.shape[1] // len(books)
+    return np.stack(
+        [
+            centroid_dists(V[:, j * sub : (j + 1) * sub], B).argmin(axis=1)
+            for j, B in enumerate(books)
+        ],
+        axis=1,
+    )
 
 
 def pair_schema(
@@ -96,6 +122,19 @@ def local_topk(qids: np.ndarray, nids: np.ndarray, S: np.ndarray, take: int) -> 
     keep = rows_q != rows_n
     return pd.DataFrame(
         {"query_id": rows_q[keep], "neighbor_id": rows_n[keep], "cosine": rows_s[keep]}
+    )
+
+
+def global_topk(local: DataFrame, k: int) -> DataFrame:
+    """The global merge of per-group/per-batch local top-k candidates
+    (query_id, neighbor_id, cosine): each query's ``k`` best by
+    (cosine desc, neighbor id asc). Output (query_id, rank,
+    neighbor_id, cosine)."""
+    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    return (
+        local.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "cosine")
     )
 
 

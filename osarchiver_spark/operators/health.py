@@ -79,7 +79,7 @@ def index_health(
     (rounded to 6), which is what makes the registry entry
     oracle-checkable bit-for-bit. Works on full-vector AND PQ-code
     stores (only ``cid`` is read from the store)."""
-    from osarchiver_spark.operators.ivf import _probe_pandas
+    from osarchiver_spark.operators.ivf import _probe_pandas, query_frame
 
     store = spark.read.parquet(store_dir).withColumn(
         "cid", F.col("cid").cast("int")
@@ -90,7 +90,7 @@ def index_health(
         F.sum("n").alias("n_vectors"),
         F.max("n").alias("max_cell"),
     )
-    probed = _probe_pandas(queries, id_col, vec_col, centroids, nprobe).select(
+    probed = _probe_pandas(query_frame(queries, id_col, vec_col), centroids, nprobe).select(
         "query_id", "cid"
     )
     union_rows = (

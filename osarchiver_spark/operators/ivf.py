@@ -10,11 +10,16 @@ carries k×dim literals, which benched ~4× slower at sf0.1. So:
 
 - assignment: mapInPandas, one BLAS matmul per Arrow batch against
   the (k × dim) centroid matrix carried in the task closure —
-  model-sized, the same thing a broadcast would ship.
-- update: per-batch partial (cid, sum_vec, n) rows — a tree
-  aggregation; only batches × k model-sized rows reach the driver,
-  never the data.
-- search: probe each query's ``nprobe`` nearest centroids, cogroup
+  model-sized, the same thing a broadcast would ship. The kernel is
+  operators/blas.py::nearest_codes / centroid_dists.
+- update: per-batch partial (grp, slice, cid, sum_vec, n) rows — a
+  tree aggregation; only batches × k model-sized rows reach the
+  driver, never the data. ``_lloyd`` is the one Lloyd's loop: it
+  fits ``kmeans_fit``'s single model and ``pq.pq_joint_fit``'s coarse
+  quantizer + subspace codebooks in one data pass per iteration.
+- search: probe each query's ``nprobe`` nearest centroids
+  (``_probe_pandas`` over a (query_id, qv) frame, shared with
+  IVF-PQ, which passes unit vectors), cogroup
   queries and corpus on cluster id, one matmul per cluster, emit the
   per-cluster top-k, then a global window picks the final k. Fan-out
   is nprobe/k of the corpus instead of all of it, and only
@@ -30,33 +35,142 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osarchiver_spark.functions.vectors import as_double
-from osarchiver_spark.operators.blas import vec_matrix
+from osarchiver_spark.operators.blas import (
+    centroid_dists,
+    cogroup_threshold_cosine,
+    cogroup_topk_cosine,
+    global_topk,
+    nearest_codes,
+    vec_matrix,
+)
 
 
 def _assign_pandas(base: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Add a ``cid`` column: index of the nearest centroid (squared
     euclidean, ties to the lowest cid). One matmul per Arrow batch."""
     C = np.asarray(centroids, dtype="float64")  # k × dim, model-sized
-    c_sq = (C * C).sum(axis=1)
     schema = T.StructType(base.schema.fields + [T.StructField("cid", T.IntegerType())])
 
     def assign(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = vec_matrix(pdf["v"])
-            # argmin of |v-c|^2 == argmin of -2 v.C^T + |c|^2
-            d = -2.0 * (V @ C.T) + c_sq
             pdf = pdf.copy()
-            pdf["cid"] = d.argmin(axis=1).astype("int32")
+            pdf["cid"] = nearest_codes(vec_matrix(pdf["v"]), [C])[:, 0].astype("int32")
             yield pdf
 
     return base.mapInPandas(assign, schema=schema)
+
+
+def _zero_partials(models: dict) -> tuple[dict, dict]:
+    """Per-model (sums, counts) accumulators, shaped like ``models``."""
+    sums = {g: [np.zeros_like(b) for b in books] for g, books in models.items()}
+    counts = {g: [np.zeros(len(b), dtype="int64") for b in books] for g, books in models.items()}
+    return sums, counts
+
+
+_PARTIAL_SCHEMA = T.StructType(
+    [
+        T.StructField("grp", T.IntegerType()),
+        T.StructField("slice", T.IntegerType()),
+        T.StructField("cid", T.IntegerType()),
+        T.StructField("s", T.ArrayType(T.DoubleType())),
+        T.StructField("n", T.LongType()),
+    ]
+)
+
+
+def _lloyd(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    groups: list[tuple[int, int, int]],
+    quantize: int | None,
+    op_name: str,
+) -> list[list[np.ndarray]]:
+    """Fused Lloyd's iterations for independent model groups. A group
+    ``(k, iters, m)`` is m k-models, one per equal column slice of the
+    vectors (m=1: plain k-means; m>1: product-quantizer books). Every
+    iteration assigns all live models in ONE data pass (a group is
+    live while its iteration count lasts), so a fit costs ``1 +
+    max(iters)`` Spark jobs: the init collect, which also fills the
+    cache, then one pass per iteration whose model-sized (grp, slice,
+    cid, sum, n) partials tree-aggregate on the driver.
+
+    Init: each model starts from the lowest-id vectors (one ``limit(max
+    k)`` collect); an empty cluster keeps its previous centroid;
+    ``quantize`` rounds every updated mean. Returns each group's m
+    books (k × dim/m arrays; fewer than k rows when the input is
+    smaller than k)."""
+    base = df.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v")).cache()
+    try:
+        init = base.orderBy("vid").limit(max(k for k, _, _ in groups)).collect()
+        if not init:
+            raise ValueError(f"{op_name}: input relation has no rows")
+        init_mat = vec_matrix([r.v for r in init])
+        dim = init_mat.shape[1]
+        for _, _, m in groups:
+            if dim % m:
+                raise ValueError(f"dim {dim} not divisible into {m} subspaces")
+        models = [
+            [init_mat[:k, j * (dim // m) : (j + 1) * (dim // m)].copy() for j in range(m)]
+            for k, _, m in groups
+        ]
+        for it in range(max(iters for _, iters, _ in groups)):
+            # the closure is pickled when the pass is planned, before
+            # the driver updates ``models`` in place below
+            live = {g: models[g] for g, (_, iters, _) in enumerate(groups) if it < iters}
+
+            def partials(batches, live=live):
+                sums, counts = _zero_partials(live)
+                for pdf in batches:
+                    if len(pdf) == 0:
+                        continue
+                    V = vec_matrix(pdf["v"])
+                    for g, books in live.items():
+                        codes = nearest_codes(V, books)
+                        sub = V.shape[1] // len(books)
+                        for j in range(len(books)):
+                            np.add.at(sums[g][j], codes[:, j], V[:, j * sub : (j + 1) * sub])
+                            counts[g][j] += np.bincount(codes[:, j], minlength=len(books[j]))
+                rows = [
+                    (g, j, i, sums[g][j][i], counts[g][j][i])
+                    for g in live
+                    for j in range(len(live[g]))
+                    for i in np.flatnonzero(counts[g][j])
+                ]
+                if not rows:  # empty partition: an empty frame's "s"
+                    return  # column would arrive numeric-typed and break Arrow
+                grp, sl, cid, s, n = zip(*rows)
+                yield pd.DataFrame(
+                    {
+                        "grp": np.asarray(grp, dtype="int32"),
+                        "slice": np.asarray(sl, dtype="int32"),
+                        "cid": np.asarray(cid, dtype="int32"),
+                        "s": list(s),
+                        "n": np.asarray(n, dtype="int64"),
+                    }
+                )
+
+            # tree-aggregate: one model-sized row per (task, live model, cid)
+            rows = base.mapInPandas(partials, schema=_PARTIAL_SCHEMA).collect()
+            sums, counts = _zero_partials(live)
+            for g, j, i, s, n in rows:
+                sums[g][j][i] += np.asarray(s)
+                counts[g][j][i] += n
+            for g in live:
+                for j, book in enumerate(models[g]):
+                    for i in np.flatnonzero(counts[g][j]):  # empty: keep previous
+                        mean = sums[g][j][i] / counts[g][j][i]
+                        book[i] = mean if quantize is None else np.round(mean, quantize)
+        return models
+    finally:
+        base.unpersist()
 
 
 def kmeans_fit(
@@ -77,74 +191,22 @@ def kmeans_fit(
     cross-engine summation-order noise (~1e-12) sits far below the
     rounding grid. ``None`` keeps raw float64 means (the IVF default,
     where only ranking — not bit equality — matters)."""
-    base = df.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v")).cache()
-    try:
-        init = base.orderBy("vid").limit(k).collect()
-        centroids = [list(r.v) for r in init]
-        if not centroids:
-            raise ValueError("kmeans_fit: input relation has no rows")
-        dim = len(centroids[0])
-        partial_schema = T.StructType(
-            [
-                T.StructField("cid", T.IntegerType()),
-                T.StructField("s", T.ArrayType(T.DoubleType())),
-                T.StructField("n", T.LongType()),
-            ]
-        )
-        for _ in range(iters):
-            C = np.asarray(centroids, dtype="float64")
-            c_sq = (C * C).sum(axis=1)
-
-            def partials(batches):
-                sums = np.zeros((k, dim))
-                counts = np.zeros(k, dtype="int64")
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    V = vec_matrix(pdf["v"])
-                    cid = (-2.0 * (V @ C.T) + c_sq).argmin(axis=1)
-                    np.add.at(sums, cid, V)
-                    counts += np.bincount(cid, minlength=k)
-                live = np.flatnonzero(counts)
-                if len(live) == 0:  # empty partition: an empty frame's "s"
-                    return  # column would arrive numeric-typed and break Arrow
-                yield pd.DataFrame(
-                    {"cid": live.astype("int32"), "s": list(sums[live]), "n": counts[live]}
-                )
-
-            # tree-aggregate: one model-sized row per (task, live cid)
-            rows = base.mapInPandas(partials, schema=partial_schema).collect()
-            sums = np.zeros((k, dim))
-            counts = np.zeros(k, dtype="int64")
-            for r in rows:
-                sums[r.cid] += np.asarray(r.s)
-                counts[r.cid] += r.n
-            # empty clusters keep their previous centroid
-            def _mean(i: int) -> list[float]:
-                m = sums[i] / counts[i]
-                if quantize is not None:
-                    m = np.round(m, quantize)
-                return m.tolist()
-
-            centroids = [_mean(i) if counts[i] else centroids[i] for i in range(k)]
-        return centroids
-    finally:
-        base.unpersist()
+    [[centroids]] = _lloyd(df, id_col, vec_col, [(k, iters, 1)], quantize, "kmeans_fit")
+    return centroids.tolist()
 
 
-def _probe_pandas(
-    queries: DataFrame, id_col: str, vec_col: str,
-    centroids: list[list[float]], nprobe: int,
-) -> DataFrame:
-    """(query_id, qv, cid) — each query repeated once per probed
-    cluster: its ``nprobe`` nearest centroids (squared euclidean,
-    stable argsort so ties go to the lowest cid). One matmul per
-    Arrow batch against the model-sized centroid matrix."""
+def _probe_pandas(qframe: DataFrame, centroids: list[list[float]], nprobe: int) -> DataFrame:
+    """(query_id, qv, cid) from a (query_id, qv) frame — each query
+    repeated once per probed cell: its ``nprobe`` nearest centroids
+    (squared euclidean, stable argsort so ties go to the lowest cid).
+    One matmul per Arrow batch against the model-sized centroid
+    matrix. The caller's frame decides what is probed: raw vectors
+    for IVF (:func:`query_frame`), unit vectors for IVF-PQ
+    (operators/pq.py::unit_frame)."""
     C = np.asarray(centroids, dtype="float64")
-    c_sq = (C * C).sum(axis=1)
     probe_schema = T.StructType(
         [
-            T.StructField("query_id", queries.schema[id_col].dataType),
+            T.StructField("query_id", qframe.schema["query_id"].dataType),
             T.StructField("qv", T.ArrayType(T.DoubleType())),
             T.StructField("cid", T.IntegerType()),
         ]
@@ -155,8 +217,7 @@ def _probe_pandas(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            Q = vec_matrix(pdf["qv"])
-            d = -2.0 * (Q @ C.T) + c_sq
+            d = centroid_dists(vec_matrix(pdf["qv"]), C)
             near = np.argsort(d, axis=1, kind="stable")[:, :n_take]  # ties to lowest cid
             yield pd.DataFrame(
                 {
@@ -166,19 +227,12 @@ def _probe_pandas(
                 }
             )
 
-    qbase = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    return qbase.mapInPandas(probe, schema=probe_schema)
+    return qframe.mapInPandas(probe, schema=probe_schema)
 
 
-def _global_topk(local: DataFrame, k: int) -> DataFrame:
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+def query_frame(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(query_id, qv): the raw query vectors an IVF probe reads."""
+    return queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
 
 
 def ivf_topk(
@@ -199,11 +253,8 @@ def ivf_topk(
         corpus.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("v")),
         centroids,
     )
-    probed = _probe_pandas(queries, id_col, vec_col, centroids, nprobe)
-
-    from osarchiver_spark.operators.blas import cogroup_topk_cosine
-
-    return _global_topk(cogroup_topk_cosine(probed, c_assigned, "cid", k), k)
+    probed = _probe_pandas(query_frame(queries, id_col, vec_col), centroids, nprobe)
+    return global_topk(cogroup_topk_cosine(probed, c_assigned, "cid", k), k)
 
 
 #: Fixed on-disk layout of an ivf_index store (cid is the partition
@@ -307,25 +358,22 @@ def guard_batch(
 
 
 def prep_indexed_probe(
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroids: list[list[float]],
-    nprobe: int,
+    qframe: DataFrame, centroids: list[list[float]], nprobe: int
 ) -> tuple[DataFrame, list[int]]:
-    """The QUERY-side half of an indexed probe: materialize the probe
-    frame once (transient — executor-local, auto-released) and collect
-    its model-sized cid set. Factored out of
-    :func:`ivf_topk_indexed`/:func:`ivf_neardup_probe` (r11
-    optimization round) so (a) chain builders can run it as a
-    concurrent driver-thread job while the index store is still being
-    written — the two legs share no inputs (guide §2.6) — and (b) a
-    caller probing the SAME batch against several indexes (the
-    streaming maintenance loop's intra + cross probes) computes the
-    probe pass and cid collect once instead of per probe."""
+    """The QUERY-side half of an indexed probe over a (query_id, qv)
+    frame (:func:`query_frame` for IVF, pq.unit_frame for IVF-PQ):
+    materialize the probe frame once (transient — executor-local,
+    auto-released) and collect its model-sized cid set. Factored out
+    of the indexed probes (r11 optimization round) so (a) chain
+    builders can run it as a concurrent driver-thread job while the
+    index store is still being written — the two legs share no inputs
+    (guide §2.6) — and (b) a caller probing the SAME batch against
+    several indexes (the streaming maintenance loop's intra + cross
+    probes) computes the probe pass and cid collect once instead of
+    per probe."""
     from osarchiver_spark.operators.cache import transient
 
-    probed = transient(_probe_pandas(queries, id_col, vec_col, centroids, nprobe))
+    probed = transient(_probe_pandas(qframe, centroids, nprobe))
     cids = sorted(r["cid"] for r in probed.select("cid").distinct().collect())
     return probed, cids
 
@@ -361,13 +409,10 @@ def ivf_topk_indexed(
     guard_batch(queries, max_batch_rows, "ivf_topk_indexed", batch_rows)
 
     probed, cids = prepped if prepped is not None else prep_indexed_probe(
-        queries, id_col, vec_col, centroids, nprobe
+        query_frame(queries, id_col, vec_col), centroids, nprobe
     )
     pruned = index.filter(F.col("cid").isin(cids))
-
-    from osarchiver_spark.operators.blas import cogroup_topk_cosine
-
-    return _global_topk(cogroup_topk_cosine(probed, pruned, "cid", k), k)
+    return global_topk(cogroup_topk_cosine(probed, pruned, "cid", k), k)
 
 
 def ivf_neardup_probe(
@@ -408,10 +453,8 @@ def ivf_neardup_probe(
     ``batch_rows`` — see :func:`guard_batch`)."""
     guard_batch(queries, max_batch_rows, "ivf_neardup_probe", batch_rows)
 
-    from osarchiver_spark.operators.blas import cogroup_threshold_cosine
-
     probed, cids = prepped if prepped is not None else prep_indexed_probe(
-        queries, id_col, vec_col, centroids, nprobe
+        query_frame(queries, id_col, vec_col), centroids, nprobe
     )
     pruned = index.filter(F.col("cid").isin(cids))
     return cogroup_threshold_cosine(probed, pruned, "cid", threshold)

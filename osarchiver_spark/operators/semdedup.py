@@ -12,7 +12,10 @@ The 100 TB shape:
 
 - Lloyd's runs as Arrow/BLAS DataFrame passes with model-sized
   collects only (operators/ivf.py::kmeans_fit); the centroid matrix
-  rides in task closures, never shuffled with the data.
+  rides in task closures, never shuffled with the data, and every
+  assignment is operators/blas.py's nearest-centroid kernel
+  (ivf._assign_pandas; the cluster profile's distances are
+  blas.centroid_dists).
 - ``k`` scales as n / target_cluster_size, so each in-cluster gram is
   a bounded ``target²`` block and the group count — hence available
   parallelism — grows linearly with the corpus.
@@ -49,17 +52,13 @@ from osarchiver_spark.functions.precision import money_sum
 from pyspark.sql import types as T
 
 from osarchiver_spark.functions.vectors import as_double
-from osarchiver_spark.operators.blas import pair_schema, threshold_pairs, vec_matrix
+from osarchiver_spark.operators.blas import (
+    centroid_dists,
+    pair_schema,
+    threshold_pairs,
+    vec_matrix,
+)
 from osarchiver_spark.operators.ivf import _assign_pandas, kmeans_fit
-
-
-def semantic_assign(
-    df: DataFrame, id_col: str, vec_col: str, centroids: list[list[float]]
-) -> DataFrame:
-    """(vid, v, cid): nearest-centroid assignment (squared euclidean,
-    ties to the lowest cid) — one BLAS matmul per Arrow batch."""
-    base = df.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v"))
-    return _assign_pandas(base, centroids)
 
 
 def semdedup_pairs(
@@ -94,7 +93,8 @@ def semdedup_pairs(
     # transient (not persist) because the returned pairs DataFrame
     # outlives this function; blocks are auto-released when the caller
     # drops the result instead of pinning the cache manager
-    assigned = transient(semantic_assign(df, id_col, vec_col, centroids))
+    base = df.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v"))
+    assigned = transient(_assign_pandas(base, centroids))  # (vid, v, cid)
 
     # cluster census: k rows, model-sized by construction — also the
     # action that materializes the persisted assignment exactly once
@@ -177,7 +177,6 @@ def semantic_cluster_profile(
             ),
         )
     C = np.asarray(centroids, dtype="float64")
-    c_sq = (C * C).sum(axis=1)
     base = df.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v"))
     schema = T.StructType(
         [
@@ -193,7 +192,7 @@ def semantic_cluster_profile(
             V = vec_matrix(pdf["v"])
             # d2 = |v|^2 - 2 v.c + |c|^2 — the same expression the SQL
             # oracle evaluates, so rounding lands on the same grid
-            d = -2.0 * (V @ C.T) + c_sq
+            d = centroid_dists(V, C)
             cid = d.argmin(axis=1)
             v_sq = (V * V).sum(axis=1)
             d2 = np.round(v_sq + d[np.arange(len(V)), cid], 6)

@@ -16,10 +16,11 @@ float64 accumulation, no Python.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osarchiver_spark.functions.vectors import as_double, cosine, hyperplane_sign_bits
+from osarchiver_spark.functions.vectors import as_double, hyperplane_sign_bits
+from osarchiver_spark.operators.blas import global_topk
 
 
 def brute_force_topk(
@@ -70,12 +71,13 @@ def brute_force_topk(
             f"{max_query_rows}; the probe matrix ships in every task "
             f"closure. Batch the queries or raise the bound deliberately."
         )
+    out_schema = pair_schema(queries.schema[id_col].dataType)
+    if not q_rows:  # no probe vectors: no neighbors
+        return global_topk(corpus.sparkSession.createDataFrame([], out_schema), k)
     # object dtype keeps string/uuid ids intact through numpy ops
     qids = np.array([r.query_id for r in q_rows], dtype=object)
     Q = vec_matrix([r.qv for r in q_rows])
     qn = safe_norms(Q)
-
-    out_schema = pair_schema(queries.schema[id_col].dataType)
     take = k + 1  # headroom for the self-match row
 
     def score(batches):
@@ -89,13 +91,7 @@ def brute_force_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
     )
-    scored = c.mapInPandas(score, schema=out_schema)
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return global_topk(c.mapInPandas(score, schema=out_schema), k)
 
 
 def lsh_topk(
@@ -147,10 +143,4 @@ def lsh_topk(
     # join); scoring is one matmul per bucket (a corpus vector lives in
     # exactly one bucket, so (query, neighbor) pairs are unique across
     # groups and the group-local top-k merge is exact)
-    scored = cogroup_topk_cosine(q_probed, c, "bucket", k)
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return global_topk(cogroup_topk_cosine(q_probed, c, "bucket", k), k)

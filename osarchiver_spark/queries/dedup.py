@@ -1011,7 +1011,8 @@ ORACLES["streaming_text_maintenance"] = f"""
 # index_health oracle: the quantized Lloyd's replay gives the exact
 # store (assigned = the persisted cid per vector); the probe's cell
 # ranking is the same squared-euclidean argsort (-2 q·c + |c|², ties
-# to the lowest cid) as _probe_pandas, taken to nprobe via
+# to the lowest cid) as ivf._probe_pandas over blas.centroid_dists,
+# taken to nprobe via
 # row_number. Sums CAST to BIGINT (the HUGEINT carrier lesson);
 # every output metric is exact-int arithmetic with one final float
 # division, rounded 6 on both sides.

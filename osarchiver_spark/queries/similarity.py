@@ -30,15 +30,15 @@ from osarchiver_spark.operators.ivf import (
     ivf_topk_indexed,
     kmeans_fit,
     prep_indexed_probe,
+    query_frame,
 )
 from osarchiver_spark.operators.pq import (
     PQ_STORE_SCHEMA,
-    _unit_expr,
     ivf_pq_index,
     ivf_pq_reindex,
     ivf_pq_topk_indexed,
     pq_joint_fit,
-    prep_pq_indexed_probe,
+    unit_frame,
 )
 from osarchiver_spark.operators.similarity import brute_force_topk, lsh_topk
 from osarchiver_spark.queries.scratch import reap_at_exit, scratch_dir
@@ -165,7 +165,9 @@ IVF_CODEC = IndexCodec(
     fit=lambda emb, k: kmeans_fit(emb, "vec_id", "embedding", k=k),
     index=lambda rows, cents: ivf_index(rows, "vec_id", "embedding", cents),
     reindex=lambda store, emb, cents: ivf_reindex(store, cents),
-    prep=lambda q, cents, nprobe: prep_indexed_probe(q, "vec_id", "embedding", cents, nprobe),
+    prep=lambda q, cents, nprobe: prep_indexed_probe(
+        query_frame(q, "vec_id", "embedding"), cents, nprobe
+    ),
     probe=lambda store, q, emb, cents, nprobe, batch_rows, prepped: ivf_topk_indexed(
         store, q, "vec_id", "embedding", cents, k=TOP_K, nprobe=nprobe,
         batch_rows=batch_rows, prepped=prepped,
@@ -183,8 +185,8 @@ def pq_codec(shortlist: int) -> IndexCodec:
     against the source table's full vectors."""
 
     def fit(emb, k):
-        unit = emb.select(F.col("vec_id"), _unit_expr("embedding").alias("_uv"))
-        return pq_joint_fit(unit, "vec_id", "_uv", n_clusters=k, m=16, codes=16)
+        unit = unit_frame(emb, "vec_id", "embedding", "vid", "v")
+        return pq_joint_fit(unit, "vid", "v", n_clusters=k, m=16, codes=16)
 
     return IndexCodec(
         op_name="ivf_pq_topk_indexed",
@@ -194,8 +196,8 @@ def pq_codec(shortlist: int) -> IndexCodec:
         reindex=lambda store, emb, model: ivf_pq_reindex(
             store, emb, "vec_id", "embedding", *model
         ),
-        prep=lambda q, model, nprobe: prep_pq_indexed_probe(
-            q, "vec_id", "embedding", model[0], nprobe
+        prep=lambda q, model, nprobe: prep_indexed_probe(
+            unit_frame(q, "vec_id", "embedding", "query_id", "qv"), model[0], nprobe
         ),
         probe=lambda store, q, emb, model, nprobe, batch_rows, prepped: ivf_pq_topk_indexed(
             store, q, emb, "vec_id", "embedding", *model, k=TOP_K, nprobe=nprobe,
@@ -500,9 +502,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     cogrouped BLAS scorer emits group-local top-k and one global
     window finishes — the corpus is scored once per foreign label
     group, never all-pairs against itself."""
-    from pyspark.sql import Window as W
-
-    from osarchiver_spark.operators.blas import cogroup_topk_cosine
+    from osarchiver_spark.operators.blas import cogroup_topk_cosine, global_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     labels = emb.select(F.col("label").alias("neg_label")).distinct()
@@ -519,13 +519,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         as_double(F.col("embedding")).alias("v"),
         F.col("label").alias("lbl"),
     )
-    local = cogroup_topk_cosine(probed, corpus, "lbl", NEG_K)
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= NEG_K)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return global_topk(cogroup_topk_cosine(probed, corpus, "lbl", NEG_K), NEG_K)
 
 
 QUERIES = {

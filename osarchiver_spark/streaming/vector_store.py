@@ -59,6 +59,7 @@ from osarchiver_spark.operators.ivf import (
     ivf_index,
     ivf_neardup_probe,
     prep_indexed_probe,
+    query_frame,
 )
 
 EMBEDDINGS_RAW_SCHEMA = T.StructType(
@@ -105,7 +106,9 @@ def make_maintenance_batch_fn(
             # the intra and cross probes share the SAME query side and
             # frozen model, so the probe pass + cid collect runs ONCE
             # and feeds both
-            prepped = prep_indexed_probe(batch, "vec_id", "embedding", centroids, nprobe)
+            prepped = prep_indexed_probe(
+                query_frame(batch, "vec_id", "embedding"), centroids, nprobe
+            )
             intra = ivf_neardup_probe(
                 batch_index, batch, "vec_id", "embedding", centroids,
                 batch_rows=n, prepped=prepped, **probe_kw,

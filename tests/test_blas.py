@@ -82,6 +82,27 @@ def test_local_topk_matches_the_inline_selector():
         assert not (got["query_id"] == got["neighbor_id"]).any()
 
 
+def test_nearest_centroid_kernel_matches_the_inline_table():
+    C = rng.standard_normal((6, 16))
+    D = blas.centroid_dists(M, C)
+    assert _bits_equal(D, -2.0 * (M @ C.T) + (C * C).sum(axis=1))
+    assert _bits_equal(blas.nearest_codes(M, [C])[:, 0], D.argmin(axis=1))
+
+    # m > 1: column j is the argmin over the j-th equal column slice
+    books = [rng.standard_normal((5, 4)) for _ in range(4)]
+    codes = blas.nearest_codes(M, books)
+    assert codes.shape == (len(M), 4) and codes.dtype.kind == "i"
+    for j, B in enumerate(books):
+        Vj = M[:, j * 4 : (j + 1) * 4]
+        assert _bits_equal(codes[:, j], (-2.0 * (Vj @ B.T) + (B * B).sum(axis=1)).argmin(axis=1))
+
+    # ties go to the lowest id: centroid 4 duplicates centroid 1, and
+    # a vector sitting on either is assigned to 1
+    T_ = np.vstack([C[:4], C[1:2]])
+    assert (blas.nearest_codes(C[1:2], [T_]) == 1).all()
+    assert (blas.nearest_codes(np.hstack([C[1:2], C[1:2]]), [T_, T_]) == 1).all()
+
+
 def test_hyperplane_keys_match_the_inline_projection():
     seed, L, b, dim = "emb", 3, 4, 16
     planes = blas.hyperplanes(seed, L, b, dim)
@@ -107,17 +128,20 @@ def test_pair_frames_agree_with_their_schema():
 
 def test_vector_kernels_live_in_blas_only():
     """No operator module but blas.py carries its own vector decode,
-    zero-safe norm, pair gram, hyperplane build or top-k selector."""
+    zero-safe norm, pair gram, hyperplane build, top-k selector or
+    centroid distance table."""
     forms = [
         "np.inf)",
         "np.triu_indices",
         "_pseudo_coeff(f",
         "np.lexsort((np.broadcast_to(nids, S.shape), -S)",
+        "-2.0 * (",
+        "(C * C).sum(axis=1)",
         "np.stack(pdf[",
     ]
     pattern = re.compile("|".join(map(re.escape, forms)))
     home = Path(blas.__file__)
-    assert all(f in home.read_text() for f in forms[:4])  # the scan sees the kernels
+    assert all(f in home.read_text() for f in forms[:-1])  # the scan sees the kernels
     offenders = [
         f"{path.name}:{n}: {line.strip()}"
         for path in sorted(home.parent.glob("*.py"))

@@ -189,6 +189,8 @@ def test_trainer_operators_survive_empty_input(spark):
 
     with pytest.raises(ValueError, match="no rows"):
         kmeans_fit(empty_vec, "vid", "v", k=2)
+    tiny = spark.createDataFrame([(i, [float(i), 1.0]) for i in range(3)], "vid long, v array<float>")
+    assert len(kmeans_fit(tiny, "vid", "v", k=8, iters=2)) == 3  # fewer rows than k
     assert semdedup_losers(empty_vec, "vid", "v").count() == 0
     assert semantic_cluster_profile(empty_vec, "vid", "v").count() == 0
 

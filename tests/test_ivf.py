@@ -18,6 +18,41 @@ def test_kmeans_deterministic_and_partitioning(spark, sf_small):
     assert len(c1) == 8 and len(c1[0]) == 64
 
 
+def _jobs_in_group(spark, fn) -> int:
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    group = "test-lloyd-job-count"
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(group))
+    sc.setJobGroup(group, group, False)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    return len(set(sc.statusTracker().getJobIdsForGroup(group)) - before)
+
+
+def test_lloyd_fits_run_one_job_per_iteration(spark, sf_small):
+    """One Lloyd's loop: the init collect (which also fills the cache)
+    plus one fused assignment pass per iteration, however many models
+    an iteration trains."""
+    from osarchiver_spark.operators.pq import pq_joint_fit
+
+    emb = load_table(spark, sf_small, "embeddings")
+    assert _jobs_in_group(spark, lambda: kmeans_fit(emb, "vec_id", "embedding", k=8, iters=2)) == 3
+    assert _jobs_in_group(
+        spark,
+        lambda: pq_joint_fit(
+            emb, "vec_id", "embedding", n_clusters=8, coarse_iters=3, m=16, codes=16, pq_iters=2
+        ),
+    ) == 4
+    assert _jobs_in_group(
+        spark,
+        lambda: pq_joint_fit(emb, "vec_id", "embedding", n_clusters=0, m=16, codes=16, pq_iters=2),
+    ) == 3
+
+
 def test_ivf_recall_beats_random(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)

@@ -8,7 +8,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from osarchiver_spark.operators.pq import _encode_pandas, ivf_pq_topk, pq_train
+from osarchiver_spark.operators.pq import _encode_pandas, ivf_pq_topk, pq_joint_fit, unit_frame
 from osarchiver_spark.operators.similarity import brute_force_topk
 from osarchiver_spark.sources.parquet import load_table
 
@@ -54,7 +54,7 @@ def test_pq_production_params_recall_floor(spark, sf_small):
 
 def test_pq_codes_are_bounded_and_deterministic(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings")
-    books = pq_train(emb, "vec_id", "embedding", m=16, codes=16, iters=1)
+    _, books = pq_joint_fit(emb, "vec_id", "embedding", n_clusters=0, m=16, codes=16, pq_iters=1)
     assert len(books) == 16 and all(len(b) <= 16 for b in books)
     base = emb.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -95,9 +95,7 @@ def test_pq_all_identical_vectors_hot_cluster(spark):
 
 
 def _fit_models(emb, n_clusters=8, m=16, codes=16):
-    from osarchiver_spark.operators.pq import _unit_expr, pq_joint_fit
-
-    emb_n = emb.select(F.col("vec_id"), _unit_expr("embedding").alias("_uv"))
+    emb_n = unit_frame(emb, "vec_id", "embedding", "vec_id", "_uv")
     return pq_joint_fit(emb_n, "vec_id", "_uv", n_clusters=n_clusters, m=m, codes=codes)
 
 
@@ -147,11 +145,10 @@ def test_ivf_pq_indexed_matches_unindexed(spark, sf_small, tmp_path):
     """The persisted-index probe is the SAME algorithm as the fused
     ivf_pq_topk — identical rows at any (nprobe, shortlist), given
     the same trained models."""
+    from osarchiver_spark.operators.ivf import _probe_pandas
     from osarchiver_spark.operators.pq import (
         _adc_shortlist,
         _exact_rerank,
-        _probe_coarse,
-        _unit_expr,
         ivf_pq_index,
         ivf_pq_topk_indexed,
     )
@@ -169,10 +166,8 @@ def test_ivf_pq_indexed_matches_unindexed(spark, sf_small, tmp_path):
     # ADC shortlist → exact re-rank over the in-memory encoded frame
     encoded = ivf_pq_index(emb, "vec_id", "embedding", coarse, books)
     id_type = emb.schema["vec_id"].dataType
-    qbase = queries.select(
-        F.col("vec_id").alias("query_id"), _unit_expr("embedding").alias("qv")
-    )
-    probed = _probe_coarse(qbase, coarse, 3, id_type)
+    qbase = unit_frame(queries, "vec_id", "embedding", "query_id", "qv")
+    probed = _probe_pandas(qbase, coarse, 3)
     short = _adc_shortlist(probed, encoded, books, 16, id_type)
     direct = _exact_rerank(short, qbase, emb, "vec_id", "embedding", 5)
 
@@ -252,19 +247,14 @@ def test_ivf_pq_reindex_equals_fresh_build(spark, sf_small, tmp_path):
     must be row-identical to a fresh ivf_pq_index over that
     membership, including for a survivors-only (partial) store."""
     from osarchiver_spark.operators.ivf import kmeans_fit
-    from osarchiver_spark.operators.pq import (
-        _unit_expr,
-        ivf_pq_index,
-        ivf_pq_reindex,
-        pq_joint_fit,
-    )
+    from osarchiver_spark.operators.pq import ivf_pq_index, ivf_pq_reindex
     from pyspark.sql import functions as F
 
     from osarchiver_spark.sources.parquet import load_table
 
     emb = load_table(spark, sf_small, "embeddings")
     survivors = emb.filter(F.col("vec_id") % 3 != 0)
-    emb_n = emb.select(F.col("vec_id"), _unit_expr("embedding").alias("_uv"))
+    emb_n = unit_frame(emb, "vec_id", "embedding", "vec_id", "_uv")
     coarse_a, books_a = pq_joint_fit(
         emb_n.filter(F.col("vec_id") % 2 == 0), "vec_id", "_uv",
         n_clusters=4, m=8, codes=8,
@@ -329,3 +319,66 @@ def test_pq_recall_on_clustered_fixture(spark, sf_small):
     }
     recall = len(exact & got) / len(exact)
     assert recall >= 0.9, f"clustered-regime recall below pin: {recall}"
+
+
+def _transform_calls(plan: str) -> list[str]:
+    """Every ``transform(...)`` call in a plan string, balanced."""
+    calls = []
+    start = plan.find("transform(")
+    while start >= 0:
+        depth, i = 0, start + len("transform")
+        while True:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+            if depth == 0:
+                break
+        calls.append(plan[start:i])
+        start = plan.find("transform(", start + 1)
+    return calls
+
+
+def _old_unit_expr(vec_col: str):
+    """The former inline normalization: the norm sits inside the
+    transform lambda."""
+    from osarchiver_spark.functions.vectors import as_double, norm
+
+    nrm = norm(as_double(F.col(vec_col)))
+    return F.when(
+        nrm > 0, F.transform(as_double(F.col(vec_col)), lambda x: x / nrm)
+    ).otherwise(as_double(F.col(vec_col)))
+
+
+def _with_zero_vector(spark, sf_small):
+    emb = load_table(spark, sf_small, "embeddings").select("vec_id", "embedding")
+    zero = spark.createDataFrame([(10**9, [0.0] * 64)], "vec_id long, embedding array<float>")
+    return emb.unionByName(zero)
+
+
+def test_unit_frame_computes_the_norm_once_per_row(spark, sf_small):
+    """The row norm (a zip_with + aggregate) must not sit inside the
+    per-element transform lambda of the optimized plan, or Spark
+    re-evaluates it for every element: O(d²) per row."""
+    emb = _with_zero_vector(spark, sf_small)
+
+    def lambdas(df):
+        return _transform_calls(df._jdf.queryExecution().optimizedPlan().toString())
+
+    new = lambdas(unit_frame(emb, "vec_id", "embedding", "vid", "v"))
+    assert new and not [c for c in new if "aggregate" in c], new
+    # the scan sees the defect it guards against
+    old = lambdas(emb.select(_old_unit_expr("embedding").alias("v")))
+    assert [c for c in old if "aggregate" in c]
+
+
+def test_unit_frame_is_bit_identical_to_the_inline_expression(spark, sf_small):
+    emb = _with_zero_vector(spark, sf_small)
+    new = {
+        r.vid: np.asarray(r.v).tobytes()
+        for r in unit_frame(emb, "vec_id", "embedding", "vid", "v").collect()
+    }
+    old = {
+        r.vec_id: np.asarray(r.v).tobytes()
+        for r in emb.select("vec_id", _old_unit_expr("embedding").alias("v")).collect()
+    }
+    assert new == old
+    assert new[10**9] == np.zeros(64).tobytes()  # a zero vector passes through

@@ -493,6 +493,18 @@ def test_brute_force_topk_oversized_query_set_fails_loudly(spark):
         brute_force_topk(corpus, queries, "vid", "v", k=1, max_query_rows=3)
 
 
+def test_brute_force_topk_empty_query_set_returns_no_rows(spark):
+    from osarchiver_spark.operators.similarity import brute_force_topk
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vid long, v array<double>"
+    )
+    out = brute_force_topk(corpus, corpus.limit(0), "vid", "v", k=3)
+    assert out.columns == ["query_id", "rank", "neighbor_id", "cosine"]
+    assert out.schema["query_id"].dataType == corpus.schema["vid"].dataType
+    assert out.collect() == []
+
+
 def test_staged_store_build_equals_sequential_append(spark, tmp_path):
     """_staged_store_build (r12: concurrent staged drop write +
     file-move publish) must land a store row-identical to the former

@@ -108,11 +108,11 @@ def test_streaming_pq_store_equals_one_shot(spark, sf_small, tmp_path):
     CODE store must equal the one-shot batch export's (codes depend
     only on the frozen models + membership; membership is
     batching-independent)."""
-    from osarchiver_spark.operators.pq import _unit_expr, pq_joint_fit
+    from osarchiver_spark.operators.pq import pq_joint_fit, unit_frame
 
     src_sf, emb = _multi_file_source(spark, sf_small, tmp_path)
     cents = kmeans_fit(emb, "vec_id", "embedding", k=8, iters=2)
-    emb_n = emb.select(F.col("vec_id"), _unit_expr("embedding").alias("_uv"))
+    emb_n = unit_frame(emb, "vec_id", "embedding", "vec_id", "_uv")
     coarse, books = pq_joint_fit(emb_n, "vec_id", "_uv", n_clusters=8, m=16, codes=16)
 
     one = str(tmp_path / "one")

@@ -194,11 +194,11 @@ def test_vector_export_pq_store_incremental_identity(spark, sf_small, tmp_path):
     serving format). Membership is decided on full vectors either way,
     and codes depend only on the frozen models — so the 3-drop
     incremental code store must be row-identical to the one-shot's."""
-    from osarchiver_spark.operators.pq import _unit_expr, pq_joint_fit
+    from osarchiver_spark.operators.pq import pq_joint_fit, unit_frame
 
     emb = load_table(spark, sf_small, "embeddings")
     cents = kmeans_fit(emb, "vec_id", "embedding", k=8, iters=2)
-    emb_n = emb.select(F.col("vec_id"), _unit_expr("embedding").alias("_uv"))
+    emb_n = unit_frame(emb, "vec_id", "embedding", "vec_id", "_uv")
     coarse, books = pq_joint_fit(
         emb_n, "vec_id", "_uv", n_clusters=8, m=16, codes=16
     )
