@@ -175,32 +175,9 @@ def simhash16_from_hashed(hashes: Column) -> Column:
     return out
 
 
-def simhash16_vote_columns(mask: Column) -> list[Column]:
-    """Per-token ±1 vote expressions for the 16 SimHash bit positions,
-    given the token's 16-bit md5 prefix ``mask`` (the first 4 hex
-    digits of md5(token) as an integer, NULL for a missing token).
-
-    Bit position ``pos`` reads hex digit ``pos // 4`` bit ``pos % 4``
-    (simhash16_from_hashed's layout); in the packed integer that hex
-    digit occupies bits ``(3 - pos//4)*4 .. +3``, so the lookup is a
-    shift+mask — pure codegen integer ops, no string churn past the
-    one md5 per token. A NULL mask (empty/NULL text) votes 0 on every
-    bit, reproducing the aggregate-over-empty-array result (simhash 0).
-    """
-    votes = []
-    for pos in range(16):
-        d, b = divmod(pos, 4)
-        bit_idx = (3 - d) * 4 + b
-        bit = F.shiftright(mask, bit_idx).bitwiseAND(F.lit(1))
-        votes.append(
-            F.when(mask.isNull(), F.lit(0)).when(bit != 0, F.lit(1)).otherwise(F.lit(-1))
-        )
-    return votes
-
-
 def token_simhash_mask(token: Column) -> Column:
     """16-bit integer from the first 4 hex digits of md5(token) — the
-    compact per-token input of simhash16_vote_columns (4 bytes instead
+    compact per-token input of simhash_vote_columns (4 bytes instead
     of a 32-char hex string)."""
     return F.conv(F.substring(F.md5(token), 1, 4), 16, 10).cast("int")
 
@@ -215,24 +192,29 @@ def token_simhash_mask64(token: Column) -> Column:
     return F.shiftleft(hi, 32).bitwiseOR(lo)
 
 
-def simhash64_vote_columns(mask: Column) -> list[Column]:
-    """Per-token ±1 votes for the 64 bit positions of the production
-    SimHash (bit i of the packed md5 prefix votes bit i of the
-    sketch). NULL mask (empty/NULL text) votes 0 everywhere."""
-    votes = []
-    for pos in range(64):
-        bit = F.shiftrightunsigned(mask, pos).bitwiseAND(F.lit(1))
-        votes.append(
-            F.when(mask.isNull(), F.lit(0)).when(bit != 0, F.lit(1)).otherwise(F.lit(-1))
-        )
-    return votes
+# Bit orders for simhash_vote_columns. 16-bit: sketch bit p reads hex
+# digit p // 4, bit p % 4 of md5(token) (simhash16_from_hashed's and
+# the oracle's layout); in token_simhash_mask's packed integer that
+# hex digit occupies bits (3 - p//4)*4 .. +3. 64-bit: sketch bit p
+# reads bit p of token_simhash_mask64's packed prefix.
+SIMHASH16_BIT_ORDER = [(3 - p // 4) * 4 + p % 4 for p in range(16)]
+SIMHASH64_BIT_ORDER = list(range(64))
 
 
-def simhash16(text: Column) -> Column:
-    """Single-expression form (re-hashes per bit position; prefer
-    token_hashes + simhash16_from_hashed around an optimizer barrier
-    in hot paths — see operators/dedup.py::simhash_candidates)."""
-    return simhash16_from_hashed(token_hashes(text))
+def simhash_vote_columns(mask: Column, bit_order: list[int]) -> list[Column]:
+    """Per-token ±1 vote expressions, one per sketch bit: sketch bit
+    p votes +1 when bit ``bit_order[p]`` of the token's packed md5
+    prefix ``mask`` is set, -1 when it is clear. The lookup is a
+    shift+mask — pure codegen integer ops, no string churn past the
+    one md5 per token. A NULL mask (empty/NULL text) votes 0 on every
+    bit, reproducing the aggregate-over-empty-array result (sketch 0).
+    """
+    return [
+        F.when(mask.isNull(), F.lit(0))
+        .when(F.shiftrightunsigned(mask, i).bitwiseAND(F.lit(1)) != 0, F.lit(1))
+        .otherwise(F.lit(-1))
+        for i in bit_order
+    ]
 
 
 _ALNUM_SPACE = "abcdefghijklmnopqrstuvwxyz0123456789 "

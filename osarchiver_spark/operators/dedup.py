@@ -1,18 +1,30 @@
-"""Deduplication operators over a text column (north-star).
-
-Four families, all Spark-built-ins only (whole-stage codegen, no
-Python UDFs), each designed so candidate generation is an equi-join —
-never an O(n²) cross join — which is what survives 100 TB:
+"""Deduplication operators over a text or an embedding column
+(north-star). Candidate generation is an equi-join or a bucket
+group — never an O(n²) cross join — which is what survives 100 TB:
 
 - exact: hash-groupBy on a normalized fingerprint (one shuffle);
-- MinHash+LSH: shingle → k-minhash signature → banded bucket keys →
-  bucket equi-join for candidates → exact Jaccard verify on pairs;
-- SimHash: 16-bit token-vote sketch, candidates = equal sketch;
-- n-gram Jaccard: exact pairwise similarity on a bounded candidate
-  set (for verification / small subsets).
+- MinHash+LSH: shingle → k-minhash signature → banded bucket keys
+  (``_band_keys``) → bucket equi-join for candidates → exact Jaccard
+  verify (``_set_scores``). One-shot pairs, the incremental
+  arrival-vs-corpus probe, the persisted band index with its indexed
+  probe, and the per-drop edge step (``minhash_drop_edges``) all
+  share those two steps;
+- SimHash: 16- or 64-bit token-vote sketches (``_simhash_sketches``);
+  candidates are equal sketches, or block-pigeonhole probes within
+  a hamming bound (``_block_probe``);
+- n-gram Jaccard and containment: exact scores on the pairs of a
+  shingle-share equi-join (``_share_candidates``), for bounded sets;
+- repeated spans: winnowed window hashes → per-doc repeated-passage
+  ranges;
+- embedding cosine: multi-table hyperplane LSH and an incremental
+  fused probe (``mapInPandas`` over the operators/blas.py kernels),
+  plus a brute-force reference;
+- connected components over any pair graph.
 
-Hashes are md5 (bit-identical in DuckDB) so every operator has an
-exact SQL oracle.
+The text families are Spark built-ins only (whole-stage codegen, no
+Python UDFs). Their default hash is md5 (bit-identical in DuckDB), so
+each has an exact SQL oracle; ``hash_fn="xxhash64"`` is the production
+mode where offered.
 """
 
 from __future__ import annotations
@@ -25,8 +37,9 @@ from osarchiver_spark.functions.text import (
     lsh_band_keys,
     minhash_signature,
     normalized_fingerprint,
-    simhash16_vote_columns,
-    simhash64_vote_columns,
+    SIMHASH16_BIT_ORDER,
+    SIMHASH64_BIT_ORDER,
+    simhash_vote_columns,
     token_simhash_mask,
     token_simhash_mask64,
     tokens,
@@ -66,16 +79,47 @@ def _with_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFra
     )
 
 
-def _pair_jaccard(pairs: DataFrame, shingled: DataFrame) -> DataFrame:
-    """Attach exact Jaccard to (doc_a, doc_b) candidate pairs."""
-    a = shingled.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    b = shingled.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    with_sets = pairs.join(a, "doc_a").join(b, "doc_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return with_sets.select(
-        "doc_a", "doc_b", F.round(inter / union, 6).alias("jaccard")
+def _band_keys(
+    shingled: DataFrame, num_hashes: int, bands: int, hash_fn: str, id_as: str = "doc_id"
+) -> DataFrame:
+    """The LSH band step: a shingled frame (doc_id, shingles) →
+    (id_as, band_idx, band_key), one row per band of the k-minhash
+    signature. Docs sharing any (band_idx, band_key) are candidates."""
+    sig = shingled.select(
+        "doc_id", minhash_signature(F.col("shingles"), num_hashes, hash_fn).alias("sig")
     )
+    return sig.select(
+        F.col("doc_id").alias(id_as),
+        F.posexplode(lsh_band_keys(F.col("sig"), bands, num_hashes // bands)).alias(
+            "band_idx", "band_key"
+        ),
+    )
+
+
+def _set_scores(
+    pairs: DataFrame, a: DataFrame, b: DataFrame, containment: bool = False
+) -> DataFrame:
+    """The shingle-set join and score: candidate pairs (x, y) joined
+    to the shingled frames (doc_id, shingles) of x's side ``a`` and
+    y's side ``b``, scored by exact Jaccard |A∩B| / |A∪B| →
+    (x, y, jaccard), or with ``containment`` by |A∩B| / |A| and
+    |A∩B| / |B| → (x, y, containment_a, containment_b). Scores are
+    rounded to 6 places, so engine last-ulp noise can't flip a
+    threshold. Callers put their own join hints (F.broadcast) on a
+    and b."""
+    x, y = pairs.columns
+    sh_a = a.select(F.col("doc_id").alias(x), F.col("shingles").alias("sh_a"))
+    sh_b = b.select(F.col("doc_id").alias(y), F.col("shingles").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    if containment:
+        scores = [
+            F.round(inter / F.size("sh_a"), 6).alias("containment_a"),
+            F.round(inter / F.size("sh_b"), 6).alias("containment_b"),
+        ]
+    else:
+        union = F.size("sh_a") + F.size("sh_b") - inter
+        scores = [F.round(inter / union, 6).alias("jaccard")]
+    return pairs.join(sh_a, x).join(sh_b, y).select(x, y, *scores)
 
 
 def minhash_lsh_pairs(
@@ -106,19 +150,11 @@ def minhash_lsh_pairs(
     key is high-cardinality, so the shuffle partitions evenly; AQE
     skew-join splits any hot bucket (e.g. a boilerplate shingle set).
     """
-    rows = num_hashes // bands
     # shingled feeds three consumers (signature + both sides of the
     # verify join): cache the shingle arrays instead of recomputing
     # the tokenize+hash pipeline per consumer.
     shingled = transient(_with_shingles(df, id_col, text_col, shingle_n))
-    sig = shingled.select(
-        "doc_id",
-        "shingles",
-        minhash_signature(F.col("shingles"), num_hashes, hash_fn).alias("sig"),
-    )
-    banded = sig.select(
-        "doc_id", F.posexplode(lsh_band_keys(F.col("sig"), bands, rows)).alias("band_idx", "band_key")
-    )
+    banded = _band_keys(shingled, num_hashes, bands, hash_fn)
     left = banded.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_key")
     right = banded.select(F.col("doc_id").alias("doc_b"), "band_idx", "band_key")
     candidates = (
@@ -127,7 +163,7 @@ def minhash_lsh_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    scored = _pair_jaccard(candidates, shingled)
+    scored = _set_scores(candidates, shingled, shingled)
     return scored.filter(F.col("jaccard") >= threshold)
 
 
@@ -159,35 +195,17 @@ def minhash_lsh_incremental(
     Returns (new_id, corpus_id, jaccard >= threshold): the arrivals
     to drop (or link) before appending the batch.
     """
-    rows = num_hashes // bands
-
-    def banded(sh: DataFrame) -> DataFrame:
-        sig = sh.select(
-            "doc_id", minhash_signature(F.col("shingles"), num_hashes, hash_fn).alias("sig")
-        )
-        return sig.select(
-            "doc_id",
-            F.posexplode(lsh_band_keys(F.col("sig"), bands, rows)).alias("band_idx", "band_key"),
-        )
-
     sh_new = transient(_with_shingles(new, id_col, text_col, shingle_n))
     sh_corpus = _with_shingles(corpus, id_col, text_col, shingle_n)
-    nb = banded(sh_new).select(F.col("doc_id").alias("new_id"), "band_idx", "band_key")
-    cb = banded(sh_corpus).select(F.col("doc_id").alias("corpus_id"), "band_idx", "band_key")
+    nb = _band_keys(sh_new, num_hashes, bands, hash_fn, "new_id")
+    cb = _band_keys(sh_corpus, num_hashes, bands, hash_fn, "corpus_id")
     cand = (
         cb.join(F.broadcast(nb), ["band_idx", "band_key"])
         .select("new_id", "corpus_id")
         .distinct()
     )
-    a = sh_new.select(F.col("doc_id").alias("new_id"), F.col("shingles").alias("sh_a"))
-    b = sh_corpus.select(F.col("doc_id").alias("corpus_id"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(F.broadcast(a), "new_id")
-        .join(b, "corpus_id")
-        .select("new_id", "corpus_id", F.round(inter / union, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    return _set_scores(cand, F.broadcast(sh_new), sh_corpus).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -215,15 +233,9 @@ def minhash_lsh_index(
     slivers of the index near the probe keys (measured in
     tests/test_scale_layout.py, not asserted).
     """
-    rows = num_hashes // bands
-    sig = _with_shingles(corpus, id_col, text_col, shingle_n).select(
-        "doc_id", minhash_signature(F.col("shingles"), num_hashes, hash_fn).alias("sig")
-    )
-    keyed = sig.select(
-        F.col("doc_id").alias("corpus_id"),
-        F.posexplode(lsh_band_keys(F.col("sig"), bands, rows)).alias(
-            "band_idx", "band_key"
-        ),
+    keyed = _band_keys(
+        _with_shingles(corpus, id_col, text_col, shingle_n),
+        num_hashes, bands, hash_fn, "corpus_id",
     )
     parted = (
         keyed.repartitionByRange(num_files, "band_key")
@@ -260,23 +272,11 @@ def prep_new_bands(
     ``prepped`` (r11 optimization round, guide-style concurrent jobs);
     the math is byte-identical to the inline path."""
     sh_new = transient(_with_shingles(new, id_col, text_col, shingle_n))
-    rows = num_hashes // bands
     # transient: nb is consumed TWICE (the pushdown-key collect below
     # and the broadcast build of the candidate join) — without the
     # cache the batch would pay its minhash/banding cost twice, for
     # the operator whose whole point is cheap per-batch probes
-    nb = transient(
-        sh_new.select(
-            "doc_id",
-            minhash_signature(F.col("shingles"), num_hashes, hash_fn).alias("sig"),
-        )
-        .select(
-            F.col("doc_id").alias("new_id"),
-            F.posexplode(lsh_band_keys(F.col("sig"), bands, rows)).alias(
-                "band_idx", "band_key"
-            ),
-        )
-    )
+    nb = transient(_band_keys(sh_new, num_hashes, bands, hash_fn, "new_id"))
     keys = [
         r[0]
         for r in nb.select("band_key")
@@ -375,28 +375,53 @@ def minhash_lsh_incremental_indexed(
             id_col,
             "left_semi",
         )
-    a = sh_new.select(F.col("doc_id").alias("new_id"), F.col("shingles").alias("sh_a"))
-    b = _with_shingles(pruned, id_col, text_col, shingle_n).select(
-        F.col("doc_id").alias("corpus_id"), F.col("shingles").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(F.broadcast(a), "new_id")
-        .join(b, "corpus_id")
-        .select("new_id", "corpus_id", F.round(inter / union, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    sh_corpus = _with_shingles(pruned, id_col, text_col, shingle_n)
+    return _set_scores(cand, F.broadcast(sh_new), sh_corpus).filter(
+        F.col("jaccard") >= threshold
     )
 
 
-def _simhash_sketches(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc_id, simhash): one 16-bit sketch per document, computed as
-    explode(tokens) → md5-prefix mask → groupBy(doc_id) vote sums.
+def minhash_drop_edges(
+    batch: DataFrame,
+    index: DataFrame | None,
+    corpus: DataFrame | None,
+    threshold: float,
+    **lsh_kw,
+) -> DataFrame:
+    """One crawl drop's near-dup edges (doc_a, doc_b) over a
+    documents frame (doc_id, text): the drop's own MinHash-LSH pairs
+    ∪ its cross matches against the standing band ``index`` and the
+    ``corpus`` text behind it (no cross matches when ``index`` is
+    None: the first drop). With ingest-ordered doc ids every cross
+    edge is (earlier, later), and the edges accumulated over all
+    drops equal the one-shot ``minhash_lsh_pairs`` graph. The result
+    is materialized (localCheckpoint) before it is returned, so the
+    lazily planned probe never observes bands appended after it.
+    ``lsh_kw``: shingle_n/num_hashes/bands/hash_fn, the same for
+    every drop and for the index build."""
+    edges = minhash_lsh_pairs(
+        batch, "doc_id", "text", threshold=threshold, **lsh_kw
+    ).select("doc_a", "doc_b")
+    if index is not None:
+        cross = minhash_lsh_incremental_indexed(
+            index, corpus, batch, "doc_id", "text", threshold=threshold, **lsh_kw
+        ).select(F.col("corpus_id").alias("doc_a"), F.col("new_id").alias("doc_b"))
+        edges = edges.unionByName(cross)
+    return edges.localCheckpoint()
 
-    This is the scale-safe shape: the per-token work (one md5 + 16
-    integer shift/mask votes) runs in whole-stage codegen over
+
+def _simhash_sketches(df: DataFrame, id_col: str, text_col: str, n_bits: int = 16) -> DataFrame:
+    """(doc_id, simhash): one ``n_bits``-wide sketch per document,
+    computed as explode(tokens) → md5-prefix mask → groupBy(doc_id)
+    vote sums. 16 bits: an ``int`` whose bit p is set by hex digit
+    p // 4, bit p % 4 of each token's md5 (the oracle's layout);
+    64 bits: a ``bigint`` whose bit p is set by bit p of each token's
+    packed 64-bit md5 prefix.
+
+    This is the scale-safe shape: the per-token work (one md5 +
+    n_bits integer shift/mask votes) runs in whole-stage codegen over
     exploded rows, partial aggregation combines the votes map-side,
-    and the exchange carries 16 ints per document — never a
+    and the exchange carries n_bits sums per document — never a
     token-hash array. The previous form (materialize
     array<md5-hex> per doc, shuffle it, then 16 interpreted
     ArrayAggregate passes) held the whole hash array per in-flight
@@ -415,22 +440,76 @@ def _simhash_sketches(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     cores when the fixture parquet has too few splits; it shuffles
     plain text rows, strictly smaller than the old array shuffle.
     """
+    mask, bit_order, dtype = {
+        16: (token_simhash_mask, SIMHASH16_BIT_ORDER, "int"),
+        64: (token_simhash_mask64, SIMHASH64_BIT_ORDER, "bigint"),
+    }[n_bits]
     par = df.sparkSession.sparkContext.defaultParallelism
     ex = (
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
         .filter(F.col("_t").isNotNull())
         .repartition(par)
         .select("doc_id", F.explode_outer(tokens(F.col("_t"))).alias("_tok"))
-        .select("doc_id", token_simhash_mask(F.col("_tok")).alias("_mask"))
+        .select("doc_id", mask(F.col("_tok")).alias("_mask"))
     )
-    votes = simhash16_vote_columns(F.col("_mask"))
+    votes = simhash_vote_columns(F.col("_mask"), bit_order)
     agg = ex.groupBy("doc_id").agg(
         *[F.sum(v).alias(f"_v{p}") for p, v in enumerate(votes)]
     )
-    out = F.lit(0)
-    for p in range(16):
-        out = out + F.when(F.col(f"_v{p}") > 0, F.lit(1 << p)).otherwise(F.lit(0))
+    one, zero = F.lit(1).cast(dtype), F.lit(0).cast(dtype)
+    out = zero
+    for p in range(n_bits):
+        out = out.bitwiseOR(F.when(F.col(f"_v{p}") > 0, F.shiftleft(one, p)).otherwise(zero))
     return agg.select("doc_id", out.alias("simhash"))
+
+
+def _block_probe(sk: DataFrame, max_hamming: int, n_bits: int) -> DataFrame:
+    """Block-pigeonhole probe over a sketch table (doc_id, simhash):
+    (doc_a, doc_b, hamming) for every pair within ``max_hamming``
+    bits. The ``n_bits`` sketch splits into ``max_hamming + 1`` bit
+    blocks; a pair differing in at most ``max_hamming`` bits agrees
+    exactly on at least one block, so the candidates come from one
+    equi-join on (block_idx, block_bits) with full recall, and the
+    verify is ``bit_count(xor) <= max_hamming``."""
+    n_blocks = max_hamming + 1
+    # one 64-bit-wide block would make JVM shift amounts wrap mod 64
+    # (shiftleft(1,64)=1 → mask 0 → every doc in block 0: an all-pairs
+    # self-join, the exact quadratic this probe exists to avoid).
+    # Hamming-0 blocking is a plain equi-join on the full sketch — use
+    # simhash_candidates for that.
+    if n_blocks < 1 or n_bits // n_blocks >= 64:
+        raise ValueError("max_hamming must be >= 1; use an exact-sketch equi-join for hamming 0")
+    # block i covers bits [lo, lo+width): widths as even as possible
+    widths = [n_bits // n_blocks + (1 if i < n_bits % n_blocks else 0) for i in range(n_blocks)]
+    one = F.lit(1).cast(sk.schema["simhash"].dataType)
+    blocks, lo = [], 0
+    for i, w in enumerate(widths):
+        blocks.append(
+            F.struct(
+                F.lit(i).alias("block_idx"),
+                F.shiftrightunsigned("simhash", lo)
+                .bitwiseAND(F.shiftleft(one, w) - one)
+                .alias("block_bits"),
+            )
+        )
+        lo += w
+    keyed = sk.select(
+        "doc_id", "simhash", F.explode(F.array(*blocks)).alias("b")
+    ).select("doc_id", "simhash", "b.block_idx", "b.block_bits")
+    left = keyed.select(
+        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"), "block_idx", "block_bits"
+    )
+    right = keyed.select(
+        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"), "block_idx", "block_bits"
+    )
+    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+    return (
+        left.join(right, ["block_idx", "block_bits"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", hamming.alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
+    )
 
 
 def simhash_candidates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -465,51 +544,21 @@ def simhash_multiprobe_pairs(
     — the multi-probe upgrade over hamming-0 blocking.
 
     Block-pigeonhole candidates (the Manku/Jain/Sarma web-crawl
-    scheme): split the sketch into ``max_hamming + 1`` bit blocks; any
-    pair differing in at most ``max_hamming`` bits must agree EXACTLY
-    on at least one block, so candidates come from ``d+1`` equi-joins
-    on (block_idx, block_bits) with guaranteed full recall — no
-    probabilistic misses and only (d+1)x row amplification, vs the
-    C(16,2)=137x of flip-every-mask probing. Verify is
-    ``bit_count(xor) <= d``, JVM-side.
+    scheme, :func:`_block_probe`): split the sketch into
+    ``max_hamming + 1`` bit blocks; any pair differing in at most
+    ``max_hamming`` bits must agree EXACTLY on at least one block, so
+    candidates come from ``d+1`` equi-joins on (block_idx, block_bits)
+    with guaranteed full recall — no probabilistic misses and only
+    (d+1)x row amplification, vs the C(16,2)=137x of flip-every-mask
+    probing. Verify is ``bit_count(xor) <= d``, JVM-side.
 
     At 100 TB the same shape holds with 64-bit sketches and more
-    blocks; the block key keeps the self-join an equi-join (AQE
-    splits hot blocks)."""
-    n_blocks = max_hamming + 1
+    blocks (simhash64_multiprobe_pairs); the block key keeps the
+    self-join an equi-join (AQE splits hot blocks)."""
     # one sketch materialization feeds both self-join sides (see
     # simhash_candidates — same 2-passes-to-1 collapse)
     sk = transient(_simhash_sketches(df, id_col, text_col))
-
-    # block i covers bits [lo, lo+width): widths as even as possible
-    widths = [n_bits // n_blocks + (1 if i < n_bits % n_blocks else 0) for i in range(n_blocks)]
-    blocks, lo = [], 0
-    for i, w in enumerate(widths):
-        blocks.append(
-            F.struct(
-                F.lit(i).alias("block_idx"),
-                F.shiftright("simhash", lo).bitwiseAND(F.lit((1 << w) - 1)).alias("block_bits"),
-            )
-        )
-        lo += w
-    keyed = sk.select(
-        "doc_id", "simhash", F.explode(F.array(*blocks)).alias("b")
-    ).select("doc_id", "simhash", "b.block_idx", "b.block_bits")
-
-    left = keyed.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"), "block_idx", "block_bits"
-    )
-    right = keyed.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"), "block_idx", "block_bits"
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return (
-        left.join(right, ["block_idx", "block_bits"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return _block_probe(sk, max_hamming, n_bits)
 
 
 def simhash64_multiprobe_pairs(
@@ -532,66 +581,27 @@ def simhash64_multiprobe_pairs(
     only genuine near-duplicates and birthday-rate noise reach the
     bit_count verify. Same operator shape, same vote rule, one md5
     per token, map-combinable vote sums — just a sketch wide enough
-    for the corpus.
+    for the corpus. ``max_hamming`` 0 raises ValueError (one 64-bit
+    block; see :func:`_block_probe`).
     """
-    # max_hamming=0 would make n_blocks=1 and w=64, where JVM shift
-    # amounts wrap mod 64 (shiftleft(1,64)=1 → mask 0 → every doc in
-    # block 0: an all-pairs self-join, the exact quadratic this
-    # function exists to avoid). Hamming-0 blocking is a plain
-    # equi-join on the full sketch — use simhash_candidates for that.
-    if max_hamming < 1:
-        raise ValueError("max_hamming must be >= 1; use an exact-sketch equi-join for hamming 0")
-    n_blocks = max_hamming + 1
-    par = df.sparkSession.sparkContext.defaultParallelism
-    ex = (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
-        .filter(F.col("_t").isNotNull())  # NULL text: NULL sketch in oracle form — excluded
-        .repartition(par)
-        .select("doc_id", F.explode_outer(tokens(F.col("_t"))).alias("_tok"))
-        .select("doc_id", token_simhash_mask64(F.col("_tok")).alias("_mask"))
-    )
-    votes = simhash64_vote_columns(F.col("_mask"))
-    agg = ex.groupBy("doc_id").agg(
-        *[F.sum(v).alias(f"_v{p}") for p, v in enumerate(votes)]
-    )
-    one = F.lit(1).cast("bigint")
-    out = F.lit(0).cast("bigint")
-    for p in range(64):
-        out = out.bitwiseOR(
-            F.when(F.col(f"_v{p}") > 0, F.shiftleft(one, p)).otherwise(F.lit(0).cast("bigint"))
-        )
     # one sketch materialization feeds both self-join sides (see
     # simhash_candidates — same 2-passes-to-1 collapse)
-    sk = transient(agg.select("doc_id", out.alias("simhash")))
+    sk = transient(_simhash_sketches(df, id_col, text_col, 64))
+    return _block_probe(sk, max_hamming, 64)
 
-    n_bits = 64
-    widths = [n_bits // n_blocks + (1 if i < n_bits % n_blocks else 0) for i in range(n_blocks)]
-    blocks, lo = [], 0
-    for i, w in enumerate(widths):
-        blocks.append(
-            F.struct(
-                F.lit(i).alias("block_idx"),
-                F.shiftrightunsigned("simhash", lo)
-                .bitwiseAND(F.shiftleft(one, w) - one)
-                .alias("block_bits"),
-            )
-        )
-        lo += w
-    keyed = sk.select(
-        "doc_id", "simhash", F.explode(F.array(*blocks)).alias("b")
-    ).select("doc_id", "simhash", "b.block_idx", "b.block_bits")
-    left = keyed.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"), "block_idx", "block_bits"
-    )
-    right = keyed.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"), "block_idx", "block_bits"
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+
+def _share_candidates(shingled: DataFrame) -> DataFrame:
+    """Candidate pairs (doc_a < doc_b) of a shingled frame (doc_id,
+    shingles) that share at least one shingle: an equi-join on the
+    exploded shingle. Docs with zero shared shingles can't clear any
+    score threshold > 0, so the exact n-gram scores need no cross
+    join."""
+    ex = shingled.select("doc_id", F.explode("shingles").alias("s"))
     return (
-        left.join(right, ["block_idx", "block_bits"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        ex.alias("x")
+        .join(ex.alias("y"), "s")
+        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
+        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
         .distinct()
     )
 
@@ -610,15 +620,8 @@ def ngram_jaccard_pairs(
     so even the 'exact' variant avoids a cross join.
     """
     shingled = transient(_with_shingles(df, id_col, text_col, shingle_n))
-    ex = shingled.select("doc_id", F.explode("shingles").alias("s"))
-    pairs = (
-        ex.alias("x")
-        .join(ex.alias("y"), "s")
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    return _pair_jaccard(pairs, shingled).filter(F.col("jaccard") >= threshold)
+    pairs = _share_candidates(shingled)
+    return _set_scores(pairs, shingled, shingled).filter(F.col("jaccard") >= threshold)
 
 
 def ngram_containment_pairs(
@@ -638,30 +641,9 @@ def ngram_containment_pairs(
     containment >= threshold, and both directions are reported so the
     caller can tell container from contained."""
     shingled = transient(_with_shingles(df, id_col, text_col, shingle_n))
-    ex = shingled.select("doc_id", F.explode("shingles").alias("s"))
-    pairs = (
-        ex.alias("x")
-        .join(ex.alias("y"), "s")
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    a = shingled.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    b = shingled.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    with_sets = pairs.join(a, "doc_a").join(b, "doc_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    cont_a = F.round(inter / F.size("sh_a"), 6)
-    cont_b = F.round(inter / F.size("sh_b"), 6)
-    return (
-        with_sets.select(
-            "doc_a",
-            "doc_b",
-            cont_a.alias("containment_a"),
-            cont_b.alias("containment_b"),
-        )
-        .filter(
-            (F.col("containment_a") >= threshold) | (F.col("containment_b") >= threshold)
-        )
+    pairs = _share_candidates(shingled)
+    return _set_scores(pairs, shingled, shingled, containment=True).filter(
+        (F.col("containment_a") >= threshold) | (F.col("containment_b") >= threshold)
     )
 
 
@@ -763,12 +745,10 @@ def repeated_span_report(
     # two consumers (the duplicate-hash agg and the semi-join probe):
     # cache so the per-character anchor/hash map work runs once;
     # transient because the returned report references it (auto-release
-    # on caller drop, operators/cache.py)
-    from osarchiver_spark.operators.cache import transient
-
-    # lazy: building the report (registration, explain, plan pins)
-    # must not run the per-character anchor/hash scan — the LogicalRDD
-    # node is in the plan either way, so the plan pin
+    # on caller drop, operators/cache.py); lazy because building the
+    # report (registration, explain, plan pins) must not run the
+    # per-character anchor/hash scan — the LogicalRDD node is in the
+    # plan either way, so the plan pin
     # (test_substring_spans_selection_is_map_side) holds without
     # materialization; the scan runs on the caller's first action
     spans = transient(spans)
@@ -1232,7 +1212,7 @@ def embedding_lsh_incremental(
 
 def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str, threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-dup pairs (brute force within a bounded
-    set; the LSH-bucketed scale path is operators/similarity.py).
+    set; the LSH-bucketed scale path is embedding_lsh_neardup_pairs).
     Threshold compares the ROUNDED cosine so engine last-ulp noise
     can't flip membership."""
     from osarchiver_spark.functions.vectors import as_double, cosine

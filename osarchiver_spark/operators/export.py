@@ -61,11 +61,7 @@ def export_training_set(
     assignment computed over the survivors, not the raw corpus), so a
     trainer can assemble fixed-length batches without re-planning."""
     from osarchiver_spark.operators.dedup import minhash_lsh_pairs
-    from osarchiver_spark.queries.dedup import (
-        BANDS,
-        MINHASH_THRESHOLD,
-        NUM_HASHES,
-    )
+    from osarchiver_spark.queries.dedup import MINHASH_THRESHOLD, PRODUCTION_LSH
     from osarchiver_spark.sources.parquet import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -85,9 +81,7 @@ def export_training_set(
     # two modes produce identical membership (pinned in
     # tests/test_similarity.py and observed byte-identical at sf10).
     pairs = minhash_lsh_pairs(
-        docs, "doc_id", "text",
-        shingle_n=3, num_hashes=NUM_HASHES, bands=BANDS, threshold=MINHASH_THRESHOLD,
-        hash_fn="xxhash64",
+        docs, "doc_id", "text", threshold=MINHASH_THRESHOLD, **PRODUCTION_LSH
     ).persist()
     try:
         return _finalize_export(
@@ -130,9 +124,14 @@ def export_training_set_indexed(
     band_key IN / doc_id IN predicates (row-group skipping on the
     band_key-sorted index files), one intra-batch LSH pass sized to
     the DROP, one band append — nothing rescans the standing corpus
-    text except the candidate rows the verify actually needs. Each
-    drop's edges are localCheckpointed before the index append so the
-    lazily-planned probe can never observe files appended after it.
+    text except the candidate rows the verify actually needs. A
+    drop's edges come from ``operators/dedup.py::minhash_drop_edges``,
+    the same step the streaming text maintenance calls; they are
+    materialized before the index append, so the lazily-planned probe
+    can never observe files appended after it. The export does not
+    drive the streaming step itself: that step also lands every raw
+    batch row in a corpus store, a full text copy per drop, where
+    this build probes the source table it already has.
 
     Crash safety: each drop persists its edge set to a sibling pairs
     store (``<index>__pairs``), and its two appends are one
@@ -144,17 +143,10 @@ def export_training_set_indexed(
     Index/pairs/marker dirs are single-use; rebuilds need fresh
     directories.
     """
-    from osarchiver_spark.operators.dedup import (
-        minhash_lsh_incremental_indexed,
-        minhash_lsh_index,
-        minhash_lsh_pairs,
-    )
-    from osarchiver_spark.queries.dedup import (
-        BANDS,
-        MINHASH_THRESHOLD,
-        NUM_HASHES,
-    )
+    from osarchiver_spark.operators.dedup import minhash_drop_edges, minhash_lsh_index
+    from osarchiver_spark.queries.dedup import MINHASH_THRESHOLD, PRODUCTION_LSH
     from osarchiver_spark.sources.parquet import load_table
+    from osarchiver_spark.streaming.text_store import read_pair_graph
 
     if n_batches < 1:
         raise ValueError(f"n_batches must be >= 1: {n_batches}")
@@ -167,12 +159,8 @@ def export_training_set_indexed(
     span = int(hi) - int(lo) + 1
     step = max(1, -(-span // n_batches))  # ceil
     bounds = [int(lo) + i * step for i in range(n_batches)] + [int(hi) + 1]
-    lsh_kw = dict(
-        shingle_n=3, num_hashes=NUM_HASHES, bands=BANDS, hash_fn="xxhash64"
-    )
     pairs_dir = f"{index_dir.rstrip('/')}__pairs"
     marker_dir = f"{index_dir.rstrip('/')}__epochs"
-    edge_cols = ["doc_a", "doc_b"]
 
     for i in range(n_batches):
         batch = docs.filter(
@@ -180,23 +168,14 @@ def export_training_set_indexed(
         )
 
         def stage():
-            intra = minhash_lsh_pairs(
-                batch, "doc_id", "text", threshold=MINHASH_THRESHOLD, **lsh_kw
-            ).select(*edge_cols)
-            if i == 0:
-                return intra.localCheckpoint()
+            index = spark.read.parquet(index_dir) if i else None
             corpus = docs.filter(F.col("doc_id") < bounds[i])
-            cross = minhash_lsh_incremental_indexed(
-                spark.read.parquet(index_dir), corpus, batch, "doc_id", "text",
-                threshold=MINHASH_THRESHOLD, **lsh_kw,
-            ).select(
-                F.col("corpus_id").alias("doc_a"),
-                F.col("new_id").alias("doc_b"),
+            return minhash_drop_edges(
+                batch, index, corpus, MINHASH_THRESHOLD, **PRODUCTION_LSH
             )
-            return cross.unionByName(intra).localCheckpoint()
 
         def append(batch_edges):
-            minhash_lsh_index(batch, "doc_id", "text", **lsh_kw).write.mode(
+            minhash_lsh_index(batch, "doc_id", "text", **PRODUCTION_LSH).write.mode(
                 "overwrite" if i == 0 else "append"
             ).parquet(index_dir)
             batch_edges.write.mode(
@@ -206,12 +185,7 @@ def export_training_set_indexed(
         # called before the next iteration rebinds batch and i
         storage.run_epoch(spark, marker_dir, i, [index_dir, pairs_dir], stage, append)
 
-    # an edge-free corpus writes only _SUCCESS markers; hand back a
-    # typed empty graph for that case only (streaming/text_store.py)
-    if storage.list_files(spark, pairs_dir):
-        pairs = spark.read.parquet(pairs_dir)
-    else:
-        pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    pairs = read_pair_graph(spark, pairs_dir)
     return _finalize_export(spark, docs, pairs, out_dir, compression, pack_train)
 
 

@@ -27,6 +27,11 @@ NUM_HASHES = 12
 BANDS = 4
 ROWS_PER_BAND = NUM_HASHES // BANDS
 MINHASH_THRESHOLD = 0.5
+# The production MinHash parameterization (xxhash64 signatures) shared
+# by the training-set exports and the streaming text maintenance: one
+# frozen set, since the persisted band indexes are only valid under
+# the parameters that built them. Unpack it; never mutate it.
+PRODUCTION_LSH = dict(shingle_n=3, num_hashes=NUM_HASHES, bands=BANDS, hash_fn="xxhash64")
 NGRAM_THRESHOLD = 0.3
 EMBED_THRESHOLD = 0.45
 NGRAM_CAP = 1000  # deterministic bound: exact all-pairs is the verification
@@ -72,9 +77,7 @@ def q_dedup_minhash_xxhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash family. See SCALE.md 'Known scale caveats'."""
     docs = load_table(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
-        docs, "doc_id", "text",
-        shingle_n=3, num_hashes=NUM_HASHES, bands=BANDS, threshold=MINHASH_THRESHOLD,
-        hash_fn="xxhash64",
+        docs, "doc_id", "text", threshold=MINHASH_THRESHOLD, **PRODUCTION_LSH
     )
 
 
@@ -620,7 +623,7 @@ _SQL_BANDS = (
 
 def _simhash64_half_sql(lo_pos: int) -> str:
     """One 32-bit half of the 64-bit simhash, mirroring
-    functions/text.py::token_simhash_mask64 + simhash64_vote_columns
+    functions/text.py::token_simhash_mask64 + simhash_vote_columns
     up to a FIXED bit permutation (oracle position (d-1)*4+b maps md5
     hex digit d's nibble-bit b; Spark packs the same 16 digits
     big-endian into a bigint). A fixed permutation of sketch bit
@@ -641,7 +644,9 @@ def _simhash64_half_sql(lo_pos: int) -> str:
 
 
 def _simhash_sql() -> str:
-    """16-bit simhash mirroring functions/text.py::simhash16."""
+    """16-bit simhash mirroring the vote layout of
+    functions/text.py::SIMHASH16_BIT_ORDER (sketch bit p from md5 hex
+    digit p // 4, bit p % 4)."""
     bit_terms = []
     for pos in range(16):
         d, b = pos // 4, pos % 4

@@ -4,14 +4,20 @@ the text sibling of streaming/vector_store.py.
 
 Each micro-batch of arriving documents:
 
-    → intra-batch MinHash-LSH pairs       (the drop's own near-dups)
-    → cross probe vs the STANDING band index
-      (minhash_lsh_incremental_indexed: banded batch broadcast,
-       pushed band_key IN predicate — the corpus text is touched only
-       for the candidate rows the exact-Jaccard verify needs)
+    → its edges, from the per-drop step the indexed export also calls
+      (operators/dedup.py::minhash_drop_edges):
+        intra-batch MinHash-LSH pairs     (the drop's own near-dups)
+        ∪ cross probe vs the STANDING band index
+          (minhash_lsh_incremental_indexed: banded batch broadcast,
+           pushed band_key IN predicate — the corpus text is touched
+           only for the candidate rows the exact-Jaccard verify needs)
     → append the batch's bands to the index, its raw rows to the
       corpus landing store, and its edges to the accumulated pair
-      graph
+      graph (read back by ``read_pair_graph``)
+
+The landing store is what sets this loop apart from the export's: a
+stream has no source table to re-read, so the probe's corpus text is
+the store of every earlier batch.
 
 With ingest-ordered doc ids, the accumulated {intra} ∪ {cross} edge
 set equals the one-shot ``minhash_lsh_pairs`` graph row-for-row —
@@ -36,7 +42,6 @@ repair-then-restart is fingerprint-identical to a never-crashed run
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osarchiver_spark import storage
@@ -65,44 +70,26 @@ def make_text_maintenance_batch_fn(
     every sketch call (one frozen parameterization — changing it
     invalidates the standing index, exactly like retraining an IVF
     model)."""
-    from osarchiver_spark.operators.dedup import (
-        minhash_lsh_incremental_indexed,
-        minhash_lsh_index,
-        minhash_lsh_pairs,
-    )
+    from osarchiver_spark.operators.dedup import minhash_drop_edges, minhash_lsh_index
 
     marker_dir = f"{pairs_dir.rstrip('/')}__epochs"
-    edge_cols = ["doc_a", "doc_b"]
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         def stage():
             if batch_df.isEmpty():
                 return None
             batch = batch_df.localCheckpoint()
-            edges = minhash_lsh_pairs(
-                batch, "doc_id", "text", threshold=threshold, **lsh_kw
-            ).select(*edge_cols)
+            index = corpus = None
             if storage.exists(spark, index_dir):
                 # declared layouts: re-inferring the GROWING index/corpus
                 # dirs' footers every micro-batch is pure latency
                 # (minhash_lsh_index's fixed columns, long doc ids per
                 # DOCUMENTS_RAW_SCHEMA)
-                standing = spark.read.schema(
+                index = spark.read.schema(
                     "corpus_id bigint, band_idx int, band_key string"
                 ).parquet(index_dir)
                 corpus = spark.read.schema(DOCUMENTS_RAW_SCHEMA).parquet(corpus_dir)
-                cross = minhash_lsh_incremental_indexed(
-                    standing, corpus, batch, "doc_id", "text",
-                    threshold=threshold, **lsh_kw,
-                ).select(
-                    F.col("corpus_id").alias("doc_a"),
-                    F.col("new_id").alias("doc_b"),
-                )
-                edges = edges.unionByName(cross)
-            # materialize the edges BEFORE appending this batch's bands
-            # (the lazily-planned probe must never observe files
-            # appended after it)
-            return batch, edges.localCheckpoint()
+            return batch, minhash_drop_edges(batch, index, corpus, threshold, **lsh_kw)
 
         def append(staged) -> None:
             batch, edges = staged
@@ -140,17 +127,10 @@ def run_streaming_text_maintenance(
     (the index/corpus/pairs/marker/checkpoint dirs form one unit); a
     torn epoch refuses the restart until
     ``storage.repair_torn_epochs`` has rolled it back."""
-    from osarchiver_spark.queries.dedup import (
-        BANDS,
-        MINHASH_THRESHOLD,
-        NUM_HASHES,
-    )
+    from osarchiver_spark.queries.dedup import MINHASH_THRESHOLD, PRODUCTION_LSH
     from osarchiver_spark.streaming.pipeline import fixture_stream
 
-    lsh_kw = dict(
-        shingle_n=3, num_hashes=NUM_HASHES, bands=BANDS, hash_fn="xxhash64"
-    )
-    lsh_kw.update(lsh_overrides)
+    lsh_kw = {**PRODUCTION_LSH, **lsh_overrides}
     if threshold is None:
         threshold = MINHASH_THRESHOLD
 
@@ -169,9 +149,14 @@ def run_streaming_text_maintenance(
         q.processAllAvailable()
     finally:
         q.stop()
-    # an edge-free corpus writes only _SUCCESS markers (0-row parquet
-    # writes produce no part files), which read as "unable to infer
-    # schema": hand back a typed empty graph for THAT case only
+    return read_pair_graph(spark, pairs_dir)
+
+
+def read_pair_graph(spark: SparkSession, pairs_dir: str) -> DataFrame:
+    """The accumulated pair graph (doc_a, doc_b) under ``pairs_dir``.
+    An edge-free corpus writes only _SUCCESS markers (0-row parquet
+    writes produce no part files), which read as "unable to infer
+    schema": hand back a typed empty graph for THAT case only."""
     if not storage.list_files(spark, pairs_dir):
         return spark.createDataFrame([], "doc_a long, doc_b long")
     return spark.read.parquet(pairs_dir)
