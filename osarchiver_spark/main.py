@@ -15,6 +15,7 @@ import logging
 import os
 import sys
 
+from osarchiver_spark import storage
 from osarchiver_spark.operators.archive import Archiver
 from osarchiver_spark.plans.config import load_config
 from osarchiver_spark.session import get_spark
@@ -110,7 +111,7 @@ def run_query(name: str, sf_dir: str, out: str | None, limit: int) -> int:
     df = registry[name](spark, sf_dir)
     if out:
         df.write.mode("overwrite").parquet(out)
-        logging.info("wrote %s rows to %s", spark.read.parquet(out).count(), out)
+        logging.info("wrote %s rows to %s", storage.read_parquet(spark, out).count(), out)
     else:
         df.show(limit, truncate=False)
     return 0

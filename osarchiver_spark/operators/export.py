@@ -168,7 +168,7 @@ def export_training_set_indexed(
         )
 
         def stage():
-            index = spark.read.parquet(index_dir) if i else None
+            index = storage.read_parquet(spark, index_dir) if i else None
             corpus = docs.filter(F.col("doc_id") < bounds[i])
             return minhash_drop_edges(
                 batch, index, corpus, MINHASH_THRESHOLD, **PRODUCTION_LSH
@@ -263,7 +263,7 @@ def _finalize_export(
             F.count("*").alias("n_docs"), F.sum("n_tokens").alias("n_tokens")
         )
         manifest.write.mode("overwrite").parquet(f"{out_dir.rstrip('/')}/manifest")
-        return spark.read.parquet(f"{out_dir.rstrip('/')}/manifest")
+        return storage.read_parquet(spark, f"{out_dir.rstrip('/')}/manifest")
     finally:
         tagged.unpersist()
 
@@ -477,9 +477,9 @@ def export_vector_store_indexed(
 def _vector_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     """Shared tail: (cid, n_vectors) of the serving store, written to
     <out>/manifest and returned."""
-    store = spark.read.parquet(f"{out_dir.rstrip('/')}/store").withColumn(
+    store = storage.read_parquet(spark, f"{out_dir.rstrip('/')}/store").withColumn(
         "cid", F.col("cid").cast("int")
     )
     manifest = store.groupBy("cid").agg(F.count("*").alias("n_vectors"))
     manifest.write.mode("overwrite").parquet(f"{out_dir.rstrip('/')}/manifest")
-    return spark.read.parquet(f"{out_dir.rstrip('/')}/manifest")
+    return storage.read_parquet(spark, f"{out_dir.rstrip('/')}/manifest")

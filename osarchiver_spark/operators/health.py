@@ -81,7 +81,7 @@ def index_health(
     stores (only ``cid`` is read from the store)."""
     from osarchiver_spark.operators.ivf import _probe_pandas, query_frame
 
-    store = spark.read.parquet(store_dir).withColumn(
+    store = storage.read_parquet(spark, store_dir).withColumn(
         "cid", F.col("cid").cast("int")
     )
     occ = store.groupBy("cid").agg(F.count("*").alias("n"))
@@ -208,7 +208,7 @@ def maintain_store(
     from osarchiver_spark.operators.maintenance import compact_partitioned_store
 
     if queries is None:
-        store = spark.read.parquet(store_dir)
+        store = storage.read_parquet(spark, store_dir)
         if vec_col not in store.columns:
             raise ValueError(
                 f"store {store_dir} has no '{vec_col}' column (PQ-code "

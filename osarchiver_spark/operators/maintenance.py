@@ -38,7 +38,7 @@ def compact_parquet_dir(
     n_out = max(1, math.ceil(total / target_bytes))
     if before <= n_out:
         return before, before  # already compact enough
-    df = spark.read.parquet(path)
+    df = storage.read_parquet(spark, path)
     storage.swap_in(
         spark, path,
         lambda tmp: df.repartition(n_out).write.mode("overwrite").parquet(tmp),
@@ -127,7 +127,7 @@ def compact_partitioned_store(
     ):
         return before, before  # every partition already compact
 
-    df = spark.read.parquet(path)
+    df = storage.read_parquet(spark, path)
     data_cols = [c for c in df.columns if c != partition_col]
     ordered = sorted(n_files.items(), key=lambda kv: (kv[0] is None, kv[0] or ""))
     offsets: dict[str | None, int] = {}

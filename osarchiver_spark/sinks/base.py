@@ -140,7 +140,9 @@ class ParquetArchiveSink(Sink):
     pk-dedup so re-runs are idempotent (the Spark rewrite of
     ``ON DUPLICATE KEY UPDATE pk=pk``), plus drift check against the
     existing archive schema before any write (reference raises
-    OSArchiverNotEqualTableError on drift)."""
+    OSArchiverNotEqualTableError on drift). That schema comes from one
+    footer read on the driver (``storage.read_parquet``), not from a
+    Spark inference job."""
 
     def __init__(
         self,
@@ -173,7 +175,7 @@ class ParquetArchiveSink(Sink):
         existing = None
         if storage.exists(spark, path):
             try:
-                existing = spark.read.parquet(path)
+                existing = storage.read_parquet(spark, path)
             except Exception:  # noqa: BLE001
                 if storage.list_files(spark, path):
                     raise
@@ -204,12 +206,13 @@ class ParquetArchiveSink(Sink):
             df.write.mode(mode).parquet(path)
 
     def read(self, spark, table: str) -> DataFrame:
-        reader = spark.read
+        path = self._path(table)
         if self.allow_additive:
             # old files lack later-added columns; mergeSchema unions
             # the file schemas and backfills them as null
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(self._path(table))
+            df = spark.read.option("mergeSchema", "true").parquet(path)
+        else:
+            df = storage.read_parquet(spark, path)
         return df.drop("_archive_dt") if "_archive_dt" in df.columns else df
 
 

@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from osarchiver_spark import storage
+
 TABLES = [
     "region",
     "nation",
@@ -52,24 +54,23 @@ def ensure_session_defaults(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-# Session-scoped schema catalog: parquet schema INFERENCE reads file
-# footers through a driver-side job on every `spark.read.parquet`
-# call, which at ~2 scans per registry query was costing ~0.2 s per
-# load_table call locally (measured r11 optimization round: a
-# 20-iteration A/B of inferred vs explicit-schema reads, 4.57 s vs
-# 1.11 s) — and at scale re-reads footers of every file per query.
+# Session-scoped schema catalog. Without a schema, every
+# `spark.read.parquet` call infers one in a one-task Spark job (~0.1 s
+# per table on a 4-core host); `storage.parquet_schema` reads the
+# same footer on the driver instead, and this cache saves even that
+# one driver-side footer read on every later load of the table.
 # Real catalogs (metastore, Iceberg/Delta manifests) exist precisely
 # so readers don't re-infer; this dict is that catalog for the
 # fixture tables. Keyed by (applicationId, path, mtime): a new
-# session, a different directory, or a rewritten table re-infers.
-# Only METADATA is cached — every query still scans the parquet data.
+# session, a different directory, or a rewritten table re-reads the
+# footer. Only METADATA is cached — every query still scans the data.
 _SCHEMA_CACHE: dict[tuple[str, str, int], object] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan; filters/projections push down via Catalyst.
     Schema comes from the session-scoped catalog cache above (first
-    read infers and records it)."""
+    read takes it from a footer and records it)."""
     ensure_session_defaults(spark)
     path = table_path(sf_dir, name)
     try:
@@ -81,7 +82,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, os.path.abspath(path), mtime)
     schema = _SCHEMA_CACHE.get(key) if mtime >= 0 else None
     if schema is None:
-        df = spark.read.parquet(path)
+        df = storage.read_parquet(spark, path)
         if mtime >= 0:
             _SCHEMA_CACHE[key] = df.schema
     else:

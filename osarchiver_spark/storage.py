@@ -14,6 +14,11 @@ a NEW dated prefix and a catalog pointer flip.
 per-drop appends span several directories: BEGIN/DONE markers make a
 replayed epoch a no-op, a torn one a refusal, and
 ``repair_torn_epochs`` rolls the torn one back.
+
+``parquet_schema`` learns a parquet directory's schema the way Spark's
+mergeSchema-off inference does, from the footer of its first data
+file, but reads that footer on the driver instead of in a one-task
+Spark job; ``read_parquet`` is the package's schema'd parquet reader.
 """
 
 from __future__ import annotations
@@ -21,7 +26,8 @@ from __future__ import annotations
 import json
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 # (SparkContext, its Path class, its Hadoop conf): a new context
 # re-resolves, so a stopped one's JVM handles are never reused
@@ -35,6 +41,31 @@ def _jvm(spark: SparkSession):
     handles = _jvm_handles
     if handles[0] is not sc:
         handles = _jvm_handles = (sc, sc._jvm.org.apache.hadoop.fs.Path, sc._jsc.hadoopConfiguration())
+    return handles[1:]
+
+
+# (SparkContext, Spark's footer reader, HadoopInputFile, Footer, the
+# parquet-to-Spark schema converter, ParquetFileFormat, the footer
+# filter that skips row groups), re-resolved for a new context
+_parquet_handles: tuple = (None,) * 7
+
+
+def _parquet_jvm(spark: SparkSession):
+    global _parquet_handles
+    sc = spark.sparkContext
+    handles = _parquet_handles
+    if handles[0] is not sc:
+        jvm = sc._jvm
+        pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+        handles = _parquet_handles = (
+            sc,
+            pq.ParquetFooterReader,
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile,
+            jvm.org.apache.parquet.hadoop.Footer,
+            pq.ParquetToSparkSchemaConverter,
+            pq.ParquetFileFormat,
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        )
     return handles[1:]
 
 
@@ -72,6 +103,58 @@ def list_files(
             if not (data_only and p.rsplit("/", 1)[-1].startswith(("_", "."))):
                 out.append((p, st.getLen()))
     return out
+
+
+def _first_data_file(fs, hpath):
+    """Status of the file Spark's inference takes a schema from: the
+    first data file below ``hpath`` in full-path order (a directory
+    sorts as ``name/``), or ``None``. Hidden, as in Spark's file index:
+    dot files, ``._COPYING_`` files, and ``_`` names other than
+    ``k=v`` partition directories."""
+    listed = []
+    for st in fs.listStatus(hpath):
+        name = st.getPath().getName()
+        if not ((name.startswith("_") and "=" not in name) or name.startswith(".") or name.endswith("._COPYING_")):
+            is_dir = st.isDirectory()
+            listed.append((name + "/" if is_dir else name, is_dir, st))
+    for _, is_dir, st in sorted(listed, key=lambda e: e[0]):
+        found = _first_data_file(fs, st.getPath()) if is_dir else st
+        if found is not None:
+            return found
+    return None
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The data schema Spark's mergeSchema-off inference gives ``path``,
+    read from one footer on the driver: no Spark job. Partition columns
+    are left to Spark's directory discovery. ``None`` when Spark must
+    decide itself: no data file, a session that merges schemas, or a
+    streaming sink's output, whose ``_spark_metadata`` log names the
+    files Spark reads. A corrupt footer raises."""
+    sqlconf = spark._jsparkSession.sessionState().conf()
+    if sqlconf.isParquetSchemaMergingEnabled():
+        return None
+    fs, hpath, log = resolve(spark, path, path.rstrip("/") + "/_spark_metadata")
+    status = _first_data_file(fs, hpath) if fs.exists(hpath) and not fs.exists(log) else None
+    if status is None:
+        return None
+    footer_reader, input_file, footer, converter, parquet_format, skip_row_groups = _parquet_jvm(spark)
+    _, conf = _jvm(spark)
+    metadata = footer_reader.readFooter(input_file.fromStatus(status, conf), skip_row_groups)
+    # Spark's own footer-to-schema step: the row-metadata JSON Spark
+    # writes, else the session's parquet-to-Spark type conversion
+    schema = parquet_format.readSchemaFromFooter(footer(status.getPath(), metadata), converter(sqlconf))
+    return _parse_datatype_json_string(schema.json())
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema from
+    ``parquet_schema``; when that is ``None``, Spark infers it (or
+    raises its own error)."""
+    schema = parquet_schema(spark, path)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def children(spark: SparkSession, path: str) -> list[str]:

@@ -125,7 +125,7 @@ def run_streaming_cdc_upsert(
 
     def apply_batch(batch_df: DataFrame, _epoch_id: int) -> None:
         sp = batch_df.sparkSession
-        state = sp.read.parquet(target_dir) if storage.exists(sp, target_dir) else None
+        state = storage.read_parquet(sp, target_dir) if storage.exists(sp, target_dir) else None
         new_state = reconcile_cdc_state(state, batch_df, key_col, seq_col)
         # state feeds its own rewrite, so it cannot overwrite in place:
         # write the new state beside it once, then swap it in
@@ -145,6 +145,6 @@ def run_streaming_cdc_upsert(
         q.stop()
     # live view: tombstones stay on disk (late-arrival guard), reads
     # filter them out
-    return spark.read.parquet(target_dir).filter(~F.col("is_deleted")).drop(
+    return storage.read_parquet(spark, target_dir).filter(~F.col("is_deleted")).drop(
         "is_deleted"
     )

@@ -120,7 +120,7 @@ def drain_stream_to_parquet(
             q.stop()
     if not storage.exists(spark, out_dir):  # stream produced no batches
         return spark.createDataFrame([], df.schema)
-    return spark.read.parquet(out_dir)
+    return storage.read_parquet(spark, out_dir)
 
 # Explicit schema: streaming sources never infer. ts is timestamp[us]
 # (naive) in the fixture parquet; requesting TimestampType reads it as
@@ -471,7 +471,7 @@ def incremental_stream_rollup(
             .start()
         )
         q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
+    return storage.read_parquet(spark, out_dir).select(
         F.col("window.start").alias("window_start"), "event_type", "n", "sum_value"
     )
 

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from osarchiver_spark import storage
 from osarchiver_spark.queries.events_analytics import KMV_K  # one k, both modes
 
 OUT_SCHEMA = T.StructType(
@@ -102,7 +103,7 @@ def incremental_stream_kmv(
             .start()
         )
         q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return storage.read_parquet(spark, out_dir)
 
 
 def streaming_kmv_registry(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -159,4 +159,4 @@ def read_pair_graph(spark: SparkSession, pairs_dir: str) -> DataFrame:
     schema": hand back a typed empty graph for THAT case only."""
     if not storage.list_files(spark, pairs_dir):
         return spark.createDataFrame([], "doc_a long, doc_b long")
-    return spark.read.parquet(pairs_dir)
+    return storage.read_parquet(spark, pairs_dir)

@@ -220,7 +220,7 @@ def run_streaming_vector_maintenance(
             index_dir=index_dir, **maintenance_policy,
         )
 
-    store = spark.read.parquet(store_dir).withColumn(
+    store = storage.read_parquet(spark, store_dir).withColumn(
         "cid", F.col("cid").cast("int")
     )
     return store.groupBy("cid").agg(F.count("*").alias("n_vectors"))

@@ -18,6 +18,7 @@ from osarchiver_spark import storage
 from osarchiver_spark.operators.ivf import kmeans_fit
 from osarchiver_spark.sources.parquet import load_table
 from osarchiver_spark.streaming.vector_store import run_streaming_vector_maintenance
+from tests.test_ivf import _jobs_in_group
 
 THRESHOLD = 0.45  # fixture embeddings are near-uniform (max cos ~0.5)
 
@@ -229,3 +230,160 @@ def test_staged_publish_crash_reruns_to_the_uncrashed_store(spark, tmp_path, mon
     _staged_store_build(standing, drop, idx)
     assert rows(idx) == rows(clean) and len(rows(idx)) == 42
     assert not os.path.exists(idx + "__stage")
+
+
+# -- driver-side parquet schema ------------------------------------------
+
+
+def _matches_inference(spark, path, partition_cols=()):
+    """``read_parquet`` gives the frame of Spark's inference, and the
+    footer schema is its data part: the partition columns come from
+    directory discovery, and the relation makes every field nullable."""
+    inferred = spark.read.parquet(path)
+    read = storage.read_parquet(spark, path)
+    assert read.schema == inferred.schema
+    assert sorted(read.collect()) == sorted(inferred.collect())
+    footer = storage.parquet_schema(spark, path)
+    # simpleString leaves nullability out, also inside arrays
+    data = [(f.name, f.dataType.simpleString()) for f in inferred.schema.fields if f.name not in partition_cols]
+    assert [(f.name, f.dataType.simpleString()) for f in footer.fields] == data
+    return footer
+
+
+def test_parquet_schema_equals_inference_on_every_fixture_table(spark, sf_medium):
+    """The fixtures are written by pyarrow, so the schema comes through
+    Spark's parquet-to-Spark converter, timestamps and all."""
+    from osarchiver_spark.sources.parquet import TABLES, ensure_session_defaults, table_path
+
+    ensure_session_defaults(spark)
+    for name in TABLES:
+        path = table_path(sf_medium, name)
+        assert storage.parquet_schema(spark, path) == spark.read.parquet(path).schema, name
+
+
+def _frame(spark, n=40):
+    return spark.range(n).select(
+        "id",
+        (F.col("id") % 3).cast("string").alias("kind"),
+        F.timestamp_seconds(F.lit(946684800) + F.col("id") * 86400 * 9).alias("deleted_at"),
+        (F.col("id") / 7).cast("decimal(12,2)").alias("price"),
+        F.array(F.col("id"), F.col("id") * 2).alias("pair"),
+    )
+
+
+def test_parquet_schema_of_spark_written_directories(spark, tmp_path):
+    """Spark's own files carry its row-metadata JSON: plain, month- and
+    string-partitioned directories read back exactly as inferred."""
+    df = _frame(spark)
+    plain = str(tmp_path / "plain")
+    df.repartition(3).write.parquet(plain)
+    footer = _matches_inference(spark, plain)
+    assert not footer["id"].nullable  # the writer's nullability survives in the footer
+
+    months = str(tmp_path / "months")
+    df.withColumn("_archive_dt", F.trunc("deleted_at", "month")).write.partitionBy("_archive_dt").parquet(months)
+    _matches_inference(spark, months, ["_archive_dt"])
+
+    kinds = str(tmp_path / "kinds")
+    df.write.partitionBy("kind").parquet(kinds)
+    _matches_inference(spark, kinds, ["kind"])
+
+
+def test_parquet_schema_reads_the_file_inference_reads(spark, tmp_path):
+    """Without mergeSchema Spark takes the first data file in path
+    order; an additively grown archive whose first month holds the
+    narrower files must keep that narrower schema."""
+    path = str(tmp_path / "arch")
+    narrow = spark.createDataFrame([(1, "a")], "k long, v string")
+    wide = spark.createDataFrame([(2, "b", 3.0)], "k long, v string, extra double")
+    wide.write.parquet(f"{path}/_archive_dt=2020-02-01")
+    narrow.write.parquet(f"{path}/_archive_dt=2020-01-01")
+    footer = _matches_inference(spark, path, ["_archive_dt"])
+    assert footer.fieldNames() == ["k", "v"]
+
+
+def test_parquet_schema_of_nanosecond_timestamps_is_long(spark, tmp_path):
+    """A pyarrow ``timestamp[ns]`` column reads as a long under
+    ``nanosAsLong``, the layout of older fixture builds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType
+
+    from osarchiver_spark.sources.parquet import ensure_session_defaults
+
+    ensure_session_defaults(spark)
+    path = str(tmp_path / "nanos.parquet")
+    ts = pa.array([1_600_000_000_123_456_789, None], pa.timestamp("ns"))
+    pq.write_table(pa.table({"id": [1, 2], "ts": ts}), path)
+    schema = storage.parquet_schema(spark, path)
+    assert schema == spark.read.parquet(path).schema
+    assert schema["ts"].dataType == LongType()
+
+
+def test_parquet_schema_without_data_defers_to_spark(spark, tmp_path):
+    """No data file (a missing path, a glob, or the markers an empty
+    partitioned write leaves), a merging session, or a streaming sink's
+    log: ``None``, and ``read_parquet`` raises Spark's own error where
+    Spark would."""
+    from pyspark.errors import AnalysisException
+
+    markers = str(tmp_path / "markers")
+    spark.createDataFrame([], "id long, k string").write.partitionBy("k").parquet(markers)
+    assert os.listdir(markers) and storage.list_files(spark, markers) == []
+    for path in (markers, str(tmp_path / "missing")):
+        assert storage.parquet_schema(spark, path) is None
+        with pytest.raises(AnalysisException):
+            storage.read_parquet(spark, path)
+
+    data = str(tmp_path / "data")
+    spark.range(3).write.parquet(data)
+    assert storage.parquet_schema(spark, data + "/*") is None
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        assert storage.parquet_schema(spark, data) is None
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+    assert storage.parquet_schema(spark, data) is not None
+    os.mkdir(f"{data}/_spark_metadata")
+    assert storage.parquet_schema(spark, data) is None
+
+
+def test_parquet_schema_of_a_corrupt_footer_raises(spark, tmp_path):
+    from py4j.protocol import Py4JJavaError
+
+    path = tmp_path / "bad"
+    path.mkdir()
+    (path / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        storage.parquet_schema(spark, str(path))
+
+
+def test_footer_schema_reads_start_no_spark_job(spark, sf_medium, tmp_path):
+    """Inference starts a one-task job per read; ``read_parquet`` and a
+    cold ``load_table`` start none."""
+    path = str(tmp_path / "t")
+    _frame(spark).write.parquet(path)
+    assert _jobs_in_group(spark, lambda: spark.read.parquet(path)) == 1  # the counter sees inference
+    assert _jobs_in_group(spark, lambda: storage.read_parquet(spark, path)) == 0
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(f"{sf_medium}/orders.parquet", sf / "orders.parquet")
+    assert _jobs_in_group(spark, lambda: load_table(spark, str(sf), "orders")) == 0
+
+
+def test_parquet_reads_learn_their_schema_in_storage_only():
+    """Every package read of a parquet directory takes its schema from
+    ``storage.read_parquet`` (one footer, no Spark job); only storage.py
+    may call Spark's inferring reader."""
+    pattern = re.compile(r"\.read\.parquet\(")
+    home = Path(storage.__file__)
+    offenders = [
+        f"{path.relative_to(home.parent)}:{n}: {line.strip()}"
+        for path in sorted(home.parent.rglob("*.py"))
+        if path != home
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not offenders, offenders
+    assert pattern.search(home.read_text())  # the scan sees the reader
