@@ -19,7 +19,8 @@ not result serialization. A query's time is its best rep; with the
 default one rep that is its one in-session run. The layer record of
 each rep (jobs, stages, tasks, executor run/CPU time, GC, input,
 shuffle and spill bytes, driver-only time) is read from Spark's status
-store after the timer stops.
+store after the timer stops, with the count of classes Spark's code
+generator compiled in the timed region.
 """
 
 from __future__ import annotations
@@ -457,6 +458,7 @@ def run(spark, names, sf_dir, reps=1, plans_dir=None) -> dict[str, list[dict]]:
     from perfbench.probe import SparkObserver, union_length
 
     observer = SparkObserver(spark)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     # drain the listener bus so jobs run before this call (the warm-up)
     # are marked seen and never counted as a query's ungrouped jobs
     observer.jobs(None)
@@ -469,6 +471,7 @@ def run(spark, names, sf_dir, reps=1, plans_dir=None) -> dict[str, list[dict]]:
             group = f"bench:{name}:{rep}"
             b0 = time.perf_counter()
             observer.begin(group)
+            compiles0 = compiles.getCount()
             begin_s = time.perf_counter() - b0
             start = time.time()
             # time plan construction + execution: streaming queries (and
@@ -478,11 +481,13 @@ def run(spark, names, sf_dir, reps=1, plans_dir=None) -> dict[str, list[dict]]:
             df.write.format("noop").mode("overwrite").save()
             wall = round(time.perf_counter() - t0, 3)
             t1 = time.perf_counter()
+            compiled = compiles.getCount() - compiles0
             rec = observer.record(group)
             stages = [(s, e) for _, _, s, e in rec.pop("stage_spans") if e is not None]
             del rec["job_spans"]
             rec["driver_only_s"] = wall - union_length(stages, start, start + wall)
             rec["wall_s"] = wall
+            rec["codegen_compiles"] = compiled
             rec["record_s"] = begin_s + time.perf_counter() - t1
             layers[name].append(
                 {k: round(v, 3) if k.endswith("_s") else int(v) for k, v in rec.items()}

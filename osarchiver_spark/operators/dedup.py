@@ -71,11 +71,14 @@ def _with_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFra
     # even when the source is a single small parquet split. (At real
     # scale the scan itself provides the splits and this repartition
     # is a cheap narrow-ish shuffle of raw text.)
+    # Docs without shingles are dropped by exploding a 0-or-1-element
+    # array, not by a Filter: the optimizer would push a Filter on the
+    # shingles below the repartition and tokenize every doc twice.
     par = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.repartition(par)
-        .select(F.col(id_col).alias("doc_id"), word_shingles(F.col(text_col), n).alias("shingles"))
-        .filter(F.size("shingles") > 0)
+    shingles = F.array(word_shingles(F.col(text_col), n))
+    return df.repartition(par).select(
+        F.col(id_col).alias("doc_id"),
+        F.explode(F.filter(shingles, lambda s: F.size(s) > 0)).alias("shingles"),
     )
 
 

@@ -26,6 +26,18 @@ def get_spark(app_name: str = "osarchiver_spark", shuffle_partitions: int | None
     promotion, skew splitting, partition coalescing) — on a real
     cluster this is what keeps a 100 TB shuffle from being dominated
     by a skewed key or thousands of tiny reducers.
+
+    Spark caches generated classes by source text in one JVM-wide LRU
+    (``spark.sql.codegen.cache.maxEntries``, default 100). The engine
+    runs the same plans again and again, and its working sets exceed
+    100: the 12 ``analytics_mix`` perfbench ops need ~230 classes per
+    pass and the sf0.01 headline suite 1,576 (measured, 4-core host).
+    At 100 every pass recompiles them all (~10 ms of Janino per class
+    on the driver's critical path), so the cap is 4096, over twice the
+    suite's set; holding the suite's classes costs ~10 MB of metaspace.
+    The cap is a static conf fixed by the first session in the JVM: a
+    session the caller built itself (``__spark_entry__``) keeps
+    Spark's default.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if shuffle_partitions is None:
@@ -42,6 +54,7 @@ def get_spark(app_name: str = "osarchiver_spark", shuffle_partitions: int | None
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # Older fixture builds store TIMESTAMP(NANOS); Spark has no
         # nanos type — read as long, converted to micros in the catalog
         # (sources/parquet.py) to match DuckDB's truncation.

@@ -19,8 +19,11 @@ def test_run_returns_a_record_per_rep_and_writes_plans(spark, sf_small, tmp_path
             assert rec["jobs"] >= 1 and rec["stages"] >= 1
             assert rec["unattributed_jobs"] == 0, (name, rec)
             assert rec["record_s"] >= 0
+            assert rec["codegen_compiles"] >= 0
         assert (tmp_path / f"{name}.txt").read_text().strip()
     assert sorted(p.name for p in tmp_path.iterdir()) == sorted(f"{n}.txt" for n in names)
+    # rep 1 of a deterministic query reuses every class rep 0 compiled
+    assert layers["retention_filter"][1]["codegen_compiles"] == 0, layers["retention_filter"]
 
 
 def test_unknown_name_raises_before_any_spark_job(spark, sf_small):

@@ -1,8 +1,9 @@
 """tools/driver_window_sim.py rejects a bad command line before it
-starts a Spark session."""
+starts a Spark session, and its --timeout cancels a threaded chain."""
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
@@ -30,3 +31,17 @@ def test_unknown_flag_exits_two():
     assert out.returncode == 2, (out.stdout, out.stderr)
     assert "unrecognized arguments: --timout" in out.stderr
     assert out.stdout == ""
+
+
+def test_timeout_cancels_a_threaded_chain(sf_small, tmp_path):
+    """knn_ivf_indexed builds its index through session.concurrently;
+    a timeout that lands inside the chain is recorded as ``timeout``
+    and leaves no job of the query's group running."""
+    log = tmp_path / "sim.jsonl"
+    out = subprocess.run(
+        [sys.executable, TOOL, sf_small, "--only", "knn_ivf_indexed", "--timeout", "1", "--log", str(log)],
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 1, (out.stdout, out.stderr[-2000:])
+    rows = [json.loads(line) for line in log.read_text().splitlines()]
+    assert [(r["name"], r["status"], r["active_jobs"]) for r in rows] == [("knn_ivf_indexed", "timeout", 0)], rows

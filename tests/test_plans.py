@@ -602,6 +602,19 @@ def test_indexed_incremental_verify_fallback_plan(spark, tmp_path):
     assert "CartesianProduct" not in plan
 
 
+def test_shingling_tokenizes_each_doc_once(spark):
+    """_with_shingles (behind dedup_minhash_lsh, minhash_lsh_index and
+    both incremental verifies) builds each doc's 3-gram shingles once:
+    one 3-gram pass is 2 zip_with. A Filter on the shingles would be
+    pushed below the repartition and re-tokenize (4 zip_with)."""
+    from osarchiver_spark.operators.dedup import _with_shingles
+    from osarchiver_spark.sources.parquet import load_table
+
+    docs = load_table(spark, SF, "documents")
+    plan = _with_shingles(docs, "doc_id", "text", 3)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("zip_with(") == 2, plan
+
+
 def test_ivf_indexed_probe_prunes_partitions(spark):
     """knn_ivf_indexed probes a cid-partitioned inverted file: the
     index scan must carry the probed cid set as a PARTITION filter

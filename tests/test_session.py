@@ -1,10 +1,14 @@
 """session.concurrently: the one driver-thread overlap. Side calls
 inherit the caller's job group, so their jobs are attributed to the
-caller and one cancelJobGroup reaches them."""
+caller and one cancelJobGroup reaches them. And get_spark's codegen
+cache holds a repeated plan set."""
 
 from __future__ import annotations
 
+import ast
 import re
+import subprocess
+import sys
 import threading
 import time
 from pathlib import Path
@@ -161,3 +165,52 @@ def test_cancel_job_group_stops_a_side_call(spark):
     bus.waitUntilEmpty()
     assert not active_in_group()
     assert not set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+
+
+
+_TWO_PASSES = """
+import sys
+from osarchiver_spark.queries import all_queries
+from osarchiver_spark.session import get_spark
+
+spark = get_spark("codegen-cache-test")
+registry = all_queries()
+compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+counts = []
+for _ in range(2):
+    before = compiles.getCount()
+    for name in sys.argv[2].split(","):
+        registry[name](spark, sys.argv[1]).write.format("noop").mode("overwrite").save()
+        spark.catalog.clearCache()
+    counts.append(compiles.getCount() - before)
+print(counts)
+spark.stop()
+"""
+
+
+def test_a_repeated_plan_set_compiles_no_class(sf_small):
+    """get_spark sizes Spark's JVM-wide codegen cache to the engine's
+    plan working set: a second pass over a fixed list of deterministic
+    queries compiles nothing. The list needs ~140 classes, more than
+    Spark's default cache of 100 holds, so at the default the second
+    pass compiles ~110 again. It runs in a fresh JVM: the counter is
+    JVM-wide, and the shared test session's cache already holds (and
+    evicts) the classes of every earlier test."""
+    names = [
+        "q1_pricing_summary",
+        "q5_local_supplier",
+        "q21_waiting_supplier",
+        "percentiles",
+        "sessionize",
+        "asof_join",
+        "dedup_minhash_lsh",
+        "knn_bruteforce",
+    ]
+    repo = Path(session.__file__).parent.parent
+    out = subprocess.run(
+        [sys.executable, "-c", _TWO_PASSES, sf_small, ",".join(names)],
+        cwd=repo, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    first, second = ast.literal_eval(out.stdout.strip().splitlines()[-1])
+    assert first > 100 and second == 0, (first, second)

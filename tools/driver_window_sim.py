@@ -20,8 +20,10 @@ interrupted full-registry sweep (the r07 sf1 sweep lost its 38-entry
 tail to one 20-minute query) resumes from the cut instead of
 restarting.  ``--timeout SECS`` caps each query's wall clock: the
 compare runs in a worker thread under a per-query Spark job group that
-is cancelled on expiry (skip-and-record beats stall; a timed-out entry
-is recorded as ``timeout``, not a value mismatch).
+is cancelled on expiry, with every job it starts later (skip-and-record
+beats stall; a timed-out entry is recorded as ``timeout``, not a value
+mismatch, with ``active_jobs``: the jobs of its group still running
+once the cancel has unwound).
 
 Exit 0 iff every compared query matches, 2 on a bad command line
 (before any Spark session starts). Queries without an oracle
@@ -112,13 +114,11 @@ def main(argv: list[str] | None = None) -> int:
     fails: list[str] = []
     t0 = time.time()
 
-    def record(name: str, status: str, secs: float, err: str = "") -> None:
+    def record(name: str, status: str, secs: float, extra: dict | None = None) -> None:
         if not log_path:
             return
         with open(log_path, "a") as fh:
-            row = {"name": name, "status": status, "secs": round(secs, 1)}
-            if err:
-                row["err"] = err[:300]
+            row = {"name": name, "status": status, "secs": round(secs, 1), **(extra or {})}
             fh.write(json.dumps(row) + "\n")
 
     for i, name in enumerate(names, 1):
@@ -161,7 +161,10 @@ def main(argv: list[str] | None = None) -> int:
             worker.start()
             worker.join(timeout_s)
             if worker.is_alive():
-                sc.cancelJobGroup(name)  # stops the Spark half
+                # stops the Spark half: the running jobs, and those the
+                # chain would start after the cancel (a cancel between
+                # two jobs would otherwise miss every later one)
+                sc._jsc.sc().cancelJobGroupAndFutureJobs(name)
                 for con in live_con:  # stops the DuckDB half (zombie cores)
                     try:
                         con.interrupt()
@@ -171,17 +174,25 @@ def main(argv: list[str] | None = None) -> int:
                 outcome.setdefault("status", "timeout")
                 if worker.is_alive():
                     print(f"{i:3d} {name}: TIMEOUT (worker still unwinding)")
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                tracker = sc.statusTracker()
+                active = set(tracker.getActiveJobsIds()) & set(tracker.getJobIdsForGroup(name))
+                outcome["active_jobs"] = len(active)
         secs = time.time() - t
         status = outcome.get("status", "timeout")
         if status == "ok":
             print(f"{i:3d} {name}: OK ({secs:.1f}s)", flush=True)
         elif status == "timeout":
             fails.append(name)
-            print(f"{i:3d} {name}: TIMEOUT after {secs:.0f}s — cancelled", flush=True)
+            print(
+                f"{i:3d} {name}: TIMEOUT after {secs:.0f}s — cancelled, "
+                f"{outcome.get('active_jobs', 0)} jobs still active",
+                flush=True,
+            )
         else:
             fails.append(name)
             print(f"{i:3d} {name}: FAIL {outcome.get('err', '')}", flush=True)
-        record(name, status, secs, outcome.get("err", ""))
+        record(name, status, secs, {k: v for k, v in outcome.items() if k != "status"})
     # recorded-but-skipped reds from a resumed log count too: the exit
     # code judges the LOG's final state, not just this invocation's
     logged_red = sorted(
